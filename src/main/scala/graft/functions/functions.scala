@@ -86,6 +86,13 @@ package object functions {
   def long_gram_matrix(vec: Column, d: Int): Column =
     Bridge.column(LongGramMatrix(Bridge.expression(vec), d).toAggregateExpression())
 
+  /** Binary-column classification of STRING columns in one aggregate
+    * ([[BinaryColumnBits]]): the ordinals of the columns whose non-null
+    * values are all `"0"`, `"1"` or `""`, as `array<int>` — one N-bit
+    * buffer instead of N conditional aggregates. */
+  def binary_column_bits(cols: Seq[Column]): Column =
+    Bridge.column(BinaryColumnBits(cols.map(Bridge.expression)).toAggregateExpression())
+
   // --- vectors
   /** Exact integer dot product over micro-unit vectors ([[LongVectorDot]]). */
   def long_dot(a: Column, b: Column): Column =

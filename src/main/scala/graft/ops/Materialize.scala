@@ -67,8 +67,10 @@ object Materialize {
   def carried(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val mode = spark.conf.get("spark.graft.loop.materialize",
-      if (sc.isLocal) "local" else "reliable")
+    val key = "spark.graft.loop.materialize"
+    val mode = spark.conf.get(key, if (sc.isLocal) "local" else "reliable")
+    require(mode == "local" || mode == "reliable",
+      s"$key must be 'local' or 'reliable', got '$mode'")
     if (mode == "local") return df.localCheckpoint(eager = true)
     if (sc.getCheckpointDir.isEmpty) {
       // The tmpdir fallback is DRIVER/EXECUTOR-LOCAL: on a real cluster

@@ -5,41 +5,36 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.config.Constants
+import graft.functions.binary_column_bits
 
 /** Data-statistics profiling that drives `clean_rows` planning.
   *
   * The reference issues batched profiling SQL against BigQuery — ⌈N/500⌉
   * one-row COUNTIF queries for binary detection (`core/utils.py:375-435`)
   * and ⌈N/100⌉ UNION-ALL scalar-subquery stacks for false-array detection
-  * (`core/utils.py:582-698`). Here each batch is ONE single-pass
-  * `df.agg(...)` job: all per-column checks are conditional aggregates
-  * computed in the same scan (Catalyst plans partial aggregation map-side,
-  * so at 100 TB this is one read of the table per ~batchSize columns, no
-  * shuffle of row data — only 1-row partial aggregates move).
-  *
-  * Batching exists only to respect codegen/planning limits on very wide
-  * schemas (thousands of columns ⇒ thousands of aggregate expressions per
-  * job); rows are never re-read per column as in the reference's
-  * scalar-subquery fallback.
+  * (`core/utils.py:582-698`). Here binary detection is ONE job over all N
+  * columns: a single [[graft.functions.BinaryColumnBits]] aggregate whose
+  * buffer is an N-bit set, so planning and generated code do not grow with
+  * the width, and at 100 TB it is one read of the table with only N-bit
+  * partial buffers moving (Catalyst plans the partial aggregation
+  * map-side). Computational false-array detection melts batches of
+  * `batchSize` columns to (name, value) pairs, one job per batch.
   */
 object Profiler {
 
-  /** Columns whose values ⊆ {"0","1", NULL, ""} among STRING columns.
-    * Mirrors `get_binary_columns` (`core/utils.py:375-435`): only
-    * STRING-typed columns are candidates, `Connect_ID` is NOT excluded
-    * (SURVEY §2.C-5). */
-  def binaryColumns(df: DataFrame, batchSize: Int = 500): Seq[String] = {
+  /** Columns whose values ⊆ {"0","1", NULL, ""} among STRING columns, in
+    * schema order — one job however wide the table. Mirrors
+    * `get_binary_columns` (`core/utils.py:375-435`): only STRING-typed
+    * columns are candidates, `Connect_ID` is NOT excluded (SURVEY §2.C-5).
+    * Names are quoted, so dots, spaces and backticks in them are literal. */
+  def binaryColumns(df: DataFrame): Seq[String] = {
     val stringCols = df.schema.fields.filter(_.dataType == StringType).map(_.name).toSeq
     if (stringCols.isEmpty) return Seq.empty
-    stringCols.grouped(batchSize).flatMap { batch =>
-      val checks: Seq[Column] = batch.map { c =>
-        val notBinary = !(col(c) === "0" || col(c) === "1" || col(c).isNull || col(c) === "")
-        (count(when(notBinary, lit(1))) === 0).as(c)
-      }
-      val row = df.agg(checks.head, checks.tail: _*).head()
-      batch.zipWithIndex.collect { case (c, i) if row.getBoolean(i) => c }
-    }.toSeq
+    val bits = df.agg(binary_column_bits(stringCols.map(quoted))).head().getSeq[Int](0)
+    bits.map(stringCols)
   }
+
+  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   /** Name-driven false-array detection from the precomputed concept-ID
     * pairs (the reference's default path — zero data scans). Mirrors

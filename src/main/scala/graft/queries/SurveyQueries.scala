@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{BooleanType, StringType, StructField, StructType}
 
 import graft.config.Constants
 import graft.transform.{CleanColumns, CleanRows, MergeTableVersions, SensitiveTier}
@@ -22,13 +22,11 @@ object SurveyQueries {
     * compile on every re-plan before falling back to the interpreted
     * path anyway. Measured (WideCodegenProbe, in-session alternated
     * A/B at sf0.1): the 601-recode / 1231-derivation / 802-field
-    * full-outer spans fail at ANY maxFields that admits them, while the
-    * 500-expression batched AGGREGATES (profile_binary_wide) do compile
-    * and win at maxFields=1500. So each wide gate pins the ceiling its
-    * own plan shape wants: 550 admits every span that can compile and
-    * skips the provably-doomed ones; profile_binary_wide keeps 1500.
+    * full-outer spans fail at ANY maxFields that admits them. So each
+    * wide gate pins the ceiling its own plan shape wants: 550 admits
+    * every span that can compile and skips the provably-doomed ones.
     * Set without restore: plans of every non-wide gate are far below
-    * either value, and each wide gate sets its own. Chunking the wide
+    * that value, and each wide gate sets its own. Chunking the wide
     * projections (observe / lazy-toRdd barriers) was tried first and
     * measured WORSE — the 1200-field UnsafeRow write itself overflows
     * the method, so extra spans only multiplied failed compiles. */
@@ -409,27 +407,20 @@ object SurveyQueries {
   }
 
   /** Wide profiling gate: the reference's batched is-binary
-    * classification (§2.B17, ⌈N/500⌉ BigQuery round-trips there) at 1230
-    * columns — here ⌈1230/500⌉ = 3 single-pass conditional-aggregate
-    * jobs whose 1-row results cross-join back into one row. Exercises
-    * the wide-agg codegen path the WideSchemaSpec measures, under the
-    * value-level oracle. Columns are binary exactly when their generated
-    * modulus is 2 (values ⊆ {0,1} plus NULLs), which the oracle
-    * recomputes column-by-column. */
+    * classification (§2.B17, ⌈N/500⌉ BigQuery round-trips there) at 1231
+    * columns, through [[graft.profiling.Profiler.binaryColumns]] — one
+    * scan, one aggregate — reported as the one-row, per-column boolean
+    * table the value-level oracle recomputes column by column. Columns
+    * are binary exactly when their generated modulus is 2 (values ⊆
+    * {0,1} plus NULLs). */
   val profileBinaryWide: QueryDef = QueryDef(
     "profile_binary_wide",
     (s, d) => {
-      codegenCeiling(s, 1500) // the 500-expr agg batches DO compile
-      // each of the ⌈1231/500⌉ = 3 batched agg jobs re-reads the input;
-      // persist the 1231-expression derivation once (DISK_ONLY — the
-      // clean_rows_wide precedent: lineage-recoverable, no memory pin)
-      val df = graft.ops.Materialize.invariant(wideSurvey(s, d))
-      val checks = df.schema.fieldNames.toSeq.map { c =>
-        val notBinary = !(col(c) === "0" || col(c) === "1" || col(c).isNull || col(c) === "")
-        (count(when(notBinary, lit(1))) === 0).as(c)
-      }
-      checks.grouped(500).map(b => df.agg(b.head, b.tail: _*))
-        .reduce(_.crossJoin(_))
+      val df = wideSurvey(s, d)
+      val binary = graft.profiling.Profiler.binaryColumns(df).toSet
+      val names = df.columns.toSeq
+      s.createDataFrame(java.util.List.of(Row.fromSeq(names.map(binary))),
+        StructType(names.map(StructField(_, BooleanType, nullable = false))))
     },
     Some {
       def check(c: String) =
@@ -459,15 +450,13 @@ object SurveyQueries {
       |FROM s ORDER BY CAST(Connect_ID AS BIGINT)""".stripMargin))
 
   // ---- clean_rows_wide: value-level cleaning (binary recode +
-  // false-array unwrap + pass-through) at 601 columns — enough to cross
-  // BOTH wide-schema hazards (the 500-column profiling batch boundary
-  // and codegen.maxFields) while stacking three codegen walls
-  // (derivation + batched profiling + recode Project) only once each;
-  // the 1230-column single-wall case is profile_binary_wide's. clean_rows'
-  // classification is statistics-driven, so this gate exercises BOTH the
-  // batched wide profiling scan (3 × ⌈1201/500⌉ conditional-aggregate
-  // jobs inside CleanRows.classify) AND the 1201-expression recode
-  // Project — the one wide surface clean_columns_wide / profile_binary_wide
+  // false-array unwrap + pass-through) at 601 columns — wide enough to
+  // cross codegen.maxFields in both the derivation and the recode
+  // Project; the 1231-column profiling case is profile_binary_wide's.
+  // clean_rows' classification is statistics-driven, so this gate
+  // exercises BOTH the wide profiling scan (one 601-column aggregate
+  // inside CleanRows.classify) AND the 601-expression recode Project —
+  // the one wide surface clean_columns_wide / profile_binary_wide
   // didn't cover. Spark derivation, oracle source CTE, and oracle expected
   // output are generated from the same spec, so the sides cannot drift.
 
@@ -530,8 +519,8 @@ object SurveyQueries {
 
   val cleanRowsWide: QueryDef = QueryDef(
     "clean_rows_wide",
-    // CleanRows executes its input 3x (2 batched profiling scans + the
-    // recode projection); DISK_ONLY persist materializes the
+    // CleanRows executes its input twice (the binary profiling scan +
+    // the recode projection); DISK_ONLY persist materializes the
     // 601-expression derivation ONCE. persist over localCheckpoint is
     // the cluster-scale call: a lost DISK_ONLY block rebuilds from
     // lineage and nothing pins executor memory, where localCheckpoint

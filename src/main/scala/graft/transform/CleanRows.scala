@@ -29,12 +29,14 @@ object CleanRows {
   final case class Classification(
       binary: Seq[String], falseArray: Seq[String], passthrough: Seq[String])
 
-  /** Classify columns. `useReference = true` (the reference's default)
-    * detects false arrays by name from the precomputed pairs — zero extra
-    * scans; `false` runs the computational detector. */
+  /** Classify columns. Binary detection is one profiling job over every
+    * STRING column ([[Profiler.binaryColumns]]). `useReference = true`
+    * (the reference's default) detects false arrays by name from the
+    * precomputed pairs — zero extra scans; `false` runs the computational
+    * detector, one melt job per `batchSize` columns. */
   def classify(df: DataFrame, useReference: Boolean = true, batchSize: Int = 500): Classification = {
     val all = df.schema.fieldNames.toSeq
-    val binary = Profiler.binaryColumns(df, batchSize)
+    val binary = Profiler.binaryColumns(df)
     val falseArr =
       if (useReference) Profiler.falseArrayColumnsFromReference(all)
       else Profiler.falseArrayColumnsComputational(df, batchSize)

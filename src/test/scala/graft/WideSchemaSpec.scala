@@ -10,8 +10,9 @@ import graft.transform.{CleanColumns, CleanRows}
   * STRING columns (SURVEY §0). This spec drives clean_columns and the
   * profiling classifier over a 1200-column table — wide enough to cross
   * Spark's codegen field limits (spark.sql.codegen.maxFields=100 default
-  * fallback to interpreted projection) and the Profiler's 500-column
-  * batch boundary, the two wide-schema hazards called out in SURVEY §4. */
+  * fallback to interpreted projection) and the reference's 500-column
+  * profiling batch boundary, the two wide-schema hazards called out in
+  * SURVEY §4. */
 class WideSchemaSpec extends SparkSpec {
 
   private val nLoops = 300 // 300 loop pairs -> 600 cols
@@ -50,19 +51,18 @@ class WideSchemaSpec extends SparkSpec {
     assert(row.getString(0) == "0")
   }
 
-  test("profiling classifies 1200 columns in batched single-pass aggs") {
+  test("profiling classifies 1200 columns in one bitset aggregate") {
     val df = wideDf()
     val t0 = System.nanoTime()
-    val cls = CleanRows.classify(df, useReference = true, batchSize = 500)
+    val cls = CleanRows.classify(df, useReference = true)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(cls.binary.size == nBinary)
     assert(cls.falseArray.size == nFalse)
     // loop cols contain nulls+values -> not binary; they pass through
     assert(cls.passthrough.size == 1 + 2 * nLoops + nPass)
-    // regression guard on plan-size blowup, not a tight perf pin: the
-    // work is driver-side planning/codegen over ~1500 aggregate
-    // expressions, and this shared box's CPU speed swings ~3x (observed
-    // 40s idle vs 240s degraded for the identical commit)
+    // regression guard on plan-size blowup, not a tight perf pin: this
+    // shared box's CPU speed swings ~3x (observed 40s idle vs 240s
+    // degraded for the identical commit)
     assert(secs < 420.0, f"profiling too slow for a wide schema: $secs%.1fs")
   }
 
