@@ -600,19 +600,10 @@ object StreamingQueries {
             col("o_year"))
           .withColumn("op", lit("I")))
       val staged = graft.sources.TableIO.scratchDir(s, s"stream_cdc/log_$run")
-      new java.io.File(staged).mkdirs()
       val base = System.currentTimeMillis() - batches.length * 2000L
       batches.zipWithIndex.foreach { case (b, i) =>
-        val tmp = s"$staged/_tmp_$i"
-        b.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("no staged changelog file"))
-        val dst = new java.io.File(s"$staged/batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
-        dst.setLastModified(base + i * 2000L)
+        graft.sources.TableIO.stageFile(b, staged, s"batch_$i.parquet")
+        new java.io.File(s"$staged/batch_$i.parquet").setLastModified(base + i * 2000L)
       }
       val schema = batches.head.schema
       val stream = s.readStream.schema(schema).format("parquet")
@@ -679,19 +670,10 @@ object StreamingQueries {
       val batches = (0 until 3).map(i =>
         delUsers.filter(col("ub") >= i * 4 && col("ub") < (i + 1) * 4))
       val staged = graft.sources.TableIO.scratchDir(s, s"stream_erase/log_$run")
-      new java.io.File(staged).mkdirs()
       val base = System.currentTimeMillis() - batches.length * 2000L
       batches.zipWithIndex.foreach { case (b, i) =>
-        val tmp = s"$staged/_tmp_$i"
-        b.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("no staged deletion file"))
-        val dst = new java.io.File(s"$staged/batch_$i.parquet")
-        java.nio.file.Files.move(part.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        org.apache.hadoop.fs.FileUtil.fullyDelete(new java.io.File(tmp))
-        dst.setLastModified(base + i * 2000L)
+        graft.sources.TableIO.stageFile(b, staged, s"batch_$i.parquet")
+        new java.io.File(s"$staged/batch_$i.parquet").setLastModified(base + i * 2000L)
       }
       val schema = batches.head.schema
       val stream = s.readStream.schema(schema).format("parquet")
@@ -933,22 +915,9 @@ object StreamingQueries {
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 4).as("m"))
       def writePart(m: Int): String = {
-        val tmp = s"$src/.tmp$m"
-        li.filter(col("m") === m).coalesce(1)
-          .write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
         val name = f"part-$m%05d.snappy.parquet"
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$src/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+        graft.sources.TableIO.stageFile(li.filter(col("m") === m), src, name)
         name
-      }
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$src/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$src/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
       }
       def drainOnce(): Unit = {
         val q = s.readStream.format("foreign-lake")
@@ -967,14 +936,16 @@ object StreamingQueries {
         try { q.processAllAvailable(); EventStreams.recordDrain(q) }
         finally q.stop()
       }
-      writeCommit(0, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, src, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"src","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"${writePart(0)}","dataChange":true}}""",
         s"""{"add":{"path":"${writePart(1)}","dataChange":true}}"""))
       drainOnce()
-      writeCommit(1, Seq(s"""{"add":{"path":"${writePart(2)}","dataChange":true}}"""))
-      writeCommit(2, Seq(s"""{"add":{"path":"${writePart(3)}","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, src, 1,
+        Seq(s"""{"add":{"path":"${writePart(2)}","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, src, 2,
+        Seq(s"""{"add":{"path":"${writePart(3)}","dataChange":true}}"""))
       drainOnce() // resumes from the checkpointed foreign version
       drainOnce() // nothing new: must append nothing
       val snaps = graft.sources.SnapshotTable.snapshots(s, dst)
@@ -1013,23 +984,6 @@ object StreamingQueries {
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
         .select(col("k"), (col("k") % 3).as("m"), col("q"))
-      def writeFile(rel: String, df: org.apache.spark.sql.DataFrame): Unit = {
-        val tmp = s"$src/.tmp-${rel.replace('/', '_')}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        val dstP = new org.apache.hadoop.fs.Path(s"$src/$rel")
-        fs.mkdirs(dstP.getParent)
-        require(fs.rename(part, dstP))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$src/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$src/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
       def drainOnce(): Unit = {
         val q = s.readStream.format("foreign-lake")
           .option("format", "delta").option("path", src)
@@ -1048,9 +1002,9 @@ object StreamingQueries {
         try { q.processAllAvailable(); EventStreams.recordDrain(q) }
         finally q.stop()
       }
-      writeFile("p0.parquet", li.filter(col("m") === 0))
-      writeFile("p1.parquet", li.filter(col("m") === 1))
-      writeCommit(0, Seq(
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 0), src, "p0.parquet")
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 1), src, "p1.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, src, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-scdf","format":{"provider":"parquet"},"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
         """{"add":{"path":"p0.parquet","dataChange":true}}""",
@@ -1058,20 +1012,24 @@ object StreamingQueries {
       drainOnce() // derived inserts of commit 0
       // commit 1: UPDATE rewrite with explicit cdc (q+1 where q>=10000)
       val changed = li.filter(col("m") === 0 && col("q") >= 10000L)
-      writeFile("p0b.parquet", li.filter(col("m") === 0)
-        .withColumn("q", when(col("q") >= 10000L, col("q") + 1L).otherwise(col("q"))))
-      writeFile("_change_data/cdc-1.parquet",
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 0)
+        .withColumn("q", when(col("q") >= 10000L, col("q") + 1L).otherwise(col("q"))),
+        src, "p0b.parquet")
+      graft.sources.TableIO.stageFile(
         changed.withColumn("_change_type", lit("update_preimage"))
           .unionByName(changed.withColumn("q", col("q") + 1L)
-            .withColumn("_change_type", lit("update_postimage"))))
-      writeCommit(1, Seq(
+            .withColumn("_change_type", lit("update_postimage"))),
+        src, "_change_data/cdc-1.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, src, 1, Seq(
         """{"remove":{"path":"p0.parquet","dataChange":true}}""",
         """{"add":{"path":"p0b.parquet","dataChange":true}}""",
         """{"cdc":{"path":"_change_data/cdc-1.parquet","dataChange":false}}"""))
       // commit 2: append; commit 3: whole-file delete (p1 not vacuumed)
-      writeFile("p2.parquet", li.filter(col("m") === 2))
-      writeCommit(2, Seq("""{"add":{"path":"p2.parquet","dataChange":true}}"""))
-      writeCommit(3, Seq("""{"remove":{"path":"p1.parquet","dataChange":true}}"""))
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 2), src, "p2.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, src, 2,
+        Seq("""{"add":{"path":"p2.parquet","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, src, 3,
+        Seq("""{"remove":{"path":"p1.parquet","dataChange":true}}"""))
       val before = graft.sources.SnapshotTable.snapshots(s, dst).size
       drainOnce() // resumes from the checkpointed version, pulls (0,3]
       drainOnce() // nothing new: must append nothing

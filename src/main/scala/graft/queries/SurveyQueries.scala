@@ -2889,19 +2889,12 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 3)
       val (p0, p1, p2) = (pf(0)._1, pf(1)._1, pf(2)._1)
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
-      writeCommit(0, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t1","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
         s"""{"add":{"path":"$p1","dataChange":true}}"""))
-      writeCommit(1, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 1, Seq(
         s"""{"remove":{"path":"$p0","dataChange":true}}""",
         s"""{"add":{"path":"$p2","dataChange":true}}"""))
       graft.sources.DeltaCompat.readDeltaTable(s, dir)
@@ -2940,13 +2933,6 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not 12 scans
       val parts = graft.sources.TableIO.writePartFiles(li, dir, "m", 12)
         .map(_._1)
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
       (0 to 6).foreach { i =>
         val header = if (i == 0) Seq(
           """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
@@ -2955,7 +2941,7 @@ object SurveyQueries {
         val rm = if (i == 6)
           Seq(s"""{"remove":{"path":"${parts(2)}","dataChange":true}}""")
         else Nil
-        writeCommit(i.toLong, header ++ rm :+
+        graft.sources.DeltaCompat.writeCommit(fs, dir, i.toLong, header ++ rm :+
           s"""{"add":{"path":"${parts(i)}","dataChange":true}}""")
       }
       val v = graft.sources.DeltaCompat.checkpoint(s, dir)
@@ -2969,7 +2955,7 @@ object SurveyQueries {
           s"""{"remove":{"path":"${parts(0)}","dataChange":true}}""",
           s"""{"add":{"path":"${parts(2)}","dataChange":true}}""")
         else Nil
-        writeCommit(i.toLong, extra :+
+        graft.sources.DeltaCompat.writeCommit(fs, dir, i.toLong, extra :+
           s"""{"add":{"path":"${parts(i)}","dataChange":true}}""")
       }
       // live: 1..11 (part 0 removed post-checkpoint; part 2 tombstoned
@@ -3053,19 +3039,12 @@ object SurveyQueries {
       val pf = graft.sources.TableIO
         .writePartFiles(li.filter(col("m") <= 3), dir, "m", 4)
       def writePart(m: Int): String = pf(m)._1
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
       (0 to 3).foreach { i =>
         val header = if (i == 0) Seq(
           """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
           """{"metaData":{"id":"incr","format":{"provider":"parquet"}}}""")
         else Nil
-        writeCommit(i.toLong, header :+
+        graft.sources.DeltaCompat.writeCommit(fs, dir, i.toLong, header :+
           s"""{"add":{"path":"${writePart(i)}","dataChange":true}}""")
       }
       graft.sources.DeltaCompat.readAddedBetween(s, dir, 1L, 3L)
@@ -3098,20 +3077,15 @@ object SurveyQueries {
         (col("l_orderkey") % 3).as("m"))
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 3)
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
       val (p0, p1, p2) = (pf(0)._1, pf(1)._1, pf(2)._1)
-      writeCommit(0, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
         s"""{"add":{"path":"$p1","dataChange":true}}"""))
-      writeCommit(1, Seq(s"""{"add":{"path":"$p2","dataChange":true}}"""))
-      writeCommit(2, Seq(s"""{"remove":{"path":"$p0","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 1,
+        Seq(s"""{"add":{"path":"$p2","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 2,
+        Seq(s"""{"remove":{"path":"$p0","dataChange":true}}"""))
       // current state reflects the removal
       require(graft.sources.DeltaCompat.liveFiles(s, dir)
         .forall(!_.endsWith(p0)), "current read must exclude the removed slice")
@@ -3153,26 +3127,9 @@ object SurveyQueries {
         .select(col("k"), (col("k") % 3).as("m"), col("q"))
         // reused by five file derivations below — compute once (guide §5)
         .localCheckpoint()
-      def writeFile(rel: String, df: org.apache.spark.sql.DataFrame): Unit = {
-        val tmp = s"$dir/.tmp-${rel.replace('/', '_')}"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        val dst = new org.apache.hadoop.fs.Path(s"$dir/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(part, dst))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      }
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
-      writeFile("p0.parquet", li.filter(col("m") === 0))
-      writeFile("p1.parquet", li.filter(col("m") === 1))
-      writeCommit(0, Seq(
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 0), dir, "p0.parquet")
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 1), dir, "p1.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-cdf","format":{"provider":"parquet"},"configuration":{"delta.enableChangeDataFeed":"true"}}}""",
         """{"add":{"path":"p0.parquet","dataChange":true}}""",
@@ -3180,21 +3137,25 @@ object SurveyQueries {
       // commit 1: UPDATE rewrite of p0 (q -> q+1 where q >= 10000),
       // with the row-level delta recorded as explicit cdc
       val changed = li.filter(col("m") === 0 && col("q") >= 10000L)
-      writeFile("p0b.parquet", li.filter(col("m") === 0)
-        .withColumn("q", when(col("q") >= 10000L, col("q") + 1L).otherwise(col("q"))))
-      writeFile("_change_data/cdc-1.parquet",
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 0)
+        .withColumn("q", when(col("q") >= 10000L, col("q") + 1L).otherwise(col("q"))),
+        dir, "p0b.parquet")
+      graft.sources.TableIO.stageFile(
         changed.withColumn("_change_type", lit("update_preimage"))
           .unionByName(changed.withColumn("q", col("q") + 1L)
-            .withColumn("_change_type", lit("update_postimage"))))
-      writeCommit(1, Seq(
+            .withColumn("_change_type", lit("update_postimage"))),
+        dir, "_change_data/cdc-1.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 1, Seq(
         """{"remove":{"path":"p0.parquet","dataChange":true}}""",
         """{"add":{"path":"p0b.parquet","dataChange":true}}""",
         """{"cdc":{"path":"_change_data/cdc-1.parquet","dataChange":false}}"""))
       // commit 2: plain append (derived inserts)
-      writeFile("p2.parquet", li.filter(col("m") === 2))
-      writeCommit(2, Seq("""{"add":{"path":"p2.parquet","dataChange":true}}"""))
+      graft.sources.TableIO.stageFile(li.filter(col("m") === 2), dir, "p2.parquet")
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 2,
+        Seq("""{"add":{"path":"p2.parquet","dataChange":true}}"""))
       // commit 3: whole-file delete (derived deletes; p1 not vacuumed)
-      writeCommit(3, Seq("""{"remove":{"path":"p1.parquet","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 3,
+        Seq("""{"remove":{"path":"p1.parquet","dataChange":true}}"""))
       graft.sources.DeltaCompat.readChangeFeed(s, dir, -1L, 3L)
         .groupBy(col("_change_type"))
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
@@ -3241,15 +3202,11 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 2)
       val (p0, p1) = (pf(0)._1, pf(1)._1)
-      val out0 = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out0.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-dvd","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
-        s"""{"add":{"path":"$p1","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out0.close()
+        s"""{"add":{"path":"$p1","dataChange":true}}"""))
       val total = pf(0)._2 + pf(1)._2 // footer counts: no count() job
       val v1 = graft.sources.DeltaCompat.deleteWhere(s, dir, col("k") % 10L === 3L)
       require(v1 == 1L, s"first delete must commit version 1, got $v1")
@@ -3331,7 +3288,6 @@ object SurveyQueries {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
       // localCheckpoint: the aggregate is reused (part files + merge
       // sources) — compute it once, cut the lineage (guide §5)
       val li = Tables.lineitem(s, d)
@@ -3342,15 +3298,11 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 2)
       val (p0, p1) = (pf(0)._1, pf(1)._1)
-      val out0 = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out0.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-merge","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
-        s"""{"add":{"path":"$p1","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out0.close()
+        s"""{"add":{"path":"$p1","dataChange":true}}"""))
       // updates: every 7th order, amount bumped; inserts: fresh keys
       // far above the table's range, amount = synthetic
       val updates = li.filter(col("k") % 7 === 0)
@@ -3408,7 +3360,6 @@ object SurveyQueries {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
@@ -3416,15 +3367,11 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 2)
       val (p0, p1) = (pf(0)._1, pf(1)._1)
-      val out0 = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out0.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-dvc","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
-        s"""{"add":{"path":"$p1","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out0.close()
+        s"""{"add":{"path":"$p1","dataChange":true}}"""))
       val total = pf(0)._2 + pf(1)._2 // footer counts: no count() job
       require(graft.sources.DeltaCompat
         .deleteWhere(s, dir, col("k") % 10L === 3L) == 1L)
@@ -3465,7 +3412,6 @@ object SurveyQueries {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
@@ -3473,15 +3419,11 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 2)
       val (p0, p1) = (pf(0)._1, pf(1)._1)
-      val out0 = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out0.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-vac","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
-        s"""{"add":{"path":"$p1","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out0.close()
+        s"""{"add":{"path":"$p1","dataChange":true}}"""))
       // k % 5 == 3 hits both parities (k ≡ 3 and 8 mod 10), so BOTH
       // part files carry a DV and both get rewritten + reclaimed
       require(graft.sources.DeltaCompat
@@ -3532,7 +3474,6 @@ object SurveyQueries {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
       // localCheckpoint: the aggregate is reused (part files + merge
       // sources) — compute it once, cut the lineage (guide §5)
       val li = Tables.lineitem(s, d)
@@ -3543,15 +3484,11 @@ object SurveyQueries {
       // one pass over li (TableIO.writePartFiles), not a scan per part
       val pf = graft.sources.TableIO.writePartFiles(li, dir, "m", 2)
       val (p0, p1) = (pf(0)._1, pf(1)._1)
-      val out0 = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out0.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"t-res","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
-        s"""{"add":{"path":"$p1","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out0.close()
+        s"""{"add":{"path":"$p1","dataChange":true}}"""))
       // v1: DV delete; v2: a bad merge that zeroes a slice
       require(graft.sources.DeltaCompat
         .deleteWhere(s, dir, col("k") % 5L === 3L) == 1L)
@@ -3638,28 +3575,14 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
       val ic = graft.sources.IcebergCompat
-      val na = writeFile("a.parquet", orders.filter(col("o_orderkey") % 2 === 0))
-      val nb = writeFile("b.parquet", orders.filter(col("o_orderkey") % 2 === 1))
+      val na = graft.sources.TableIO.stageFile(
+        orders.filter(col("o_orderkey") % 2 === 0), dir, "data/a.parquet")
+      val nb = graft.sources.TableIO.stageFile(
+        orders.filter(col("o_orderkey") % 2 === 1), dir, "data/b.parquet")
       // a2 rewrites a with bumped prices (snapshot 102 overwrites)
-      val na2 = writeFile("a2.parquet", orders.filter(col("o_orderkey") % 2 === 0)
-        .withColumn("price_cents", col("price_cents") + 1L))
+      val na2 = graft.sources.TableIO.stageFile(orders.filter(col("o_orderkey") % 2 === 0)
+        .withColumn("price_cents", col("price_cents") + 1L), dir, "data/a2.parquet")
       val m1 = ic.writeManifest(s, dir, "m1.avro",
         Seq((1, "data/a.parquet", na), (1, "data/b.parquet", nb)))
       val ml1 = ic.writeManifestList(s, dir, "ml1.avro", Seq(m1))
@@ -3905,14 +3828,7 @@ object SurveyQueries {
       // upfront preserves every incremental-pull observation below
       val pf = graft.sources.TableIO.writePartFiles(li, src, "m", 4)
       def writePart(m: Int): String = pf(m)._1
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$src/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$src/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
-      writeCommit(0, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, src, 0, Seq(
         """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
         """{"metaData":{"id":"src","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"${writePart(0)}","dataChange":true}}""",
@@ -3922,8 +3838,10 @@ object SurveyQueries {
       graft.sources.SnapshotTable.commit(
         graft.sources.DeltaCompat.readDeltaTable(s, src), dst)
       // the foreign table advances two commits
-      writeCommit(1, Seq(s"""{"add":{"path":"${writePart(2)}","dataChange":true}}"""))
-      writeCommit(2, Seq(s"""{"add":{"path":"${writePart(3)}","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, src, 1,
+        Seq(s"""{"add":{"path":"${writePart(2)}","dataChange":true}}"""))
+      graft.sources.DeltaCompat.writeCommit(fs, src, 2,
+        Seq(s"""{"add":{"path":"${writePart(3)}","dataChange":true}}"""))
       // ONE incremental pull appends exactly the delta
       val v1 = graft.sources.DeltaCompat.latestVersion(s, src)
       require(v1 > v0, "foreign table must have advanced")
@@ -4007,33 +3925,18 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
-      def writeSlice(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
       val ic = graft.sources.IcebergCompat
-      val na = writeSlice("even_v1.parquet", li.filter(col("l_orderkey") % 2 === 0))
-      val nb = writeSlice("odd.parquet", li.filter(col("l_orderkey") % 2 === 1))
+      val na = graft.sources.TableIO.stageFile(
+        li.filter(col("l_orderkey") % 2 === 0), dir, "data/even_v1.parquet")
+      val nb = graft.sources.TableIO.stageFile(
+        li.filter(col("l_orderkey") % 2 === 1), dir, "data/odd.parquet")
       val m1 = ic.writeManifest(s, dir, "m1.avro",
         Seq((1, "data/even_v1.parquet", na), (1, "data/odd.parquet", nb)))
       val ml1 = ic.writeManifestList(s, dir, "ml1.avro", Seq(m1))
       ic.writeMetadata(s, dir, 1, Seq((101L, ml1)))
       // snapshot 2: OVERWRITE the even slice with qty bumped by 1
-      val nc = writeSlice("even_v2.parquet",
-        li.filter(col("l_orderkey") % 2 === 0)
-          .withColumn("qty_cents", col("qty_cents") + 1))
+      val nc = graft.sources.TableIO.stageFile(li.filter(col("l_orderkey") % 2 === 0)
+        .withColumn("qty_cents", col("qty_cents") + 1), dir, "data/even_v2.parquet")
       val m2 = ic.writeManifest(s, dir, "m2.avro",
         Seq((2, "data/even_v1.parquet", na), (0, "data/odd.parquet", nb),
           (1, "data/even_v2.parquet", nc)))
@@ -4068,29 +3971,14 @@ object SurveyQueries {
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 3).as("m"))
-      def writeSlice(name: String, m: Int): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        val df = li.filter(col("m") === m)
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
       val ic = graft.sources.IcebergCompat
-      val n0 = writeSlice("s0.parquet", 0)
+      def writeSlice(m: Int): Long = graft.sources.TableIO.stageFile(
+        li.filter(col("m") === m), dir, s"data/s$m.parquet")
+      val n0 = writeSlice(0)
       val m1 = ic.writeManifest(s, dir, "m1.avro", Seq((1, "data/s0.parquet", n0)))
       val ml1 = ic.writeManifestList(s, dir, "ml1.avro", Seq(m1))
-      val n1 = writeSlice("s1.parquet", 1)
-      val n2 = writeSlice("s2.parquet", 2)
+      val n1 = writeSlice(1)
+      val n2 = writeSlice(2)
       val m2 = ic.writeManifest(s, dir, "m2.avro",
         Seq((0, "data/s0.parquet", n0), (1, "data/s1.parquet", n1),
           (1, "data/s2.parquet", n2)))
@@ -4130,41 +4018,25 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
       // pinned physical row order: position p holds the (p+1)-smallest okey
-      val na = writeFile("base.parquet",
-        orders.coalesce(1).sortWithinPartitions("o_orderkey"))
+      // stageFile coalesces each frame to one file: the distinct and the
+      // bare filter below may arrive in several partitions, all must land
+      val na = graft.sources.TableIO.stageFile(
+        orders.coalesce(1).sortWithinPartitions("o_orderkey"), dir, "data/base.parquet")
       // position deletes: every 7th physical row of base.parquet
       val w = org.apache.spark.sql.expressions.Window.orderBy("o_orderkey")
       val target = s"$dir/data/base.parquet"
-      val npd = writeFile("pd.parquet",
-        orders.coalesce(1)
+      val npd = graft.sources.TableIO.stageFile(orders.coalesce(1)
           .withColumn("pos", row_number().over(w).cast("long") - 1L)
           .filter(col("pos") % 7 === 0)
-          .select(lit(target).as("file_path"), col("pos")))
+          .select(lit(target).as("file_path"), col("pos")), dir, "data/pd.parquet")
       // equality delete: the o_custkey % 97 == 0 slice, by customer
-      val ned = writeFile("ed.parquet",
-        orders.filter(col("o_custkey") % 97 === 0)
-          .select(col("o_custkey")).distinct())
+      val ned = graft.sources.TableIO.stageFile(orders.filter(col("o_custkey") % 97 === 0)
+          .select(col("o_custkey")).distinct(), dir, "data/ed.parquet")
       // seq-3 re-insert: the even-okey half of that slice, price bumped
-      val nb = writeFile("reinsert.parquet",
+      val nb = graft.sources.TableIO.stageFile(
         orders.filter(col("o_custkey") % 97 === 0 && col("o_orderkey") % 2 === 0)
-          .withColumn("price_cents", col("price_cents") + 1))
+          .withColumn("price_cents", col("price_cents") + 1), dir, "data/reinsert.parquet")
       val ic = graft.sources.IcebergCompat
       val m = ic.writeManifestEntries(s, dir, "m1.avro", Seq(
         ic.Entry(1, "data/base.parquet", na, content = 0, seq = 1L),
@@ -4217,28 +4089,12 @@ object SurveyQueries {
       fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
-      def writeFile(name: String, df: org.apache.spark.sql.DataFrame): Long = {
-        val tmp = s"$dir/.tmp-$name"
-        df.write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-          .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/data"))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$dir/data/$name")))
-        fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        // row count from the renamed file's parquet footer (driver-side
-        // metadata read) — df.count() re-ran the whole derivation
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/data/$name"),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }
       // pinned physical order per slice: position p holds the
       // (p+1)-smallest o_orderkey of that slice
-      val na = writeFile("a.parquet", orders.filter(col("o_orderkey") % 2 === 0)
-        .coalesce(1).sortWithinPartitions("o_orderkey"))
-      val nb = writeFile("b.parquet", orders.filter(col("o_orderkey") % 2 === 1)
-        .coalesce(1).sortWithinPartitions("o_orderkey"))
+      val na = graft.sources.TableIO.stageFile(orders.filter(col("o_orderkey") % 2 === 0)
+        .coalesce(1).sortWithinPartitions("o_orderkey"), dir, "data/a.parquet")
+      val nb = graft.sources.TableIO.stageFile(orders.filter(col("o_orderkey") % 2 === 1)
+        .coalesce(1).sortWithinPartitions("o_orderkey"), dir, "data/b.parquet")
       // one puffin file, one DV blob per data file: positions are pure
       // arithmetic over the slice row counts
       val dvs = graft.sources.Puffin.writeDvFile(fs,
@@ -4470,19 +4326,12 @@ object SurveyQueries {
         .filter(col("qty_cents") >= 2500L)
         .collect().map(_.getLong(0))
       val dv = graft.sources.DeletionVectors.writeSidecar(fs, dir, positions)
-      def writeCommit(id: Long, lines: Seq[String]): Unit = {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/_delta_log"))
-        val out = fs.create(new org.apache.hadoop.fs.Path(
-          f"$dir/_delta_log/$id%020d.json"), true)
-        try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
-      }
-      writeCommit(0, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0, Seq(
         """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""",
         """{"metaData":{"id":"t-dv","format":{"provider":"parquet"}}}""",
         s"""{"add":{"path":"$p0","dataChange":true}}""",
         s"""{"add":{"path":"$p1","dataChange":true}}"""))
-      writeCommit(1, Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 1, Seq(
         s"""{"add":{"path":"$p0","dataChange":true,"deletionVector":{"storageType":"${dv.storageType}","pathOrInlineDv":"${dv.pathOrInlineDv}","offset":${dv.offset.get},"sizeInBytes":${dv.sizeInBytes},"cardinality":${dv.cardinality}}}}"""))
       graft.sources.DeltaCompat.readDeltaTable(s, dir)
         .groupBy(col("m"))
@@ -4519,13 +4368,7 @@ object SurveyQueries {
         col("c_nationkey").cast("long").as("col-n8f2"),
         col("c_mktsegment").as("col-s1c7"),
         expr("cast(round(c_acctbal * 100) as bigint)").as("col-b4e9"))
-      val tmp = s"$dir/.tmp0"
-      cust.coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      require(fs.rename(part,
-        new org.apache.hadoop.fs.Path(s"$dir/part-00000.snappy.parquet")))
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+      graft.sources.TableIO.stageFile(cust, dir, "part-00000.snappy.parquet")
       def field(name: String, phys: String, id: Long, dt: DataType) =
         StructField(name, dt, nullable = true, new MetadataBuilder()
           .putLong("delta.columnMapping.id", id)
@@ -4535,14 +4378,10 @@ object SurveyQueries {
         field("mktsegment", "col-s1c7", 2L, StringType),
         field("bal_cents", "col-b4e9", 3L, LongType)))
         .json.replace("\\", "\\\\").replace("\"", "\\\"")
-      val out = fs.create(new org.apache.hadoop.fs.Path(
-        f"$dir/_delta_log/${0L}%020d.json"), true)
-      try out.write((Seq(
+      graft.sources.DeltaCompat.writeCommit(fs, dir, 0L, Seq(
         """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
         s"""{"metaData":{"id":"t-cm","format":{"provider":"parquet"},"schemaString":"$schemaJson","configuration":{"delta.columnMapping.mode":"name"}}}""",
-        """{"add":{"path":"part-00000.snappy.parquet","dataChange":true}}""")
-        .mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+        """{"add":{"path":"part-00000.snappy.parquet","dataChange":true}}"""))
       val t = graft.sources.DeltaCompat.readDeltaTable(s, dir)
       require(t.columns.toSeq == Seq("nation", "mktsegment", "bal_cents"),
         s"column mapping must surface logical names, got ${t.columns.toSeq}")

@@ -576,7 +576,6 @@ object DeltaCompat {
     val (acts, v) = loadLog(spark, dir, capReplay = false)
     require(v >= 0L, s"no commits to checkpoint at $dir")
     val state = resolvedLocal(acts)
-    val tmp = new Path(s"$dir/_delta_log/.cp-tmp")
     val hasDv = state.exists(_.dv.nonEmpty)
     val hasPv = state.exists(_.pvJson.nonEmpty)
     import org.apache.spark.sql.types._
@@ -639,32 +638,41 @@ object DeltaCompat {
     // for one file — each part is written by one task, so a 100 TB
     // table's multi-million-file state never funnels through one
     // writer): repartition to `parts` and name each part per the spec,
-    // <v>.checkpoint.<i-of-n>.parquet
-    rowsDf.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
-    val written = fs.listStatus(tmp).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(written.nonEmpty, s"checkpoint write at $tmp produced no parquet")
-    val targets =
-      if (parts == 1) Seq(new Path(f"$dir/_delta_log/$v%020d.checkpoint.parquet"))
-      else (1 to written.length).map(i => new Path(
-        f"$dir/_delta_log/$v%020d.checkpoint.$i%010d.${written.length}%010d.parquet"))
-    written.zip(targets).foreach { case (src, dst) =>
-      fs.delete(dst, false)
-      require(fs.rename(src, dst), s"rename $src -> $dst failed")
-    }
-    fs.delete(tmp, true)
-    // _last_checkpoint size from the parquet footers — driver-side
-    // metadata reads, no count() job
-    val n = targets.map { t =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(t,
-        spark.sparkContext.hadoopConfiguration)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-    val partsField = if (parts == 1) "" else s""","parts":${written.length}"""
+    // <v>.checkpoint.<i-of-n>.parquet.
+    // Not TableIO.stageFiles: re-checkpointing a version REPLACES its
+    // files, which the stager refuses. Existing files are replaced one
+    // delete+rename at a time and only after the write job succeeded,
+    // so a failed write leaves the current checkpoint readable.
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val tmp = new Path(s"$dir/_delta_log/.cp-tmp")
+    val targets = try {
+      rowsDf.repartition(parts).write.mode("overwrite").parquet(tmp.toString)
+      val written = fs.listStatus(tmp)
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      require(written.nonEmpty, s"checkpoint write at $tmp produced no parquet")
+      written.toSeq.zipWithIndex.map { case (st, i) =>
+        val dst =
+          if (parts == 1) new Path(f"$dir/_delta_log/$v%020d.checkpoint.parquet")
+          else new Path(f"$dir/_delta_log/$v%020d.checkpoint.${i + 1}%010d." +
+            f"${written.length}%010d.parquet")
+        // _last_checkpoint size from the parquet footers — no count() job
+        val rows = TableIO.footerRows(hconf, st)
+        fs.delete(dst, false)
+        require(fs.rename(st.getPath, dst), s"rename ${st.getPath} -> $dst failed")
+        dst -> rows
+      }
+    } finally fs.delete(tmp, true)
+    val n = targets.map(_._2).sum
+    val partsField = if (parts == 1) "" else s""","parts":${targets.length}"""
     val out = fs.create(new Path(s"$dir/_delta_log/_last_checkpoint"), true)
     try out.write(s"""{"version":$v,"size":$n$partsField}""".getBytes("UTF-8"))
     finally out.close()
+    // a re-checkpoint with another part count leaves the old parts
+    // behind; drop them now that the new files and pointer are in place
+    val live = targets.map(_._1.getName).toSet
+    fs.globStatus(new Path(f"$dir/_delta_log/$v%020d.checkpoint*.parquet"))
+      .filterNot(st => live(st.getPath.getName))
+      .foreach(st => fs.delete(st.getPath, false))
     v
   }
 
@@ -919,7 +927,7 @@ object DeltaCompat {
       // them as explicit cdc, the only way a DV commit's row-level delta
       // is consumable (readChangeFeed refuses DV commits without cdc)
       val dataCols = live.columns.filterNot(_.startsWith("__gm")).toSeq
-      val cdcLines = writeCdc(spark, fs, dir, next,
+      val cdcLines = writeCdc(dir, next,
         hits.select(dataCols.map(c => col(s"`$c`")): _*)
           .withColumn("_change_type", lit("delete")))
         .map(p => s"""{"cdc":{"path":"$p","dataChange":false}}""")
@@ -927,10 +935,7 @@ object DeltaCompat {
       val header =
         if (hadDv) Nil
         else Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""")
-      val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
-      try out.write(((header ++ lines ++ cdcLines).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
-      finally out.close()
+      writeCommit(fs, dir, next, header ++ lines ++ cdcLines)
       next
     } finally hits.unpersist()
   }
@@ -970,26 +975,34 @@ object DeltaCompat {
     new java.net.URI(null, null, rel, null).getRawPath
   }
 
+  /** Write commit `version` of the table at `dir`: `lines`, one action
+    * each, joined by "\n" plus a trailing newline, in UTF-8, to
+    * `_delta_log/<version>.json` (parent dirs created). The create is
+    * EXCLUSIVE: a commit file that already exists fails the call and
+    * stays byte-identical. Every writer here relies on it, as the
+    * protocol's optimistic concurrency does — two writers racing for
+    * one version cannot both land it (the guarantee is as atomic as
+    * the filesystem's create-if-absent); the loser re-reads the log.
+    * The one owner of commit-file writes. */
+  def writeCommit(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      version: Long, lines: Seq[String]): Unit = {
+    val out = fs.create(new Path(f"$dir/_delta_log/$version%020d.json"), false)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** Write `changes` (data columns + `_change_type`) as this commit's
     * `_change_data/` parquet; returns the log-relative path of every
     * part written — the caller records one `cdc` action per part
-    * (readChangeFeed unions all of a commit's cdc actions). */
-  private def writeCdc(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String, version: Long,
+    * (readChangeFeed unions all of a commit's cdc actions). File names
+    * carry a per-call UUID, as Delta writers' do: a failed attempt's
+    * orphans never collide with a retry at the same version. */
+  private def writeCdc(dir: String, version: Long,
       changes: DataFrame): Seq[String] = {
-    val tmp = s"$dir/.tmp-cdc-$version"
-    changes.write.mode("overwrite").parquet(tmp)
-    fs.mkdirs(new Path(s"$dir/_change_data"))
-    val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(parts.nonEmpty, "cdc write produced no parquet part")
-    val names = parts.zipWithIndex.map { case (p, i) =>
-      val name = f"_change_data/cdc-$version-$i%05d.parquet"
-      require(fs.rename(p, new Path(s"$dir/$name")), s"rename failed: $p")
-      name
-    }
-    fs.delete(new Path(tmp), true)
-    names.toSeq
+    val attempt = java.util.UUID.randomUUID()
+    TableIO.stageFiles(changes, dir, s"cdc-$version-$attempt") { (i, _) =>
+      f"_change_data/cdc-$version-$attempt-$i%05d.parquet"
+    }.map(_._1)
   }
 
   /** MERGE (upsert) INTO the table, copy-on-write: each `source` row
@@ -1059,20 +1072,16 @@ object DeltaCompat {
         .select(dataCols.map(c => col(s"`$c`")): _*)
       // the rewritten files' survivors plus the whole source land as
       // fresh data files
-      val tmp = s"$dir/.tmp-merge-${v + 1}"
-      survivors.unionByName(source.select(dataCols.map(c => col(s"`$c`")): _*))
-        .write.mode("overwrite").parquet(tmp)
-      val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      require(parts.nonEmpty, "merge rewrite produced no parquet part")
+      // per-attempt UUID in the names: a retry at the same version never
+      // collides with a failed attempt's orphans
       val next = v + 1
-      val addNames = parts.zipWithIndex.map { case (p, i) =>
-        val name = f"part-merge-$next-$i%05d.parquet"
-        require(fs.rename(p, new Path(s"$dir/$name")), s"rename failed: $p")
-        name
-      }
-      fs.delete(new Path(tmp), true)
-      val cdcLines = writeCdc(spark, fs, dir, next,
+      val attempt = java.util.UUID.randomUUID()
+      val addNames = TableIO.stageFiles(
+          survivors.unionByName(source.select(dataCols.map(c => col(s"`$c`")): _*)),
+          dir, s"merge-$next-$attempt") { (i, _) =>
+        f"part-merge-$next-$attempt-$i%05d.parquet"
+      }.map(_._1)
+      val cdcLines = writeCdc(dir, next,
         pre.withColumn("_change_type", lit("update_preimage"))
           .unionByName(updates.select(dataCols.map(c => col(s"`$c`")): _*)
             .withColumn("_change_type", lit("update_postimage")))
@@ -1085,10 +1094,7 @@ object DeltaCompat {
       val adds = addNames.map { n =>
         s"""{"add":{"path":"$n","dataChange":true}}"""
       }
-      val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
-      try out.write(((removes ++ adds ++ cdcLines).mkString("\n") + "\n")
-        .getBytes("UTF-8"))
-      finally out.close()
+      writeCommit(fs, dir, next, removes ++ adds ++ cdcLines)
       next
     } finally pre.unpersist()
   }
@@ -1117,28 +1123,20 @@ object DeltaCompat {
     val masked = maskedWithProvenance(spark, fs, dir,
       dvd.map { case (p, d) => (p, Some(d)) })
     val dataCols = masked.columns.filterNot(_.startsWith("__gm")).toSeq
+    // per-attempt UUID in the names, as in mergeInto
     val next = v + 1
-    val tmp = s"$dir/.tmp-optimize-$next"
-    masked.select(dataCols.map(c => col(s"`$c`")): _*)
-      .write.mode("overwrite").parquet(tmp)
-    val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(parts.nonEmpty, "materialize rewrite produced no parquet part")
-    val addNames = parts.zipWithIndex.map { case (p, i) =>
-      val name = f"part-optimize-$next-$i%05d.parquet"
-      require(fs.rename(p, new Path(s"$dir/$name")), s"rename failed: $p")
-      name
-    }
-    fs.delete(new Path(tmp), true)
+    val attempt = java.util.UUID.randomUUID()
+    val addNames = TableIO.stageFiles(masked.select(dataCols.map(c => col(s"`$c`")): _*),
+        dir, s"optimize-$next-$attempt") { (i, _) =>
+      f"part-optimize-$next-$attempt-$i%05d.parquet"
+    }.map(_._1)
     val removes = dvd.map { case (p, _) =>
       s"""{"remove":{"path":"${relativeEnc(fs, dir, p)}","dataChange":false}}"""
     }
     val adds = addNames.map { n =>
       s"""{"add":{"path":"$n","dataChange":false}}"""
     }
-    val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
-    try out.write(((removes ++ adds).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeCommit(fs, dir, next, removes ++ adds)
     next
   }
 
@@ -1192,9 +1190,7 @@ object DeltaCompat {
     require(removes.nonEmpty || adds.nonEmpty,
       s"table is already at version $toVersion's state — nothing to restore")
     val next = latest + 1
-    val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
-    try out.write(((removes ++ adds).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeCommit(fs, dir, next, removes ++ adds)
     next
   }
 
@@ -1504,9 +1500,7 @@ object DeltaCompat {
     val lines = Seq(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
       s"""{"metaData":{"id":"graft-${java.util.UUID.randomUUID()}","format":{"provider":"parquet"},"schemaString":$schemaJson,"partitionColumns":$partColsJson,"configuration":{}}}""") ++ adds
-    val out = fs.create(new Path(f"$dir/_delta_log/${0L}%020d.json"), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeCommit(fs, dir, 0L, lines)
     0L
   }
 
@@ -1575,9 +1569,7 @@ object DeltaCompat {
         }
       s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
     }
-    val out = fs.create(new Path(f"$dir/_delta_log/$next%020d.json"), false)
-    try out.write((adds.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeCommit(fs, dir, next, adds.toSeq)
     next
   }
 
@@ -1637,9 +1629,7 @@ object DeltaCompat {
       val lines = header ++
         removed.map(p => s"""{"remove":{"path":"${enc(p)}","dataChange":true}}""") ++
         added.map(p => s"""{"add":{"path":"${enc(p)}","dataChange":true}}""")
-      val out = fs.create(new Path(logDir, f"$idx%020d.json"), true)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
+      writeCommit(fs, snapshotRoot, idx.toLong, lines)
       prevDirs = dirs
     }
     ids.size

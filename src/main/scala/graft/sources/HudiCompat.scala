@@ -437,18 +437,10 @@ object HudiCompat {
     * exactly the visibility protocol. */
   def writeBaseFile(df: DataFrame, dir: String, partition: String,
       fileId: String, instant: String): Unit = {
-    val spark = df.sparkSession
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$dir/.tmp-$fileId-$instant"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"no parquet written at $tmp"))
-    fs.mkdirs(new Path(s"$dir/$partition"))
-    val dst = new Path(s"$dir/$partition/${fileId}_0-0-0_$instant.parquet")
-    fs.delete(dst, false)
-    require(fs.rename(part, dst), s"rename $part -> $dst failed")
-    fs.delete(new Path(tmp), true)
+    val fs = new Path(dir).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val name = s"$partition/${fileId}_0-0-0_$instant.parquet"
+    fs.delete(new Path(s"$dir/$name"), false)
+    TableIO.stageFile(df, dir, name)
   }
 
   /** Mark `instant` requested+inflight (the writer-side breadcrumbs a

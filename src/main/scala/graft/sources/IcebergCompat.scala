@@ -406,29 +406,15 @@ object IcebergCompat {
 
   /** Write `df` as parquet data files under `dir`/data, returning each
     * file's (table-relative path, true row count from its footer) —
-    * record_count is a REQUIRED trusted manifest field. */
+    * record_count is a REQUIRED trusted manifest field. Names carry a
+    * per-call UUID, so a retry never collides with the files a failed
+    * attempt left behind. */
   private def writeDataFiles(df: DataFrame, dir: String,
       tag: String): Seq[(String, Long)] = {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, dir)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tmp = s"$dir/.tmp-$tag"
-    df.write.mode("overwrite").parquet(tmp)
-    val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    require(parts.nonEmpty, "write produced no parquet files")
-    val out = parts.zipWithIndex.map { case (p, i) =>
-      val rel = f"data/$tag-$i%05d.parquet"
-      fs.mkdirs(new Path(s"$dir/data"))
-      require(fs.rename(p, new Path(s"$dir/$rel")), s"rename failed: $p")
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new Path(s"$dir/$rel"), conf))
-      val rows = try reader.getRecordCount finally reader.close()
-      (rel, rows)
+    val attempt = java.util.UUID.randomUUID()
+    TableIO.stageFiles(df, dir, s"$tag-$attempt") { (i, _) =>
+      f"data/$tag-$attempt-$i%05d.parquet"
     }
-    fs.delete(new Path(tmp), true)
-    out.toSeq
   }
 
   /** CREATE an Iceberg table at `dir` from `df` — the writer-side
@@ -725,10 +711,7 @@ object IcebergCompat {
           // without touching data, so it must be the file's true row
           // count — the parquet footer has it for the price of a
           // metadata read, no data pages touched
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(st.getPath, conf))
-          val rows = try reader.getRecordCount finally reader.close()
-          out += ((full.stripPrefix(root + "/"), rows))
+          out += ((full.stripPrefix(root + "/"), TableIO.footerRows(conf, st)))
         }
       }
       walk(new Path(snapshotRoot, dir))

@@ -497,11 +497,8 @@ object SnapshotTable {
         "— compact() to materialize them first")
     val hconf = spark.sparkContext.hadoopConfiguration
     dirs.iterator.flatMap(d =>
-      listParquetFiles(fs, new Path(rootPath, d)).iterator).map { st =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+      listParquetFiles(fs, new Path(rootPath, d)).iterator)
+      .map(TableIO.footerRows(hconf, _)).sum
   }
 
   /** PARTITION EVOLUTION append: write the delta hive-partitioned by
@@ -644,11 +641,8 @@ object SnapshotTable {
         "— run compact() to materialize them first")
     val hconf = spark.sparkContext.hadoopConfiguration
     def rowsOf(d: String): Long =
-      listParquetFiles(fs, new Path(rootPath, d)).iterator.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      listParquetFiles(fs, new Path(rootPath, d)).iterator
+        .map(TableIO.footerRows(hconf, _)).sum
     val counted = dirs.map(d => d -> rowsOf(d))
     val (small, big) = counted.partition(_._2 <= smallMaxRows)
     if (small.size < 2) return cur
@@ -1244,11 +1238,7 @@ object SnapshotTable {
     } else {
       val n = dataDirs.iterator.flatMap { d =>
         listParquetFiles(fs, new Path(rootPath, d)).iterator
-      }.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      }.map(TableIO.footerRows(hconf, _)).sum
       val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
       commit(readAt(spark, root, cur).repartition(files), root, statsCols)
     }

@@ -266,11 +266,7 @@ object TableIO {
     // cheap side of the trade at any scale.
     val n = fs.listStatus(target)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map { s =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, hconf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
+      .map(footerRows(hconf, _)).sum
     val files = math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt
     spark.read.parquet(path)
       .repartition(files).write.mode(SaveMode.Overwrite).parquet(tmp)
@@ -390,6 +386,84 @@ object TableIO {
     df.write.mode(SaveMode.Overwrite).orc(path)
   def readOrc(spark: SparkSession, path: String): DataFrame = spark.read.orc(path)
 
+  /** Row count of one parquet file from its footer: a metadata read in
+    * the calling process (one small range read, no data pages, no Spark
+    * job).
+    * Takes the `FileStatus` a listing already returned, so the caller
+    * pays no extra status call. The one owner of footer row counts. */
+  def footerRows(hconf: org.apache.hadoop.conf.Configuration,
+      status: org.apache.hadoop.fs.FileStatus): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, hconf))
+    try r.getRecordCount finally r.close()
+  }
+
+  /** STAGED WRITE, the lake layers' publish step: write `df` as parquet
+    * to the staging dir `dir/.tmp-<tag>`, then rename its parts into
+    * place and delete the staging dir (also when the call fails).
+    * Readers of a lake table see only the files a commit names, so the
+    * moved files stay invisible until the caller commits them (Delta
+    * log, Iceberg manifest, Hudi instant).
+    *
+    * Contract:
+    *  - part order: the staged parts sorted by file name, so the i-th
+    *    of n parts (0-based) lands at `dir/<name(i, n)>`; parent dirs
+    *    are created;
+    *  - an existing target fails the call before any part moves, with
+    *    both paths named, and the existing file is left untouched (a
+    *    failed rename is a `require` naming both paths too);
+    *  - returns each target's name and footer row count, in part order
+    *    — no count() job.
+    * A write that may be retried at the same names (a failed commit
+    * leaves its published files behind) puts a per-attempt token in
+    * them, as the Delta and Iceberg writers do.
+    * The single-file form is [[stageFile]]. */
+  def stageFiles(df: DataFrame, dir: String, tag: String)(
+      name: (Int, Int) => String): IndexedSeq[(String, Long)] = {
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp-$tag")
+    val fs = tmp.getFileSystem(hconf)
+    try {
+      df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val parts = fs.listStatus(tmp)
+        .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
+      require(parts.nonEmpty, s"staged write at $tmp produced no parquet part")
+      publish(fs, hconf, dir,
+        parts.toIndexedSeq.zipWithIndex.map { case (st, i) => st -> name(i, parts.length) })
+    } finally fs.delete(tmp, true)
+  }
+
+  /** [[stageFiles]] for exactly one file: coalesces `df` to one
+    * partition, so every row lands in `dir/<name>` (a parallel write
+    * can never leave parts behind), and returns its footer row count.
+    * Same contract: an existing target fails the call. */
+  def stageFile(df: DataFrame, dir: String, name: String): Long =
+    stageFiles(df.coalesce(1), dir, name.replace('/', '_')) { (_, n) =>
+      require(n == 1, s"single-file stage of $name wrote $n parts")
+      name
+    }.head._2
+
+  /** The rename-and-count tail shared by [[stageFiles]] and
+    * [[writePartFiles]]: every target is checked absent before the
+    * first rename, then each staged file's footer is counted from its
+    * listed status and the file moves to `dir/<name>`. */
+  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+      hconf: org.apache.hadoop.conf.Configuration, dir: String,
+      moves: IndexedSeq[(org.apache.hadoop.fs.FileStatus, String)])
+      : IndexedSeq[(String, Long)] = {
+    val targets = moves.map { case (st, name) =>
+      val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
+      require(!fs.exists(dst), s"cannot move ${st.getPath} -> $dst: target exists")
+      (st, name, dst)
+    }
+    targets.map { case (st, name, dst) =>
+      val rows = footerRows(hconf, st)
+      fs.mkdirs(dst.getParent)
+      require(fs.rename(st.getPath, dst), s"rename ${st.getPath} -> $dst failed")
+      (name, rows)
+    }
+  }
+
   /** One-pass scratch-fixture writer: one parquet data file per value of
     * `partCol` (an integer column valued 0 until nParts), the layout the
     * lake-interop gates previously produced with a per-part
@@ -401,18 +475,18 @@ object TableIO {
     * `partCol` included — stays in the data files via a duplicated
     * partition key. `sortCols` pins the physical row order within each
     * file (for position-addressed fixtures: deletion vectors / Iceberg
-    * position deletes). Files land as `dir/<namer(m)>`. Returns
-    * (fileName, rowCount) indexed by part value — counts come from the
-    * parquet footers (driver-side metadata read), so callers needing
-    * them pay no count() job. */
+    * position deletes). Files land as `dir/<namer(m)>` through
+    * [[stageFiles]]' rename-and-count tail (an existing target fails).
+    * Returns (fileName, rowCount) indexed by part value — footer
+    * counts, so callers needing them pay no count() job. */
   def writePartFiles(df: DataFrame, dir: String, partCol: String, nParts: Int,
       sortCols: Seq[String] = Nil,
       namer: Int => String = m => f"part-$m%05d.snappy.parquet")
       : IndexedSeq[(String, Long)] = {
     require(nParts >= 1, "need nParts >= 1")
-    val spark = df.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hconf)
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp-parts")
+    val fs = tmp.getFileSystem(hconf)
     import org.apache.spark.sql.functions.col
     val wp = Iterator.from(0).map(i => s"__wp$i")
       .filterNot(df.columns.contains).next()
@@ -421,27 +495,18 @@ object TableIO {
     val ordered =
       if (sortCols.isEmpty) keyed
       else keyed.sortWithinPartitions((wp +: sortCols).map(c => col(s"`$c`")): _*)
-    val tmp = s"$dir/.tmp-parts"
-    ordered.write.partitionBy(wp).mode(SaveMode.Overwrite).parquet(tmp)
-    val out = (0 until nParts).map { m =>
-      val pdir = new org.apache.hadoop.fs.Path(s"$tmp/$wp=$m")
-      require(fs.exists(pdir),
-        s"part $m of $partCol has no rows — the fixture expects every part populated")
-      val parts = fs.listStatus(pdir).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"expected exactly one file for part $m, got ${parts.length}")
-      val name = namer(m)
-      val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      if (name.contains("/")) fs.mkdirs(dst.getParent)
-      require(fs.rename(parts.head, dst), s"rename ${parts.head} -> $dst failed")
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dst, hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val rows = try r.getRecordCount finally r.close()
-      (name, rows)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    out
+    try {
+      ordered.write.partitionBy(wp).mode(SaveMode.Overwrite).parquet(tmp.toString)
+      publish(fs, hconf, dir, (0 until nParts).map { m =>
+        val pdir = new org.apache.hadoop.fs.Path(tmp, s"$wp=$m")
+        require(fs.exists(pdir),
+          s"part $m of $partCol has no rows — the fixture expects every part populated")
+        val parts = fs.listStatus(pdir).filter(_.getPath.getName.endsWith(".parquet"))
+        require(parts.length == 1,
+          s"expected exactly one file for part $m, got ${parts.length}")
+        parts.head -> namer(m)
+      })
+    } finally fs.delete(tmp, true)
   }
 
   /** Morton (Z-order) interleave of the low `bits` bits of N ≥ 2

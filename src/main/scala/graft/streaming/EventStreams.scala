@@ -620,21 +620,15 @@ object EventStreams {
     val nLate = late
       .select(date_trunc("hour", col("ts")).as("w"), col("event_type"))
       .distinct().count()
-    val lateTmp = graft.sources.TableIO.scratchDir(spark, s"events_late_batch_$nFiles")
-    late.coalesce(1).write.mode("overwrite").parquet(lateTmp)
     val dir = new java.io.File(staged)
     val parts = dir.listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .sortBy(_.getName)
     val base = System.currentTimeMillis() - (parts.length + 2) * 2000L
     parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-    val lateFile = new java.io.File(lateTmp).listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error("late replay batch produced no parquet file"))
-    val dest = new java.io.File(dir, "zzz-late-replay.parquet")
-    java.nio.file.Files.move(lateFile.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dest.setLastModified(base + (parts.length + 1) * 2000L)
+    graft.sources.TableIO.stageFile(late, staged, "zzz-late-replay.parquet")
+    new java.io.File(dir, "zzz-late-replay.parquet")
+      .setLastModified(base + (parts.length + 1) * 2000L)
     (spark.readStream.schema(ev.schema).format("parquet")
       .option("maxFilesPerTrigger", "1").load(staged), nLate)
   }

@@ -258,4 +258,130 @@ class DeltaCompatSpec extends SparkSpec {
       assert(DeltaCompat.liveFiles(spark, dir).map(_.split('/').last) == Seq("a.parquet"))
     } finally spark.conf.unset(key)
   }
+
+  test("writeCommit is exclusive: a second commit of one version throws, the first stays byte-identical") {
+    val (dir, fs) = mkTable()
+    DeltaCompat.writeCommit(fs, dir, 0L, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      """{"commitInfo":{"operation":"FIRST"}}"""))
+    val path = java.nio.file.Paths.get(s"$dir/_delta_log/00000000000000000000.json")
+    val first = java.nio.file.Files.readAllBytes(path)
+    assert(new String(first, "UTF-8") ==
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""" + "\n" +
+        """{"commitInfo":{"operation":"FIRST"}}""" + "\n")
+    intercept[java.io.IOException] {
+      DeltaCompat.writeCommit(fs, dir, 0L, Seq("""{"commitInfo":{"operation":"SECOND"}}"""))
+    }
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(path), first))
+  }
+
+  test("re-checkpointing one version replaces its files, whatever the part count") {
+    val (dir, fs) = mkTable()
+    Seq("a", "b", "c").zipWithIndex.foreach { case (n, i) =>
+      writePart(dir, fs, s"$n.parquet", Seq((i.toLong, n)))
+    }
+    writeCommit(dir, fs, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}""",
+      """{"add":{"path":"b.parquet","dataChange":true}}""",
+      """{"add":{"path":"c.parquet","dataChange":true}}"""))
+    def cpFiles = fs.globStatus(new org.apache.hadoop.fs.Path(
+      s"$dir/_delta_log/*.checkpoint*.parquet")).map(_.getPath.getName).toSeq
+    assert(DeltaCompat.checkpoint(spark, dir, parts = 3) == 0L)
+    assert(cpFiles.nonEmpty && cpFiles.forall(_.startsWith(
+      "00000000000000000000.checkpoint.0")), s"multi-part names expected, got $cpFiles")
+    assert(DeltaCompat.checkpoint(spark, dir) == 0L)
+    assert(cpFiles == Seq("00000000000000000000.checkpoint.parquet"))
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_delta_log/00000000000000000000.json"), false)
+    assert(DeltaCompat.liveFiles(spark, dir).map(_.split('/').last)
+      == Seq("a.parquet", "b.parquet", "c.parquet"))
+  }
+
+  test("a checkpoint whose write job fails leaves the table readable") {
+    val (dir, fs) = failingTable()
+    Seq("a", "b").zipWithIndex.foreach { case (n, i) =>
+      writePart(dir, fs, s"$n.parquet", Seq((i.toLong, n)))
+    }
+    writeCommit(dir, fs, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}""",
+      """{"add":{"path":"b.parquet","dataChange":true}}"""))
+    assert(DeltaCompat.checkpoint(spark, dir) == 0L)
+    // the checkpoint is now the only record of the table's state
+    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_delta_log/00000000000000000000.json"), false)
+    val e = FailingFs.failingOn(_.endsWith(".parquet")) {
+      intercept[Exception](DeltaCompat.checkpoint(spark, dir))
+    }
+    assert(FailingFs.injected(e), s"got $e")
+    assert(DeltaCompat.latestVersion(spark, dir) == 0L)
+    assert(DeltaCompat.liveFiles(spark, dir).map(_.split('/').last)
+      == Seq("a.parquet", "b.parquet"))
+    assert(DeltaCompat.checkpoint(spark, dir) == 0L)
+    assert(DeltaCompat.liveFiles(spark, dir).map(_.split('/').last)
+      == Seq("a.parquet", "b.parquet"))
+  }
+
+  test("a merge retried after a failed attempt lands despite the attempt's orphan files") {
+    val (dir, fs) = failingTable()
+    writePart(dir, fs, "a.parquet", Seq((1L, "a"), (2L, "b")))
+    writeCommit(dir, fs, 0, Seq(
+      """{"metaData":{"id":"t","format":{"provider":"parquet"}}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}"""))
+    def merge() = DeltaCompat.mergeInto(spark, dir,
+      Seq((2L, "B!"), (9L, "new")).toDF("id", "v"), Seq("id"))
+    // the data files publish, then the change-data publish fails: the
+    // data files stay behind, named by no commit
+    val e = FailingFs.failingOn(_.contains("/_change_data/")) {
+      intercept[Exception](merge())
+    }
+    assert(FailingFs.injected(e), s"got $e")
+    assert(DeltaCompat.latestVersion(spark, dir) == 0L)
+    assert(merge() == 1L)
+    assert(DeltaCompat.readDeltaTable(spark, dir).as[(Long, String)].collect().toSet
+      == Set((1L, "a"), (2L, "B!"), (9L, "new")))
+  }
+
+  /** A fresh table dir on the `failfs` scheme ([[FailingFs]]). */
+  private def failingTable(): (String, org.apache.hadoop.fs.FileSystem) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    val dir = "failfs://" + java.nio.file.Files.createTempDirectory("graft-delta-fail")
+    (dir, new org.apache.hadoop.fs.Path(dir).getFileSystem(conf))
+  }
+}
+
+/** The local filesystem under the `failfs` scheme, failing every file
+  * create and rename whose target path matches the predicate set by
+  * [[FailingFs.failingOn]]: a write that dies mid-flight, as on
+  * executor loss or a full disk. */
+class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failfs:///")
+  override def getScheme: String = "failfs"
+  private def check(p: org.apache.hadoop.fs.Path): Unit =
+    if (FailingFs.failOn.get()(p.toString))
+      throw new java.io.IOException(s"injected failure at $p")
+  override protected def createOutputStreamWithMode(f: org.apache.hadoop.fs.Path,
+      append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission)
+      : java.io.OutputStream = {
+    check(f)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    check(dst)
+    super.rename(src, dst)
+  }
+}
+
+object FailingFs {
+  private val failOn =
+    new java.util.concurrent.atomic.AtomicReference[String => Boolean](_ => false)
+  def failingOn[T](pred: String => Boolean)(body: => T): T = {
+    failOn.set(pred)
+    try body finally failOn.set(_ => false)
+  }
+  /** Whether `e` or one of its causes is a failure injected here. */
+  def injected(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected failure"))
 }

@@ -395,4 +395,50 @@ class TableIOSpec extends SparkSpec {
     fs.delete(p, true)
     intercept[IllegalArgumentException] { TableIO.vacuum(spark, base) }
   }
+
+  test("stageFiles lands a multi-part frame under the given names in part order") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    // 4 slices of 10 ids each: slice i holds [10i, 10i + 10)
+    val df = spark.range(0, 40, 1, 4).toDF("id")
+    val out = TableIO.stageFiles(df, dir, "multi")((i, n) => s"sub/f-$i-of-$n.parquet")
+    assert(out.map(_._1) == (0 until 4).map(i => s"sub/f-$i-of-4.parquet"))
+    assert(out.map(_._2).sum == df.count())
+    out.zipWithIndex.foreach { case ((name, rows), i) =>
+      val ids = spark.read.parquet(s"$dir/$name").as[Long](
+        org.apache.spark.sql.Encoders.scalaLong).collect().sorted.toSeq
+      assert(ids == (10L * i until 10L * i + 10), s"part $i landed out of order")
+      assert(rows == ids.size)
+    }
+    assert(!new java.io.File(s"$dir/.tmp-multi").exists(), "staging dir left behind")
+  }
+
+  test("stageFile puts every row of a multi-partition frame in one file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    val df = spark.range(0, 30, 1, 3).toDF("id")
+    assert(df.rdd.getNumPartitions == 3)
+    val rows = TableIO.stageFile(df, dir, "data/one.parquet")
+    val files = new java.io.File(s"$dir/data").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq
+    assert(files == Seq("one.parquet"))
+    assert(rows == 30L)
+    assert(spark.read.parquet(s"$dir/data/one.parquet").count() == 30L)
+  }
+
+  test("the stager refuses an existing target, names both paths, leaves it untouched") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stage").toString
+    TableIO.stageFile(spark.range(5).toDF("id"), dir, "t.parquet")
+    val target = java.nio.file.Paths.get(s"$dir/t.parquet")
+    val before = java.nio.file.Files.readAllBytes(target)
+    val e = intercept[IllegalArgumentException] {
+      TableIO.stageFiles(spark.range(0, 100, 1, 2).toDF("id"), dir, "again") {
+        (i, _) => if (i == 0) "u.parquet" else "t.parquet"
+      }
+    }
+    assert(e.getMessage.contains(s"$dir/.tmp-again/part-"), e.getMessage)
+    assert(e.getMessage.contains(s"$dir/t.parquet"), e.getMessage)
+    assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(target), before))
+    // the refusal comes before any part moves
+    assert(!new java.io.File(s"$dir/u.parquet").exists())
+    assert(!new java.io.File(s"$dir/.tmp-again").exists())
+  }
 }
