@@ -181,10 +181,7 @@ object GovernanceQueries {
     "privacy_snapshot_erasure",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_erasure")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_erasure")
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_custkey"), col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(base, root)
@@ -605,10 +602,7 @@ object GovernanceQueries {
   val privacyErasureMor: QueryDef = QueryDef(
     "privacy_erasure_mor",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/cust_erasure_mor")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (fs, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/cust_erasure_mor")
       val base = Tables.customer(s, d).select(col("c_custkey"), col("c_name"),
         col("c_mktsegment"), col("c_acctbal"))
       graft.sources.SnapshotTable.commit(base.repartition(8), root)
@@ -785,10 +779,7 @@ object GovernanceQueries {
   val privacyRowPolicy: QueryDef = QueryDef(
     "privacy_row_policy",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "row_policy")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "row_policy")
       val base = s"$dir/customer"
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))

@@ -668,10 +668,7 @@ object RelationalQueries {
   val qJoinElimination: QueryDef = QueryDef(
     "q_join_elimination",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "join_elim")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "join_elim")
       val factP = s"$dir/fact"
       val dimP = s"$dir/dim"
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -724,10 +721,7 @@ object RelationalQueries {
   val qDistinctElimination: QueryDef = QueryDef(
     "q_distinct_elimination",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "distinct_elim")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "distinct_elim")
       val t = s"$dir/orders_u"
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
           expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))

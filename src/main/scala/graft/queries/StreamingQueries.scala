@@ -906,10 +906,7 @@ object StreamingQueries {
     "stream_foreign_sync",
     (s, d) => {
       val run = s"${graft.sources.TableIO.sessionToken(s)}_${snapRunCounter.incrementAndGet()}"
-      val base = graft.sources.TableIO.scratchDir(s, s"stream_fsync/$run")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (fs, base) = graft.sources.TableIO.freshScratchDir(s, s"stream_fsync/$run")
       val src = s"$base/src"; val dst = s"$base/dst"; val ckpt = s"$base/ckpt"
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
@@ -975,10 +972,7 @@ object StreamingQueries {
     "stream_delta_cdf",
     (s, d) => {
       val run = s"${graft.sources.TableIO.sessionToken(s)}_${snapRunCounter.incrementAndGet()}"
-      val base = graft.sources.TableIO.scratchDir(s, s"stream_cdf/$run")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (fs, base) = graft.sources.TableIO.freshScratchDir(s, s"stream_cdf/$run")
       val src = s"$base/src"; val dst = s"$base/dst"; val ckpt = s"$base/ckpt"
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))

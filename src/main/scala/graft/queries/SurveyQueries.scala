@@ -1195,10 +1195,7 @@ object SurveyQueries {
     "maintenance_snapshot",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders")
       val orders = Tables.orders(s, d).select(
         col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice").cast(money).as("o_totalprice"))
@@ -1246,10 +1243,7 @@ object SurveyQueries {
     "maintenance_snapshot_append",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_append")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_append")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -1300,10 +1294,7 @@ object SurveyQueries {
     "maintenance_snapshot_cdc",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_cdc")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_cdc")
       val v1 = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       val v2 = v1.filter(col("o_orderkey") % 7 =!= 0)
@@ -1350,10 +1341,7 @@ object SurveyQueries {
     "maintenance_snapshot_evolution",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_evolve")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_evolve")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -1398,10 +1386,7 @@ object SurveyQueries {
     "maintenance_snapshot_ivm",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_ivm")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_ivm")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_orderpriority"),
         col("o_totalprice").cast(money).as("o_totalprice"))
@@ -1446,10 +1431,7 @@ object SurveyQueries {
     "maintenance_schema_drift",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_drift")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_drift")
       val orders = Tables.orders(s, d)
       graft.sources.SnapshotTable.commit(
         orders.select(col("o_orderkey"), col("o_orderpriority"),
@@ -1483,10 +1465,7 @@ object SurveyQueries {
     "maintenance_snapshot_tag",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_tag")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_tag")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -1532,10 +1511,7 @@ object SurveyQueries {
     "maintenance_snapshot_rollback",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_rollback")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_rollback")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(orders, root)
@@ -1588,10 +1564,7 @@ object SurveyQueries {
     "maintenance_data_skipping",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_skip")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_skip")
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -1633,10 +1606,7 @@ object SurveyQueries {
     "maintenance_zorder_skipping",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_zskip")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_zskip")
       val base = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_custkey"), col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(base, root)
@@ -1947,10 +1917,7 @@ object SurveyQueries {
     "maintenance_snapshot_delete_mor",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_mor")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_mor")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(orders, root)
@@ -2006,10 +1973,7 @@ object SurveyQueries {
     "maintenance_bloom_metadata",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_bloom")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_bloom")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       // unsorted by key: repartition scrambles, making min/max useless
@@ -2049,10 +2013,7 @@ object SurveyQueries {
     "maintenance_snapshot_partition_evolution",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 4)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/events_pevo")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (fs, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/events_pevo")
       val ev = Tables.events(s, d).select(col("event_id"), col("event_type"),
         col("value").cast(money).as("value"))
       graft.sources.SnapshotTable.commit(
@@ -2094,10 +2055,8 @@ object SurveyQueries {
   val maintenanceSnapshotWap: QueryDef = QueryDef(
     "maintenance_snapshot_wap",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/cust_wap")
+      val (fs, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/cust_wap")
       val fsp = new org.apache.hadoop.fs.Path(root)
-      val fs = fsp.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(fsp, true) // idempotent re-run
       val cust = Tables.customer(s, d).select(col("c_custkey"),
         col("c_mktsegment"), col("c_acctbal"))
       graft.sources.SnapshotTable.commitAudited(cust, root,
@@ -2147,10 +2106,7 @@ object SurveyQueries {
     "pipeline_incremental_sync",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val base = graft.sources.TableIO.scratchDir(s, "snapshot/inc_sync")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (_, base) = graft.sources.TableIO.freshScratchDir(s, "snapshot/inc_sync")
       val (src, dst) = (s"$base/src", s"$base/dst")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_orderpriority"),
@@ -2202,10 +2158,7 @@ object SurveyQueries {
     "maintenance_snapshot_scd2",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_scd2")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_scd2")
       val v1 = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       val v2 = v1.filter(col("o_orderkey") % 7 =!= 0)
@@ -2251,10 +2204,7 @@ object SurveyQueries {
   val maintenanceMetadataMinmax: QueryDef = QueryDef(
     "maintenance_metadata_minmax",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_minmax")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_minmax")
       val orders = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
       val stats = Seq("o_orderkey", "o_totalprice")
@@ -2299,10 +2249,7 @@ object SurveyQueries {
     "pipeline_lakehouse",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val base = graft.sources.TableIO.scratchDir(s, "snapshot/lakehouse_e2e")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (_, base) = graft.sources.TableIO.freshScratchDir(s, "snapshot/lakehouse_e2e")
       val (root, catRoot) = (s"$base/orders", s"$base/_catalog")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
@@ -2371,10 +2318,7 @@ object SurveyQueries {
     "maintenance_catalog_txn",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val base = graft.sources.TableIO.scratchDir(s, "snapshot/cat_txn")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (_, base) = graft.sources.TableIO.freshScratchDir(s, "snapshot/cat_txn")
       val (ordRoot, custRoot, catRoot) =
         (s"$base/orders", s"$base/customer", s"$base/_catalog")
       val ord = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
@@ -2434,10 +2378,7 @@ object SurveyQueries {
   val maintenanceSnapshotNdv: QueryDef = QueryDef(
     "maintenance_snapshot_ndv",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_ndv")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_ndv")
       val orders = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
       val cols = Seq("o_custkey", "o_orderpriority")
@@ -2487,10 +2428,7 @@ object SurveyQueries {
   val maintenanceSnapshotSql: QueryDef = QueryDef(
     "maintenance_snapshot_sql",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_sql")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_sql")
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_totalprice"))
       graft.sources.SnapshotTable.commit(orders, root)
       graft.sources.SnapshotTable.deleteWhere(
@@ -2529,10 +2467,7 @@ object SurveyQueries {
     "maintenance_snapshot_upsert",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_upsert")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_upsert")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(orders, root)
@@ -2584,10 +2519,7 @@ object SurveyQueries {
     "maintenance_compact_incremental",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_csmall")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_csmall")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -2629,10 +2561,7 @@ object SurveyQueries {
     "maintenance_snapshot_concurrent",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_conc")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_conc")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       graft.sources.SnapshotTable.commit(
@@ -2680,10 +2609,7 @@ object SurveyQueries {
     "maintenance_snapshot_branch",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/orders_branch")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/orders_branch")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         col("o_totalprice").cast(money).as("o_totalprice"))
       val slice = (m: Int) => orders.filter(col("o_orderkey") % 3 === m)
@@ -2749,12 +2675,8 @@ object SurveyQueries {
   val maintenanceSnapshotClone: QueryDef = QueryDef(
     "maintenance_snapshot_clone",
     (s, d) => {
-      val src = graft.sources.TableIO.scratchDir(s, "snapshot/li_clone_src")
-      val dst = graft.sources.TableIO.scratchDir(s, "snapshot/li_clone_dst")
-      val fs = new org.apache.hadoop.fs.Path(src)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(src), true) // idempotent re-run
-      fs.delete(new org.apache.hadoop.fs.Path(dst), true)
+      val (fs, src) = graft.sources.TableIO.freshScratchDir(s, "snapshot/li_clone_src")
+      val (_, dst) = graft.sources.TableIO.freshScratchDir(s, "snapshot/li_clone_dst")
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
       val slice = (m: Int) => li.filter(col("l_orderkey") % 4 === m)
@@ -2814,10 +2736,7 @@ object SurveyQueries {
   val maintenanceSummaryRewrite: QueryDef = QueryDef(
     "maintenance_summary_rewrite",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "mv_rewrite")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "mv_rewrite")
       val base = s"$dir/base"
       val summary = s"$dir/summary"
       Tables.lineitem(s, d)
@@ -2879,10 +2798,7 @@ object SurveyQueries {
   val ingestDeltaLog: QueryDef = QueryDef(
     "ingest_delta_log",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_compat")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_compat")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 3).as("m"))
@@ -2923,10 +2839,7 @@ object SurveyQueries {
   val ingestDeltaLogCheckpointed: QueryDef = QueryDef(
     "ingest_delta_log_checkpointed",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_compat_cp")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_compat_cp")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 12).as("m"))
@@ -2984,10 +2897,7 @@ object SurveyQueries {
   val ingestHudiCow: QueryDef = QueryDef(
     "ingest_hudi_cow",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_cow")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_cow")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
       val h = graft.sources.HudiCompat
@@ -3028,10 +2938,7 @@ object SurveyQueries {
   val ingestDeltaIncremental: QueryDef = QueryDef(
     "ingest_delta_incremental",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_incr")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_incr")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 5).as("m"))
@@ -3068,10 +2975,7 @@ object SurveyQueries {
   val ingestDeltaTimeTravel: QueryDef = QueryDef(
     "ingest_delta_time_travel",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_tt")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_tt")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 3).as("m"))
@@ -3116,10 +3020,7 @@ object SurveyQueries {
   val ingestDeltaCdf: QueryDef = QueryDef(
     "ingest_delta_cdf",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_cdf")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_cdf")
       fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
@@ -3190,10 +3091,7 @@ object SurveyQueries {
   val maintenanceDeltaDvDelete: QueryDef = QueryDef(
     "maintenance_delta_dv_delete",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_dv_del")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_dv_del")
       fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
@@ -3239,10 +3137,7 @@ object SurveyQueries {
   val ingestDeltaPartitioned: QueryDef = QueryDef(
     "ingest_delta_partitioned",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_part")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_part")
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
@@ -3284,10 +3179,7 @@ object SurveyQueries {
   val maintenanceDeltaMerge: QueryDef = QueryDef(
     "maintenance_delta_merge",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_merge")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_merge")
       // localCheckpoint: the aggregate is reused (part files + merge
       // sources) — compute it once, cut the lineage (guide §5)
       val li = Tables.lineitem(s, d)
@@ -3356,10 +3248,7 @@ object SurveyQueries {
   val maintenanceDeltaDvCompact: QueryDef = QueryDef(
     "maintenance_delta_dv_compact",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_dv_compact")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_dv_compact")
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
@@ -3408,10 +3297,7 @@ object SurveyQueries {
   val maintenanceDeltaVacuum: QueryDef = QueryDef(
     "maintenance_delta_vacuum",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_vacuum")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_vacuum")
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
         .agg(sum(expr("cast(round(l_quantity * 100) as bigint)")).as("q"))
@@ -3470,10 +3356,7 @@ object SurveyQueries {
   val maintenanceDeltaRestore: QueryDef = QueryDef(
     "maintenance_delta_restore",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_restore")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_restore")
       // localCheckpoint: the aggregate is reused (part files + merge
       // sources) — compute it once, cut the lineage (guide §5)
       val li = Tables.lineitem(s, d)
@@ -3525,10 +3408,7 @@ object SurveyQueries {
   val ingestIcebergAppend: QueryDef = QueryDef(
     "ingest_iceberg_append",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_append")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_append")
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
       val ic = graft.sources.IcebergCompat
@@ -3569,10 +3449,7 @@ object SurveyQueries {
   val maintenanceIcebergExpire: QueryDef = QueryDef(
     "maintenance_iceberg_expire",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_expire")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_expire")
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
       val ic = graft.sources.IcebergCompat
@@ -3630,10 +3507,7 @@ object SurveyQueries {
   val ingestHudiMor: QueryDef = QueryDef(
     "ingest_hudi_mor",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_mor")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_mor")
       graft.sources.HudiCompat.writeProperties(s, dir, "MERGE_ON_READ", "k")
       // one row per order: the synthetic lineitem does NOT have unique
       // (orderkey, linenumber) pairs, and a Hudi record key must be
@@ -3690,10 +3564,7 @@ object SurveyQueries {
   val ingestHudiMorIncremental: QueryDef = QueryDef(
     "ingest_hudi_mor_incremental",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_mor_incr")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_mor_incr")
       graft.sources.HudiCompat.writeProperties(s, dir, "MERGE_ON_READ", "k")
       val li = Tables.lineitem(s, d)
         .groupBy(col("l_orderkey").as("k"))
@@ -3735,10 +3606,7 @@ object SurveyQueries {
   val ingestHudiIncremental: QueryDef = QueryDef(
     "ingest_hudi_incremental",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_incr")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_incr")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
       val h = graft.sources.HudiCompat
@@ -3769,10 +3637,7 @@ object SurveyQueries {
   val maintenanceHudiClean: QueryDef = QueryDef(
     "maintenance_hudi_clean",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_clean")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_clean")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
       val h = graft.sources.HudiCompat
@@ -3815,10 +3680,7 @@ object SurveyQueries {
   val pipelineForeignSync: QueryDef = QueryDef(
     "pipeline_foreign_sync",
     (s, d) => {
-      val base = graft.sources.TableIO.scratchDir(s, "foreign_sync")
-      val fs = new org.apache.hadoop.fs.Path(base)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(base), true) // idempotent re-run
+      val (fs, base) = graft.sources.TableIO.freshScratchDir(s, "foreign_sync")
       val src = s"$base/src"; val dst = s"$base/dst"
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
@@ -3872,10 +3734,7 @@ object SurveyQueries {
   val privacyRowPolicyForeign: QueryDef = QueryDef(
     "privacy_row_policy_foreign",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "hudi_rls")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "hudi_rls")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
       val h = graft.sources.HudiCompat
@@ -3919,10 +3778,7 @@ object SurveyQueries {
   val ingestIceberg: QueryDef = QueryDef(
     "ingest_iceberg",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_compat")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_compat")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"))
       val ic = graft.sources.IcebergCompat
@@ -3964,10 +3820,7 @@ object SurveyQueries {
   val ingestIcebergIncremental: QueryDef = QueryDef(
     "ingest_iceberg_incremental",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_incr")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_incr")
       val li = Tables.lineitem(s, d).select(col("l_orderkey"),
         expr("cast(round(l_quantity * 100) as bigint)").as("qty_cents"),
         (col("l_orderkey") % 3).as("m"))
@@ -4012,10 +3865,7 @@ object SurveyQueries {
   val ingestIcebergV2Deletes: QueryDef = QueryDef(
     "ingest_iceberg_v2_deletes",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_v2del")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (_, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_v2del")
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
       // pinned physical row order: position p holds the (p+1)-smallest okey
@@ -4083,10 +3933,7 @@ object SurveyQueries {
   val ingestIcebergV3Dv: QueryDef = QueryDef(
     "ingest_iceberg_v3_dv",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "iceberg_v3dv")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "iceberg_v3dv")
       val orders = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"),
         expr("cast(round(o_totalprice * 100) as bigint)").as("price_cents"))
       // pinned physical order per slice: position p holds the
@@ -4153,10 +4000,7 @@ object SurveyQueries {
     "maintenance_snapshot_uniform",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/uniform")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/uniform")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         (col("o_orderkey") % 4).as("m"),
         col("o_totalprice").cast(money).as("o_totalprice"))
@@ -4199,10 +4043,7 @@ object SurveyQueries {
     "maintenance_snapshot_uniform_iceberg",
     (s, d) => {
       val money = org.apache.spark.sql.types.DecimalType(18, 2)
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/uniform_ice")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (_, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/uniform_ice")
       val orders = Tables.orders(s, d).select(col("o_orderkey"),
         (col("o_orderkey") % 4).as("m"),
         col("o_totalprice").cast(money).as("o_totalprice"))
@@ -4242,10 +4083,7 @@ object SurveyQueries {
   val pipelineBranchExperiment: QueryDef = QueryDef(
     "pipeline_branch_experiment",
     (s, d) => {
-      val root = graft.sources.TableIO.scratchDir(s, "snapshot/docs_exp")
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(root), true) // idempotent re-run
+      val (fs, root) = graft.sources.TableIO.freshScratchDir(s, "snapshot/docs_exp")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("n_chars"))
       graft.sources.SnapshotTable.commit(
@@ -4303,10 +4141,7 @@ object SurveyQueries {
   val ingestDeltaDv: QueryDef = QueryDef(
     "ingest_delta_dv",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_dv")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_dv")
       fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
       val li = Tables.lineitem(s, d).select(
         col("l_orderkey"), col("l_linenumber"),
@@ -4358,10 +4193,7 @@ object SurveyQueries {
   val ingestDeltaColumnMapping: QueryDef = QueryDef(
     "ingest_delta_column_mapping",
     (s, d) => {
-      val dir = graft.sources.TableIO.scratchDir(s, "delta_cm")
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(dir), true) // idempotent re-run
+      val (fs, dir) = graft.sources.TableIO.freshScratchDir(s, "delta_cm")
       fs.mkdirs(new org.apache.hadoop.fs.Path(dir))
       import org.apache.spark.sql.types._
       val cust = Tables.customer(s, d).select(

@@ -3,8 +3,9 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Interop front door for the PUBLIC Delta Lake transaction-log format
   * (the `_delta_log/` JSON commit protocol, documented in the open
@@ -49,6 +50,13 @@ import org.apache.spark.sql.functions._
   *    resolution is valid for both; nested-struct mapping is refused
   *    loudly rather than half-applied).
   *
+  * ONE SCAN: every read of table data — [[readDeltaTable]] (time
+  * travel included), [[readAddedBetween]], [[readChangeFeed]] and the
+  * copy-on-write writers ([[deleteWhere]], [[mergeInto]],
+  * [[materializeDeletes]]) — goes through the private `scan`, which
+  * applies the declared schema, column mapping, partition values and
+  * deletion vectors in one place.
+  *
   * Paths in the log are RELATIVE PERCENT-ENCODED URIs per the public
   * protocol: the reader URL-decodes them (a file named `a b=c.parquet`
   * appears as `a%20b%3Dc.parquet`) and refuses absolute-URI adds
@@ -64,7 +72,8 @@ object DeltaCompat {
 
   /** One log action, parsed DRIVER-SIDE from a JSON commit line or
     * converted from a checkpoint parquet row. Only the fields this
-    * reader consumes ride as typed fields; `rawJson` keeps the whole
+    * reader consumes ride as typed fields (`pvJson` is the `add`'s or
+    * the `cdc`'s partitionValues); `rawJson` keeps the whole
     * line for protocol/metaData actions (checkpoint carry-over needs
     * their full fidelity, unknown fields included). `seq` is the
     * action's position within its commit, so same-commit reconciliation
@@ -73,7 +82,7 @@ object DeltaCompat {
       commit: Long, seq: Int,
       addPath: Option[String] = None,
       addDataChange: Option[Boolean] = None,
-      addPvJson: Option[String] = None,
+      pvJson: Option[String] = None,
       addDv: Option[DeletionVectors.Descriptor] = None,
       rmPath: Option[String] = None,
       rmDataChange: Option[Boolean] = None,
@@ -90,6 +99,8 @@ object DeltaCompat {
     * carry nothing this reader consumes (commitInfo, txn, blanks). */
   private def parseActionLine(line: String, commit: Long,
       seq: Int): Option[LogAction] = {
+    def pvOf(n: com.fasterxml.jackson.databind.JsonNode): Option[String] =
+      jsonField(n, "partitionValues").map(pvMapper.writeValueAsString)
     val t = line.trim
     if (t.isEmpty) return None
     val node = pvMapper.readTree(t)
@@ -103,8 +114,7 @@ object DeltaCompat {
         // partitionValues ride as canonical JSON (nulls preserved) —
         // the same normalized form the old DataFrame plane produced
         // via to_json(ignoreNullFields=false)
-        addPvJson = jsonField(add, "partitionValues")
-          .map(pvMapper.writeValueAsString),
+        pvJson = pvOf(add),
         addDv = jsonField(add, "deletionVector").map { dv =>
           DeletionVectors.Descriptor(
             dv.get("storageType").asText(),
@@ -121,7 +131,7 @@ object DeltaCompat {
     }
     jsonField(node, "cdc").foreach { c =>
       any = true
-      a = a.copy(cdcPath = jsonField(c, "path").map(_.asText()))
+      a = a.copy(cdcPath = jsonField(c, "path").map(_.asText()), pvJson = pvOf(c))
     }
     jsonField(node, "protocol").foreach { pr =>
       any = true
@@ -267,7 +277,7 @@ object DeltaCompat {
           }
           a = a.copy(addPath = opt(r, st, "path")(r.getString),
             addDataChange = opt(r, st, "dataChange")(r.getBoolean),
-            addPvJson = pvJson, addDv = dv)
+            pvJson = pvJson, addDv = dv)
         }
       }
       rmF.foreach { case (i, st) =>
@@ -367,7 +377,7 @@ object DeltaCompat {
     * collect; its output (the per-file state) was always driver-
     * resident anyway, because scan planning needs the file list. */
   private def loadLog(spark: SparkSession, dir: String,
-      asOf: Option[Long] = None, capReplay: Boolean = true): (Seq[LogAction], Long) = {
+      asOf: Option[Long] = None, capReplay: Boolean = true): LogSlice = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val logDir = new Path(s"$dir/_delta_log")
     require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
@@ -442,7 +452,26 @@ object DeltaCompat {
     guardLocal(actions, dir)
     val latest = (cpVersion +: jsonFiles.map(
       _.getName.stripSuffix(".json").toLong).toSeq).max
-    (actions, latest)
+    LogSlice(dir, actions, latest)
+  }
+
+  /** One loaded log slice: its actions and the latest commit version
+    * present, plus what every caller derives from them, computed once
+    * per load:
+    *  - `meta`: the latest `metaData` action's reader-relevant fields —
+    *    actions are (commit, seq)-ordered across checkpoint state and
+    *    JSON tail, so the global last metaData wins;
+    *  - `files`: the live data files — reconciled state filtered to
+    *    adds, paths URL-decoded, absolute-URI adds refused, sorted. */
+  private final case class LogSlice(dir: String, actions: Seq[LogAction],
+      version: Long) {
+    lazy val meta: Option[TableMeta] = actions.filter(_.meta.isDefined)
+      .sortBy(a => (a.commit, a.seq)).lastOption.flatMap(_.meta)
+    lazy val files: Seq[LiveFile] =
+      resolvedLocal(actions).filter(_.isAdd).map { st =>
+        LiveFile(decodePath(dir, st.path), st.dv,
+          st.pvJson.map(parsePv).getOrElse(Map.empty))
+      }.sortBy(_.path)
   }
 
   /** The reconciled per-path state of a log slice — one entry per path
@@ -455,7 +484,7 @@ object DeltaCompat {
   private def resolvedLocal(actions: Seq[LogAction]): Seq[PathState] = {
     val m = scala.collection.mutable.LinkedHashMap.empty[String, PathState]
     actions.sortBy(a => (a.commit, a.seq)).foreach { a =>
-      a.addPath.foreach(p => m(p) = PathState(p, isAdd = true, a.addDv, a.addPvJson))
+      a.addPath.foreach(p => m(p) = PathState(p, isAdd = true, a.addDv, a.pvJson))
       a.rmPath.foreach(p => m(p) = PathState(p, isAdd = false, None, None))
     }
     m.values.toSeq
@@ -464,15 +493,11 @@ object DeltaCompat {
   /** The fields of the latest `metaData` action a reader needs:
     * declared schema, column-mapping mode, partition columns. */
   private final case class TableMeta(schemaString: Option[String],
-      cmMode: String, partitionCols: Seq[String])
-
-  /** The latest `metaData` action's reader-relevant fields, when
-    * present anywhere in the log slice — actions are (commit, seq)-
-    * ordered across checkpoint state and JSON tail, so the global last
-    * metaData wins. */
-  private def latestMetaLocal(actions: Seq[LogAction]): Option[TableMeta] =
-    actions.filter(_.meta.isDefined)
-      .sortBy(a => (a.commit, a.seq)).lastOption.flatMap(_.meta)
+      cmMode: String, partitionCols: Seq[String]) {
+    /** The declared logical schema: the one parse of `schemaString`. */
+    lazy val schema: Option[StructType] =
+      schemaString.map(DataType.fromJson(_).asInstanceOf[StructType])
+  }
 
   private def decodePath(dir: String, raw: String): String = {
     // protocol: relative percent-encoded URI; absolute = external file
@@ -506,20 +531,10 @@ object DeltaCompat {
       partitionValues: Map[String, Option[String]])
 
   /** The live files with descriptors AND partition values — the full
-    * per-file state [[readDeltaTable]], [[restore]], and the
-    * partition-aware read path consume. */
+    * per-file state [[readDeltaTable]] and [[restore]] consume. */
   def liveFilesFull(spark: SparkSession, dir: String,
       asOf: Option[Long] = None): Seq[LiveFile] =
-    liveFromActions(dir, loadLog(spark, dir, asOf)._1)
-
-  /** [[liveFilesFull]] from an already-loaded log slice — callers that
-    * also need the metaData (readDeltaTable) parse the log ONCE. */
-  private def liveFromActions(dir: String,
-      acts: Seq[LogAction]): Seq[LiveFile] =
-    resolvedLocal(acts).filter(_.isAdd).map { st =>
-      LiveFile(decodePath(dir, st.path), st.dv,
-        st.pvJson.map(parsePv).getOrElse(Map.empty))
-    }.sortBy(_.path)
+    loadLog(spark, dir, asOf).files
 
   private val pvMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
@@ -540,13 +555,13 @@ object DeltaCompat {
     * applies both). */
   def liveFiles(spark: SparkSession, dir: String,
       asOf: Option[Long] = None): Seq[String] = {
-    val withDv = liveFilesWithDv(spark, dir, asOf)
-    val dvd = withDv.collect { case (p, Some(_)) => p }
-    require(dvd.isEmpty,
+    val log = loadLog(spark, dir, asOf)
+    val dvd = log.files.count(_.dv.nonEmpty)
+    require(dvd == 0,
       s"Delta table at $dir carries live deletion vectors on " +
-        s"${dvd.size} file(s) — the path-only API would resurrect " +
+        s"$dvd file(s) — the path-only API would resurrect " +
         "deleted rows; use readDeltaTable, which applies them")
-    latestMetaLocal(loadLog(spark, dir, asOf)._1).foreach { m =>
+    log.meta.foreach { m =>
       require(m.cmMode == "none",
         s"Delta table at $dir uses column mapping (mode=${m.cmMode}) — " +
           "raw file paths carry physical column names; use " +
@@ -556,7 +571,7 @@ object DeltaCompat {
           s"(${m.partitionCols.mkString(", ")}) — raw files do not carry " +
           "the partition columns; use readDeltaTable, which restores them")
     }
-    withDv.map(_._1)
+    log.files.map(_.path)
   }
 
   /** CHECKPOINT the log at its latest version — the writer-side
@@ -573,7 +588,8 @@ object DeltaCompat {
     require(parts >= 1, "need parts >= 1")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // uncapped: checkpointing IS the remediation for an over-long tail
-    val (acts, v) = loadLog(spark, dir, capReplay = false)
+    val log = loadLog(spark, dir, capReplay = false)
+    val (acts, v) = (log.actions, log.version)
     require(v >= 0L, s"no commits to checkpoint at $dir")
     val state = resolvedLocal(acts)
     val hasDv = state.exists(_.dv.nonEmpty)
@@ -679,11 +695,34 @@ object DeltaCompat {
   /** The table's declared partition columns (empty when unpartitioned)
     * — the scope probe for surfaces that cannot restore them. */
   def partitionColumns(spark: SparkSession, dir: String): Seq[String] =
-    latestMetaLocal(loadLog(spark, dir)._1).map(_.partitionCols).getOrElse(Nil)
+    loadLog(spark, dir).meta.map(_.partitionCols).getOrElse(Nil)
 
   /** Latest commit version present in the log (checkpoint-aware). */
   def latestVersion(spark: SparkSession, dir: String): Long =
-    loadLog(spark, dir)._2
+    loadLog(spark, dir).version
+
+  /** The parsed actions of the commits in `(fromV, toV]`, read from
+    * their JSON (bounded metadata, parsed driver-side, no Spark job)
+    * and protocol-guarded. Every commit of the window must still exist
+    * — one vacuumed past a checkpoint refuses by name. */
+  private def windowActions(spark: SparkSession, dir: String, fromV: Long,
+      toV: Long, what: String): (org.apache.hadoop.fs.FileSystem, Seq[LogAction]) = {
+    require(fromV < toV, s"empty commit window ($fromV, $toV]")
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val logDir = new Path(s"$dir/_delta_log")
+    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
+    val want = ((fromV + 1) to toV).map(v => v -> new Path(logDir, f"$v%020d.json"))
+    val missing = want.filterNot(w => fs.exists(w._2)).map(_._2.getName)
+    require(missing.isEmpty,
+      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
+        s"past a checkpoint?) — the $what cannot be replayed")
+    val acts = want.flatMap { case (v, p) =>
+      readTextFile(fs, p).linesIterator.zipWithIndex
+        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
+    }
+    guardLocal(acts, dir)
+    (fs, acts)
+  }
 
   /** INCREMENTAL PULL: the file paths ADDED by commits in `(fromV,
     * toV]` — the Delta-side half of a continuous foreign-lake sync
@@ -696,52 +735,39 @@ object DeltaCompat {
     * cancels out and is fine. All JSON commits in the window must
     * still exist (not vacuumed past a checkpoint). */
   def addedBetween(spark: SparkSession, dir: String,
-      fromV: Long, toV: Long): Seq[String] = {
-    require(fromV < toV, s"empty commit window ($fromV, $toV]")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(s"$dir/_delta_log")
-    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
-    val want = ((fromV + 1) to toV).map(v => f"$v%020d.json")
-    val missing = want.filterNot(n => fs.exists(new Path(logDir, n)))
-    require(missing.isEmpty,
-      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
-        "past a checkpoint?) — the incremental window cannot be replayed")
-    // bounded metadata window: parsed driver-side, no Spark job
-    val acts = want.toSeq.flatMap { n =>
-      val v = n.stripSuffix(".json").toLong
-      readTextFile(fs, new Path(logDir, n)).linesIterator.zipWithIndex
-        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
-    }
-    guardLocal(acts, dir)
+      fromV: Long, toV: Long): Seq[String] =
+    addedFilesBetween(spark, dir, fromV, toV).map(_.path)
+
+  /** [[addedBetween]]'s files with their partition values (the window
+    * attaches no deletion vectors, so none carries a mask). */
+  private def addedFilesBetween(spark: SparkSession, dir: String,
+      fromV: Long, toV: Long): Seq[LiveFile] = {
+    val (_, acts) = windowActions(spark, dir, fromV, toV, "incremental window")
     require(!acts.exists(_.addDv.nonEmpty),
       s"window ($fromV, $toV] at $dir attaches deletion vectors — " +
         "row-level deletes, not an append-only window; re-read or upsert")
+    // per path, its in-window actions in log order (None = a remove)
     val perPath = acts.flatMap(a =>
-        a.addPath.map(p => (p, true, a.commit, a.seq)).toSeq ++
-          a.rmPath.map(p => (p, false, a.commit, a.seq)).toSeq)
+        a.addPath.map(p => (p, Some(a))).toSeq ++ a.rmPath.map(p => (p, None)).toSeq)
       .groupBy(_._1)
-    perPath.foreach { case (p, events) =>
+    perPath.toSeq.flatMap { case (p, events) =>
       // a path whose FIRST in-window action is a remove targets
       // pre-window data (plain delete, or remove-then-re-add rewrite)
-      require(events.minBy(e => (e._3, e._4))._2,
+      require(events.head._2.nonEmpty,
         s"window ($fromV, $toV] at $dir removes pre-window file " +
           s"'$p' — not an append-only window; re-read or upsert")
-    }
-    perPath.toSeq.collect {
-      case (p, events) if events.maxBy(e => (e._3, e._4))._2 =>
-        val uri = new java.net.URI(p)
-        require(!uri.isAbsolute && !p.startsWith("/"),
-          s"absolute add path '$p' is out of scope")
-        s"$dir/${uri.getPath}"
-    }.sorted
+      events.last._2.map(a => LiveFile(decodePath(dir, p), None,
+        a.pvJson.map(parsePv).getOrElse(Map.empty)))
+    }.sortBy(_.path)
   }
 
-  /** Read the rows appended in `(fromV, toV]` (append-only windows). */
+  /** Read the rows appended in `(fromV, toV]` (append-only windows),
+    * against the table's current declared schema. */
   def readAddedBetween(spark: SparkSession, dir: String,
       fromV: Long, toV: Long): DataFrame = {
-    val files = addedBetween(spark, dir, fromV, toV)
+    val files = addedFilesBetween(spark, dir, fromV, toV)
     require(files.nonEmpty, s"no files added in ($fromV, $toV] at $dir")
-    TableIO.readFilesFooter(spark, files)
+    scan(spark, dir, loadLog(spark, dir).meta, files)
   }
 
   /** CHANGE DATA FEED over `(fromV, toV]` — the consumption mode that
@@ -753,47 +779,29 @@ object DeltaCompat {
     * dataChange=true` file's rows are inserts, every such `remove`'s
     * rows are deletes — exact because a dataChange commit without cdc
     * actions only ever adds or drops whole files). Emits the data
-    * columns + `_change_type` + `_commit_version`. Removed files must
-    * still exist (not vacuumed) to derive their deletes — refused by
-    * name otherwise. Deletion-vector commits require explicit cdc
-    * actions (the DV delta is not whole-file). */
+    * columns (the table's current declared schema) + `_change_type` +
+    * `_commit_version`. Removed files must still exist (not vacuumed)
+    * to derive their deletes — refused by name otherwise.
+    * Deletion-vector commits require explicit cdc actions (the DV
+    * delta is not whole-file). */
   def readChangeFeed(spark: SparkSession, dir: String,
       fromV: Long, toV: Long): DataFrame = {
-    val files = changeFilesBetween(spark, dir, fromV, toV)
+    val meta = loadLog(spark, dir).meta
+    val files = changeFiles(spark, dir, fromV, toV,
+      meta.exists(_.partitionCols.nonEmpty))
     require(files.nonEmpty, s"no data-changing commits in ($fromV, $toV] at $dir")
-    // a PARTITIONED table's files lack the partition columns — restore
-    // them on the change surface from each file's partitionValues, with
-    // the declared types (like the snapshot read path)
-    val meta = latestMetaLocal(loadLog(spark, dir)._1)
-    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
-    val logical = meta.flatMap(_.schemaString).map(ss =>
-      org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    require(partCols.isEmpty || logical.nonEmpty,
-      s"Delta table at $dir is partitioned but declares no schemaString — " +
-        "partition column types cannot be restored on the change feed")
-    // one read per (change kind, commit, partition tuple) group — cdc
-    // files carry their own _change_type column; derived groups get it
-    // as a literal
-    val parts = files
-      .groupBy(f => (f.changeType, f.version,
-        partCols.map(c => f.partitionValues.get(c).flatten)))
-      .toSeq
-      .sortBy { case ((ct, v, pv), _) =>
-        (v, ct.getOrElse(""), pv.map(_.getOrElse(" ")).mkString(""))
-      }
-      .map { case ((ct, v, pv), group) =>
-        var df = TableIO.readFilesFooter(spark, group.map(_.path))
-        partCols.zip(pv).foreach { case (c, value) =>
-          val f = logical.get(logical.get.fieldIndex(c))
-          df = df.withColumn(c,
-            value.map(s => lit(s).cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType)))
-        }
-        ct.map(c => df.withColumn("_change_type", lit(c))).getOrElse(df)
+    // one scan per (change kind, commit) — cdc files carry their own
+    // _change_type column; derived groups get it as a literal
+    files.groupBy(f => (f.changeType, f.version)).toSeq
+      .sortBy { case ((ct, v), _) => (v, ct.getOrElse("")) }
+      .map { case ((ct, v), group) =>
+        val df = scan(spark, dir, meta,
+          group.map(f => LiveFile(f.path, None, f.partitionValues)),
+          if (ct.isEmpty) Seq(StructField("_change_type", StringType)) else Nil)
+        ct.fold(df)(c => df.withColumn("_change_type", lit(c)))
           .withColumn("_commit_version", lit(v))
       }
-    parts.reduce(_.unionByName(_, allowMissingColumns = true))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
   /** One parquet file of a change-feed window: `changeType` is
@@ -801,8 +809,8 @@ object DeltaCompat {
     * from whole-file adds/removes, None for explicit `_change_data/`
     * files that carry their own `_change_type` column.
     * `partitionValues` (partitioned tables only) are the file's raw
-    * partition values — added files carry their add action's, removed
-    * files resolve theirs from the pre-commit state. */
+    * partition values — cdc and added files carry their action's,
+    * removed files resolve theirs from the pre-commit state. */
   final case class ChangeFile(path: String, changeType: Option[String],
       version: Long,
       partitionValues: Map[String, Option[String]] = Map.empty)
@@ -814,38 +822,30 @@ object DeltaCompat {
     * derive inserts and removes derive deletes (removed files must
     * still exist — refused by name when vacuumed); DV commits without
     * cdc refuse (their row-level delta is not whole-file). Partitioned
-    * tables: each derived file carries its partition values (adds from
+    * tables: each file carries its partition values (cdc and adds from
     * their action, removes from the pre-commit state), which
     * [[readChangeFeed]] restores as typed columns. */
   def changeFilesBetween(spark: SparkSession, dir: String,
-      fromV: Long, toV: Long): Seq[ChangeFile] = {
-    require(fromV < toV, s"empty commit window ($fromV, $toV]")
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new Path(s"$dir/_delta_log")
-    require(fs.exists(logDir), s"$dir has no _delta_log — not a Delta table")
-    val want = ((fromV + 1) to toV).map(v => f"$v%020d.json")
-    val missing = want.filterNot(n => fs.exists(new Path(logDir, n)))
-    require(missing.isEmpty,
-      s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
-        "past a checkpoint?) — the change window cannot be replayed")
-    // bounded metadata window: parsed driver-side, no Spark job
-    val acts = want.toSeq.flatMap { n =>
-      val v = n.stripSuffix(".json").toLong
-      readTextFile(fs, new Path(logDir, n)).linesIterator.zipWithIndex
-        .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
-    }
-    guardLocal(acts, dir)
+      fromV: Long, toV: Long): Seq[ChangeFile] =
+    changeFiles(spark, dir, fromV, toV,
+      loadLog(spark, dir).meta.exists(_.partitionCols.nonEmpty))
+
+  /** [[changeFilesBetween]] given whether the table is partitioned —
+    * evaluated only when the window removes files. */
+  private def changeFiles(spark: SparkSession, dir: String, fromV: Long,
+      toV: Long, isPartitioned: => Boolean): Seq[ChangeFile] = {
+    val (fs, acts) = windowActions(spark, dir, fromV, toV, "change window")
     // partitioned tables: removed files resolve their partition values
     // from the state BEFORE their commit (their add is outside the
     // per-commit slice) — one metadata-plane replay per remove commit,
     // only when the table is actually partitioned
-    lazy val partitioned =
-      latestMetaLocal(loadLog(spark, dir)._1).exists(_.partitionCols.nonEmpty)
+    lazy val partitioned = isPartitioned
+    def pvOf(a: LogAction) = a.pvJson.map(parsePv).getOrElse(Map.empty[String, Option[String]])
     acts.groupBy(_.commit).toSeq.sortBy(_._1).flatMap { case (v, as) =>
-      val cdc = as.flatMap(_.cdcPath)
+      val cdc = as.filter(_.cdcPath.nonEmpty)
       if (cdc.nonEmpty)
         // explicit cdc actions: the files already carry _change_type
-        cdc.map(p => ChangeFile(decodePath(dir, p), None, v))
+        cdc.map(a => ChangeFile(decodePath(dir, a.cdcPath.get), None, v, pvOf(a)))
       else {
         require(!as.exists(_.addDv.nonEmpty),
           s"commit $v at $dir attaches deletion vectors without cdc " +
@@ -853,8 +853,6 @@ object DeltaCompat {
             "whole files; the writer must record _change_data")
         val adds = as
           .filter(a => a.addPath.nonEmpty && a.addDataChange.getOrElse(true))
-          .map(a => (a.addPath.get,
-            a.addPvJson.map(parsePv).getOrElse(Map.empty[String, Option[String]])))
         val removes = as
           .filter(a => a.rmPath.nonEmpty && a.rmDataChange.getOrElse(true))
           .flatMap(_.rmPath)
@@ -867,11 +865,10 @@ object DeltaCompat {
           require(fs.exists(new Path(full)),
             s"removed file $full is vacuumed — commit $v's deletes cannot " +
               "be derived; re-read the table instead")
-          ChangeFile(full, Some("delete"), v,
-            if (partitioned) pvBefore.getOrElse(full, Map.empty) else Map.empty)
+          ChangeFile(full, Some("delete"), v, pvBefore.getOrElse(full, Map.empty))
         }
-        adds.map { case (p, pv) =>
-          ChangeFile(decodePath(dir, p), Some("insert"), v, pv)
+        adds.map { a =>
+          ChangeFile(decodePath(dir, a.addPath.get), Some("insert"), v, pvOf(a))
         } ++ rmFiles
       }
     }
@@ -891,18 +888,12 @@ object DeltaCompat {
   def deleteWhere(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (acts, v) = loadLog(spark, dir)
-    require(v >= 0L, s"no commits at $dir")
-    require(latestMetaLocal(acts).forall(m =>
-        m.cmMode == "none" && m.partitionCols.isEmpty),
-      "deleteWhere on a column-mapped or partitioned table is out of " +
-        "scope (the predicate would need physical-name / partition-" +
-        "column resolution)")
-    val withDv = liveFilesWithDv(spark, dir)
+    val log = rewritable(spark, dir, "deleteWhere")
+    val v = log.version
     // discovery runs over LIVE rows only — existing masks applied, so
     // an already-deleted row can neither re-match nor re-enter the
     // change feed
-    val live = maskedWithProvenance(spark, fs, dir, withDv)
+    val live = scan(spark, dir, log.meta, log.files, provenance = true)
     val hits = live.filter(predicate)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -910,11 +901,11 @@ object DeltaCompat {
         .collect().groupBy(_.getString(0))
         .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
       if (matched.isEmpty) return v
-      val qualifiedOf = withDv.map { case (p, d) =>
-        fs.makeQualified(new Path(p)).toString -> (p, d)
+      val qualifiedOf = log.files.map { f =>
+        fs.makeQualified(new Path(f.path)).toString -> f
       }.toMap
       val lines = matched.toSeq.sortBy(_._1).map { case (qf, positions) =>
-        val (full, oldDv) = qualifiedOf.getOrElse(qf,
+        val LiveFile(full, oldDv, _) = qualifiedOf.getOrElse(qf,
           throw new IllegalStateException(s"matched unknown file $qf"))
         val existing = oldDv.map(d => DeletionVectors.readDeleted(fs, dir, d))
           .getOrElse(Array.emptyLongArray)
@@ -926,12 +917,10 @@ object DeltaCompat {
       // CHANGE DATA FEED: the deleted rows' values are in hand — record
       // them as explicit cdc, the only way a DV commit's row-level delta
       // is consumable (readChangeFeed refuses DV commits without cdc)
-      val dataCols = live.columns.filterNot(_.startsWith("__gm")).toSeq
       val cdcLines = writeCdc(dir, next,
-        hits.select(dataCols.map(c => col(s"`$c`")): _*)
-          .withColumn("_change_type", lit("delete")))
+        hits.drop(Provenance: _*).withColumn("_change_type", lit("delete")))
         .map(p => s"""{"cdc":{"path":"$p","dataChange":false}}""")
-      val hadDv = acts.exists(_.protocol.exists(_._2.isDefined))
+      val hadDv = log.actions.exists(_.protocol.exists(_._2.isDefined))
       val header =
         if (hadDv) Nil
         else Seq("""{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}""")
@@ -940,30 +929,16 @@ object DeltaCompat {
     } finally hits.unpersist()
   }
 
-  /** The live rows of the table with rewrite provenance — every data
-    * column plus `__gm_file` (the qualified source-file URI) and
-    * `__gm_pos` (row index), deletion-vector masks APPLIED. The shared
-    * substrate of the copy-on-write writers: a rewrite needs to know
-    * which file each surviving row came from. */
-  private def maskedWithProvenance(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      withDv: Seq[(String, Option[DeletionVectors.Descriptor])]): DataFrame = {
-    require(withDv.nonEmpty, s"Delta table at $dir has no live files")
-    var df = TableIO.readFilesFooter(spark, withDv.map(_._1))
-      .withColumn("__gm_file", col("_metadata.file_path"))
-      .withColumn("__gm_pos", col("_metadata.row_index"))
-    val dvs = withDv.collect { case (p, Some(d)) => (p, d) }
-    if (dvs.nonEmpty) {
-      val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
-        DeletionVectors.readDeleted(fs, dir, d).map(pos => (qualified, pos))
-      }
-      df = df.join(broadcast(spark.createDataFrame(deleted)
-          .toDF("__dv_file", "__dv_pos")),
-        col("__gm_file") === col("__dv_file") &&
-          col("__gm_pos") === col("__dv_pos"), "left_anti")
-    }
-    df
+  /** The head log slice of a table a copy-on-write writer may rewrite:
+    * at least one commit, neither column-mapped nor partitioned (the
+    * rewrite would need physical names and the partition layout). */
+  private def rewritable(spark: SparkSession, dir: String, op: String): LogSlice = {
+    val log = loadLog(spark, dir)
+    require(log.version >= 0L, s"no commits at $dir")
+    require(log.meta.forall(m => m.cmMode == "none" && m.partitionCols.isEmpty),
+      s"$op on a column-mapped or partitioned table is out of scope " +
+        "(the rewrite would need physical-name / partition-layout resolution)")
+    log
   }
 
   /** Percent-encoded table-relative form of an absolute file path, as
@@ -1025,14 +1000,8 @@ object DeltaCompat {
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (acts, v) = loadLog(spark, dir)
-    require(v >= 0L, s"no commits at $dir")
-    require(latestMetaLocal(acts).forall(m =>
-        m.cmMode == "none" && m.partitionCols.isEmpty),
-      "mergeInto on a column-mapped or partitioned table is out of " +
-        "scope (source columns would need physical-name / partition-" +
-        "layout resolution)")
-    val withDv = liveFilesWithDv(spark, dir)
+    val log = rewritable(spark, dir, "mergeInto")
+    val v = log.version
     val keyExprs = keyCols.map(c => col(s"`$c`"))
     // ONE aggregate answers both source preconditions (empty? duplicate
     // keys?) — was an isEmpty job plus a groupBy+isEmpty job (§1.2 step
@@ -1043,8 +1012,8 @@ object DeltaCompat {
     require(srcStats.getLong(1) <= 1L,
       s"source carries duplicate keys on (${keyCols.mkString(", ")}) — " +
         "a multi-match merge is ambiguous")
-    val base = maskedWithProvenance(spark, fs, dir, withDv)
-    val dataCols = base.columns.filterNot(_.startsWith("__gm")).toSeq
+    val base = scan(spark, dir, log.meta, log.files, provenance = true)
+    val dataCols = base.columns.toSeq.filterNot(Provenance.contains)
     require(source.columns.sorted.toSeq == dataCols.sorted,
       s"source schema (${source.columns.sorted.mkString(", ")}) != table " +
         s"schema (${dataCols.sorted.mkString(", ")})")
@@ -1109,29 +1078,20 @@ object DeltaCompat {
     * carries a DV). */
   def materializeDeletes(spark: SparkSession, dir: String): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (acts, v) = loadLog(spark, dir)
-    require(v >= 0L, s"no commits at $dir")
-    require(latestMetaLocal(acts).forall(m =>
-        m.cmMode == "none" && m.partitionCols.isEmpty),
-      "materializeDeletes on a column-mapped or partitioned table is " +
-        "out of scope")
-    val withDv = liveFilesWithDv(spark, dir)
-    val dvd = withDv.collect { case (p, Some(d)) => (p, d) }
-    if (dvd.isEmpty) return v
+    val log = rewritable(spark, dir, "materializeDeletes")
+    val dvd = log.files.filter(_.dv.nonEmpty)
+    if (dvd.isEmpty) return log.version
     // mask + rewrite ONLY the DV'd files, as one job; clean files are
     // not touched (this is deletion materialization, not compaction)
-    val masked = maskedWithProvenance(spark, fs, dir,
-      dvd.map { case (p, d) => (p, Some(d)) })
-    val dataCols = masked.columns.filterNot(_.startsWith("__gm")).toSeq
+    val masked = scan(spark, dir, log.meta, dvd)
     // per-attempt UUID in the names, as in mergeInto
-    val next = v + 1
+    val next = log.version + 1
     val attempt = java.util.UUID.randomUUID()
-    val addNames = TableIO.stageFiles(masked.select(dataCols.map(c => col(s"`$c`")): _*),
-        dir, s"optimize-$next-$attempt") { (i, _) =>
+    val addNames = TableIO.stageFiles(masked, dir, s"optimize-$next-$attempt") { (i, _) =>
       f"part-optimize-$next-$attempt-$i%05d.parquet"
     }.map(_._1)
-    val removes = dvd.map { case (p, _) =>
-      s"""{"remove":{"path":"${relativeEnc(fs, dir, p)}","dataChange":false}}"""
+    val removes = dvd.map { f =>
+      s"""{"remove":{"path":"${relativeEnc(fs, dir, f.path)}","dataChange":false}}"""
     }
     val adds = addNames.map { n =>
       s"""{"add":{"path":"$n","dataChange":false}}"""
@@ -1154,12 +1114,13 @@ object DeltaCompat {
     * exactly like any other DV commit without cdc. */
   def restore(spark: SparkSession, dir: String, toVersion: Long): Long = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, latest) = loadLog(spark, dir)
+    val head = loadLog(spark, dir)
+    val latest = head.version
     require(toVersion >= 0L && toVersion < latest,
       s"restore target $toVersion must be an earlier version than the " +
         s"head $latest")
     val target = liveFilesFull(spark, dir, Some(toVersion))
-    val current = liveFilesFull(spark, dir).map(f => f.path -> f).toMap
+    val current = head.files.map(f => f.path -> f).toMap
     target.foreach { f =>
       require(fs.exists(new Path(f.path)),
         s"target file ${f.path} is vacuumed — version $toVersion cannot " +
@@ -1208,7 +1169,7 @@ object DeltaCompat {
     * table-relative paths deleted, sorted. */
   def vacuum(spark: SparkSession, dir: String, keepFrom: Long): Seq[String] = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (_, latest) = loadLog(spark, dir)
+    val latest = loadLog(spark, dir).version
     require(keepFrom >= 0L && keepFrom <= latest,
       s"keepFrom=$keepFrom outside the table's version range [0, $latest]")
     // the referenced set, metadata-plane: every kept version's live
@@ -1250,198 +1211,158 @@ object DeltaCompat {
     victims.toSeq.sorted
   }
 
-  /** Read the table's current state, or (`asOf`) a past version —
-    * deletion vectors applied, column mapping resolved, and the read
-    * schema taken from `metaData.schemaString` when the log carries one
-    * (SCHEMA EVOLUTION: a column added at version N is absent from
-    * pre-N parquet footers, so first-footer inference would drop it —
-    * reading against the declared schema surfaces it as null in old
-    * files, the Delta contract). */
+  /** Read the table's current state, or (`asOf`) a past version,
+    * through [[scan]]: declared schema, column mapping, partition
+    * values and deletion vectors all applied. */
   def readDeltaTable(spark: SparkSession, dir: String,
       asOf: Option[Long] = None): DataFrame = {
-    val (acts, _) = loadLog(spark, dir, asOf)
-    val meta = latestMetaLocal(acts)
-    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
-    val live = liveFromActions(dir, acts) // same parsed slice: one load
-    if (partCols.nonEmpty)
-      return readPartitioned(spark, dir, asOf, meta.get, live)
-    val withDv = live.map(f => (f.path, f.dv))
-    require(withDv.nonEmpty, s"Delta table at $dir has no live files" +
+    val log = loadLog(spark, dir, asOf)
+    require(log.files.nonEmpty, s"Delta table at $dir has no live files" +
       asOf.map(v => s" at version $v").getOrElse(""))
-    val declared: Option[org.apache.spark.sql.types.StructType] =
-      meta.flatMap(_.schemaString).map(ss =>
-        org.apache.spark.sql.types.DataType.fromJson(ss)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    scan(spark, dir, log.meta, log.files)
+  }
+
+  /** THE Delta scan: every reader and copy-on-write rewriter reads
+    * table data through here, given one loaded log slice (its latest
+    * `metaData` and the files to read), so each read decision lives in
+    * one place:
+    *  - SCHEMA from `metaData.schemaString` (SCHEMA EVOLUTION: a column
+    *    added at version N is absent from pre-N parquet footers and
+    *    reads as null there). Under column mapping the files carry
+    *    PHYSICAL names: they are read against the declared schema's
+    *    physical twin (each field renamed to its
+    *    `delta.columnMapping.physicalName`, valid under both `name` and
+    *    `id` modes) and renamed back to logical names last; nested
+    *    mapping refuses. Only a log that declares no schemaString falls
+    *    back to the footer of the lexicographically first file.
+    *  - PARTITION VALUES: data files do NOT carry the partition columns;
+    *    each file's `partitionValues` come back with the declared types.
+    *    Few distinct tuples (≤ 64): one scan branch per tuple with the
+    *    values as LITERAL columns, unioned — Catalyst constant-folds
+    *    filters on partition columns per branch, so a pruned branch's
+    *    scan never runs. More: ONE scan plus a broadcast join from
+    *    `_metadata.file_path` to the values (no plan blow-up, no
+    *    per-branch pruning). Column mapping plus partitioning refuses.
+    *  - DELETION VECTORS: each file's masked row indexes (their count
+    *    checked against the descriptor's cardinality) leave through ONE
+    *    anti-join on (`_metadata.file_path`, `_metadata.row_index`).
+    *    The bitmap plane is parsed driver-side (bounded per file) and
+    *    broadcast while it holds at most 4,000,000 positions; a
+    *    mass-delete table shuffles it instead.
+    * `extra` lists columns the files carry beyond the table schema
+    * (`_change_type` in `_change_data/` files), read as given. Returns
+    * the logical columns in declared order, then `extra`, then — with
+    * `provenance`, which the copy-on-write writers ask for — the
+    * [[Provenance]] columns: `__gm_file` (the qualified file URI) and
+    * `__gm_pos` (the row index). Without it, `_metadata` is read only
+    * when a mask or the partition join needs it: once referenced, the
+    * scan reads the row index and builds the struct for every row. */
+  private def scan(spark: SparkSession, dir: String, meta: Option[TableMeta],
+      files: Seq[LiveFile], extra: Seq[StructField] = Nil,
+      provenance: Boolean = false): DataFrame = {
+    require(files.nonEmpty, s"Delta scan of $dir has no files")
     val cmMode = meta.map(_.cmMode).getOrElse("none")
-    // under column mapping the files carry PHYSICAL names: read against
-    // the physical twin of the declared schema (same types/nullability,
-    // physicalName per field), then rename after the DV mask below
-    val readSchema: Option[org.apache.spark.sql.types.StructType] =
-      declared.map { st =>
-        if (cmMode == "none") st
-        else org.apache.spark.sql.types.StructType(st.fields.map { f =>
-          val key = "delta.columnMapping.physicalName"
-          require(f.metadata.contains(key),
-            s"column mapping mode=$cmMode but field '${f.name}' has no " +
-              "physicalName — malformed metaData")
-          f.copy(name = f.metadata.getString(key))
-        })
-      }
-    var df = readSchema match {
-      case Some(st) => spark.read.schema(st).parquet(withDv.map(_._1): _*)
-      case None => TableIO.readFilesFooter(spark, withDv.map(_._1))
+    val partCols = meta.map(_.partitionCols).getOrElse(Nil)
+    require(cmMode == "none" || partCols.isEmpty,
+      s"Delta table at $dir combines column mapping (mode=$cmMode) " +
+        "with partitioning — out of scope for this compat reader")
+    val logical = meta.flatMap(_.schema).getOrElse {
+      require(cmMode == "none", s"Delta table at $dir sets " +
+        s"delta.columnMapping.mode=$cmMode but its metaData carries no " +
+        "schemaString — physical columns cannot be resolved")
+      require(partCols.isEmpty, s"Delta table at $dir is partitioned but " +
+        "its metaData carries no schemaString — partition column types " +
+        "cannot be resolved")
+      val footer = org.apache.spark.sql.graftbridge.Bridge
+        .parquetFooterSchema(spark, files.map(_.path).min)
+      StructType(footer.filterNot(f => extra.exists(_.name == f.name)))
     }
-    val dvs = withDv.collect { case (p, Some(d)) => (p, d) }
+    val missing = partCols.filterNot(logical.fieldNames.contains)
+    require(missing.isEmpty, s"partition columns ${missing.mkString(", ")} " +
+      s"not in the declared schema of $dir")
+    files.foreach { f =>
+      val absent = partCols.filterNot(f.partitionValues.contains)
+      require(absent.isEmpty, s"log entry for ${f.path} lacks partition " +
+        s"values for (${absent.mkString(", ")}) — malformed log")
+    }
+    def physical(f: StructField): String =
+      if (cmMode == "none") f.name
+      else {
+        val key = "delta.columnMapping.physicalName"
+        require(f.metadata.contains(key),
+          s"column mapping mode=$cmMode but field '${f.name}' has no " +
+            "physicalName — malformed metaData")
+        require(!f.dataType.isInstanceOf[StructType],
+          s"nested column mapping (field '${f.name}') is out of scope " +
+            "for this compat reader")
+        f.metadata.getString(key)
+      }
+    val readSchema = StructType(logical.fields
+      .filterNot(f => partCols.contains(f.name))
+      .map(f => f.copy(name = physical(f))) ++ extra)
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // keyed by the same qualified URI `_metadata.file_path` renders
+    def qualified(p: String): String = fs.makeQualified(new Path(p)).toString
+    val groups = files.groupBy(f => partCols.map(f.partitionValues))
+    val dvs = files.collect { case LiveFile(p, Some(d), _) => (p, d) }
+    val withProvenance = provenance || dvs.nonEmpty || groups.size > 64
+    def read(paths: Seq[String]): DataFrame = {
+      val df = spark.read.schema(readSchema).parquet(paths: _*)
+      if (!withProvenance) df
+      else df.withColumn("__gm_file", col("_metadata.file_path"))
+        .withColumn("__gm_pos", col("_metadata.row_index"))
+    }
+    def typeOf(c: String): DataType = logical(c).dataType
+    var df =
+      if (groups.size <= 64)
+        groups.toSeq.sortBy(_._1.map(_.getOrElse("\u0000")).mkString("\u0001"))
+          .map { case (pv, gfs) =>
+            partCols.zip(pv).foldLeft(read(gfs.map(_.path))) {
+              case (b, (c, v)) => b.withColumn(c, lit(v.orNull).cast(typeOf(c)))
+            }
+          }.reduce(_.unionByName(_))
+      else {
+        val pvSchema = StructType(StructField("__pv_f", StringType) +:
+          partCols.map(c => StructField(s"__pv_$c", StringType)))
+        val pvDf = broadcast(spark.createDataFrame(files.map { f =>
+          Row.fromSeq(qualified(f.path) +: partCols.map(f.partitionValues(_).orNull))
+        }.asJava, pvSchema))
+        partCols.foldLeft(read(files.map(_.path))
+            .join(pvDf, col("__gm_file") === col("__pv_f"))) {
+          case (b, c) => b.withColumn(c, col(s"__pv_$c").cast(typeOf(c)))
+        }.drop("__pv_f" +: partCols.map(c => s"__pv_$c"): _*)
+      }
     if (dvs.nonEmpty) {
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // the bitmap plane: bounded per file (a DV masks rows of ONE
-      // parquet file), parsed driver-side from KB-scale sidecars/inline
-      // bytes; keyed by the same qualified URI `_metadata.file_path`
-      // renders so the anti-join needs no path normalization tricks
       val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
         val positions = DeletionVectors.readDeleted(fs, dir, d)
         require(positions.length.toLong == d.cardinality,
           s"DV for $p declares cardinality ${d.cardinality} but holds " +
             s"${positions.length} positions")
-        positions.map(pos => (qualified, pos))
+        val q = qualified(p)
+        positions.map(pos => (q, pos))
       }
       val delDf = spark.createDataFrame(deleted).toDF("__dv_file", "__dv_pos")
-      // broadcast the deleted-position side while it is metadata-sized;
-      // a mass-delete table (tens of millions of masked rows) shuffles
       val side =
         if (dvs.map(_._2.cardinality).sum <= 4000000L) broadcast(delDf)
         else delDf
-      val dataCols = df.columns.toSeq
-      df = df
-        .withColumn("__dv_f", col("_metadata.file_path"))
-        .withColumn("__dv_p", col("_metadata.row_index"))
-        .join(side, col("__dv_f") === col("__dv_file") &&
-          col("__dv_p") === col("__dv_pos"), "left_anti")
-        .select(dataCols.map(c => col(s"`$c`")): _*)
+      df = df.join(side, col("__gm_file") === col("__dv_file") &&
+        col("__gm_pos") === col("__dv_pos"), "left_anti")
     }
-    if (cmMode == "name" || cmMode == "id") {
-      val logical = declared.getOrElse(throw
-        new IllegalArgumentException(s"Delta table at $dir sets " +
-          s"delta.columnMapping.mode=$cmMode but its metaData carries no " +
-          "schemaString — physical columns cannot be resolved"))
-      val key = "delta.columnMapping.physicalName"
-      val renames = logical.fields.map { f =>
-        require(!f.dataType.isInstanceOf[org.apache.spark.sql.types.StructType],
-          s"nested column mapping (field '${f.name}') is out of scope " +
-            "for this compat reader")
-        col(s"`${f.metadata.getString(key)}`").as(f.name)
-      }
-      df.select(renames.toSeq: _*)
-    } else df
+    df.select(logical.fields.toSeq.map(f => col(s"`${physical(f)}`").as(f.name)) ++
+      (extra.map(_.name) ++ (if (provenance) Provenance else Nil))
+        .map(c => col(s"`$c`")): _*)
   }
 
-  /** PARTITIONED-table read: real Delta tables usually partition, and
-    * their data files do NOT carry the partition columns — the values
-    * live in each add action's `partitionValues`, restored here from
-    * the declared schema's types. Two physical shapes:
-    *  - few distinct partition tuples (≤ 64): one scan branch per
-    *    tuple with the values as LITERAL columns, unioned — Catalyst
-    *    constant-folds filters on partition columns per branch, so a
-    *    pruned branch's scan never runs (real partition pruning);
-    *  - many tuples: ONE scan of all files plus a broadcast join from
-    *    `_metadata.file_path` to the values — no plan blow-up, no
-    *    per-branch pruning (callers wanting pruned scans at huge
-    *    partition counts filter the file list first).
-    * Deletion vectors compose (provenance extracted per branch before
-    * the union); column mapping + partitioning together refuse. */
-  private def readPartitioned(spark: SparkSession, dir: String,
-      asOf: Option[Long], meta: TableMeta,
-      files: Seq[LiveFile]): DataFrame = {
-    val partCols = meta.partitionCols
-    require(meta.cmMode == "none",
-      s"Delta table at $dir combines column mapping (mode=${meta.cmMode}) " +
-        "with partitioning — out of scope for this compat reader")
-    val logical = meta.schemaString.map(ss =>
-      org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(throw new IllegalArgumentException(
-        s"Delta table at $dir is partitioned but its metaData carries " +
-          "no schemaString — partition column types cannot be resolved"))
-    val missing = partCols.filterNot(logical.fieldNames.contains)
-    require(missing.isEmpty, s"partition columns ${missing.mkString(", ")} " +
-      s"not in the declared schema of $dir")
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      logical.fields.filterNot(f => partCols.contains(f.name)))
-    require(files.nonEmpty, s"Delta table at $dir has no live files" +
-      asOf.map(v => s" at version $v").getOrElse(""))
-    files.foreach { f =>
-      val absent = partCols.filterNot(f.partitionValues.contains)
-      require(absent.isEmpty, s"add action for ${f.path} lacks partition " +
-        s"values for (${absent.mkString(", ")}) — malformed log")
-    }
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dvs = files.collect { case LiveFile(p, Some(d), _) => (p, d) }
-    def withProv(df: DataFrame): DataFrame =
-      if (dvs.isEmpty) df
-      else df.withColumn("__dv_f", col("_metadata.file_path"))
-        .withColumn("__dv_p", col("_metadata.row_index"))
-    def litFor(c: String, v: Option[String]): org.apache.spark.sql.Column = {
-      val f = logical(logical.fieldIndex(c))
-      v.map(s => lit(s).cast(f.dataType)).getOrElse(lit(null).cast(f.dataType))
-        .as(c)
-    }
-    val groups = files.groupBy(f => partCols.map(c => f.partitionValues(c)))
-    var df =
-      if (groups.size <= 64) {
-        groups.toSeq.sortBy(_._1.map(_.getOrElse("\u0000")).mkString("\u0001"))
-          .map { case (pv, gfs) =>
-            var b = withProv(
-              spark.read.schema(dataSchema).parquet(gfs.map(_.path): _*))
-            partCols.zip(pv).foreach { case (c, v) =>
-              b = b.withColumn(c, litFor(c, v))
-            }
-            b
-          }.reduce(_.unionByName(_))
-      } else {
-        val pvRows = files.map { f =>
-          org.apache.spark.sql.Row.fromSeq(
-            fs.makeQualified(new Path(f.path)).toString +:
-              partCols.map(c => f.partitionValues(c).orNull))
-        }
-        val pvSchema = org.apache.spark.sql.types.StructType(
-          org.apache.spark.sql.types.StructField("__pv_f",
-            org.apache.spark.sql.types.StringType) +:
-            partCols.map(c => org.apache.spark.sql.types.StructField(
-              s"__pv_$c", org.apache.spark.sql.types.StringType)))
-        val pvDf = broadcast(spark.createDataFrame(
-          { val l = new java.util.ArrayList[org.apache.spark.sql.Row]()
-            pvRows.foreach(l.add); l }, pvSchema))
-        var b = withProv(spark.read.schema(dataSchema)
-          .parquet(files.map(_.path): _*))
-          .withColumn("__pv_f", col("_metadata.file_path"))
-          .join(pvDf, Seq("__pv_f"))
-        partCols.foreach { c =>
-          val f = logical(logical.fieldIndex(c))
-          b = b.withColumn(c, col(s"__pv_$c").cast(f.dataType))
-        }
-        b.drop("__pv_f" +: partCols.map(c => s"__pv_$c"): _*)
-      }
-    if (dvs.nonEmpty) {
-      val deleted: Seq[(String, Long)] = dvs.flatMap { case (p, d) =>
-        val qualified = fs.makeQualified(new Path(p)).toString
-        DeletionVectors.readDeleted(fs, dir, d).map(pos => (qualified, pos))
-      }
-      df = df.join(broadcast(spark.createDataFrame(deleted)
-          .toDF("__dv_file", "__dv_pos")),
-        col("__dv_f") === col("__dv_file") &&
-          col("__dv_p") === col("__dv_pos"), "left_anti")
-        .drop("__dv_f", "__dv_p")
-    }
-    df.select(logical.fieldNames.toSeq.map(c => col(s"`$c`")): _*)
-  }
+  /** The rewrite provenance columns a `scan(..., provenance = true)`
+    * appends: the qualified file URI and the row index. */
+  private val Provenance = Seq("__gm_file", "__gm_pos")
 
   /** CREATE a Delta table at `dir` from `df`, as commit 0 — the
     * writer-side bootstrap: data lands as parquet (hive-layout when
     * `partitionBy` is set), one `add` action per file carrying its
     * `partitionValues`, and a metaData action with the FULL
     * schemaString (partition columns included) and `partitionColumns`,
-    * exactly what [[readPartitioned]] needs to restore the values.
+    * exactly what [[scan]] needs to restore the values.
     * Returns the committed version (0). */
   def createDeltaTable(df: DataFrame, dir: String,
       partitionBy: Seq[String] = Nil): Long = {
@@ -1513,16 +1434,15 @@ object DeltaCompat {
   def appendToDeltaTable(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (acts, v) = loadLog(spark, dir)
+    val log = loadLog(spark, dir)
+    val v = log.version
     require(v >= 0L, s"no commits at $dir — use createDeltaTable first")
-    val meta = latestMetaLocal(acts).getOrElse(
+    val meta = log.meta.getOrElse(
       throw new IllegalArgumentException(s"$dir has no metaData action"))
     require(meta.cmMode == "none",
       "appendToDeltaTable on a column-mapped table is out of scope " +
         "(files would need physical column names)")
-    meta.schemaString.foreach { ss =>
-      val declared = org.apache.spark.sql.types.DataType.fromJson(ss)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+    meta.schema.foreach { declared =>
       require(df.columns.sorted.toSeq == declared.fieldNames.sorted.toSeq,
         s"append schema (${df.columns.sorted.mkString(", ")}) != declared " +
           s"(${declared.fieldNames.sorted.mkString(", ")})")

@@ -42,6 +42,19 @@ object TableIO {
     s"$base/$name"
   }
 
+  /** [[scratchDir]] emptied for a fresh run, with its filesystem: a
+    * gate that rebuilds its fixture from scratch deletes whatever an
+    * earlier run of the same session left at `name` (an idempotent
+    * re-run) and starts from an absent path. */
+  def freshScratchDir(spark: SparkSession,
+      name: String): (org.apache.hadoop.fs.FileSystem, String) = {
+    val dir = scratchDir(spark, name)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(path, true)
+    (fs, dir)
+  }
+
   def readTable(spark: SparkSession, name: String): DataFrame = spark.read.table(name)
 
   def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
@@ -49,12 +62,19 @@ object TableIO {
   /** Read an explicit list of engine-written parquet FILES with the
     * schema taken from the first (lexicographically) file's footer on
     * the DRIVER — `spark.read.parquet(files)` without a schema launches
-    * a schema-inference Spark job per call, a fixed cost the lake
-    * readers (Delta/Iceberg/Hudi live-file scans, CDC windows, snapshot
-    * pruned scans) paid on every consumer. Callers pass uniform-schema
-    * file sets (single-commit writes), where inference with mergeSchema
-    * off reads the same single footer anyway. `_metadata` provenance
-    * columns are unaffected by an explicit schema. */
+    * a schema-inference Spark job per call (with mergeSchema off it
+    * reads one footer too, so the result is the same). `_metadata`
+    * provenance columns are unaffected by an explicit schema.
+    *
+    * LIMITATION: a column present only in files that do not sort first
+    * is dropped. Callers: `DeltaCompat`'s checkpoint reader (the
+    * checkpoint's own parts, one write); the Iceberg live-file scan,
+    * its position/equality-delete reads and `readAddedBetween`; the
+    * Hudi CoW snapshot and `readIncremental`; `SnapshotTable.readPruned`.
+    * The last four can span several commits (Iceberg windows and
+    * snapshots, Hudi incremental windows, pruned snapshot dirs), so an
+    * added column there can be lost. Delta table data does not come
+    * through here: `DeltaCompat`'s scan reads the declared schema. */
   def readFilesFooter(spark: SparkSession, files: Seq[String]): DataFrame = {
     require(files.nonEmpty, "readFilesFooter needs at least one file")
     spark.read.schema(org.apache.spark.sql.graftbridge.Bridge
@@ -326,12 +346,16 @@ object TableIO {
     * LISTING that catches the swap mid-rename — on Linux local FS the
     * rename window can surface as `AccessDeniedException: ... Permission
     * denied` from InMemoryFileIndex, not a missing-path shape (observed
-    * in the r12 closing-tree race test). All are transient inside the
+    * in the r12 closing-tree race test), or as an AnalysisException
+    * UNABLE_TO_INFER_SCHEMA (the listing found the directory but none
+    * of its parquet files). All are transient inside the
     * bounded retry window; a genuinely unreadable path still fails after
     * `attempts` tries, so widening the predicate costs only bounded
     * extra latency on a real permission error. */
-  private[sources] def isPathMissing(e: Throwable): Boolean = e match {
+  private[graft] def isPathMissing(e: Throwable): Boolean = e match {
     case null => false
+    case t: org.apache.spark.SparkThrowable
+      if t.getCondition == "UNABLE_TO_INFER_SCHEMA" => true
     case _: java.io.FileNotFoundException => true
     case _: java.nio.file.NoSuchFileException => true
     case _: java.nio.file.AccessDeniedException => true

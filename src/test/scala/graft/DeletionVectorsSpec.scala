@@ -189,6 +189,65 @@ class DeletionVectorsSpec extends SparkSpec {
       "DV mask must apply before the logical rename")
   }
 
+  test("column-mapped readAddedBetween and readChangeFeed return logical names") {
+    def field(name: String, phys: String, id: Long, dt: DataType) =
+      StructField(name, dt, nullable = true, new MetadataBuilder()
+        .putLong("delta.columnMapping.id", id)
+        .putString("delta.columnMapping.physicalName", phys).build())
+    val schemaJson = StructType(Seq(field("id", "col-1", 1L, LongType),
+      field("v", "col-2", 2L, StringType)))
+      .json.replace("\\", "\\\\").replace("\"", "\\\"")
+    val (dir, fs) = mkTable()
+    writePart(dir, fs, "a.parquet", Seq((1L, "x")).toDF("col-1", "col-2"))
+    writePart(dir, fs, "b.parquet", Seq((2L, "y")).toDF("col-1", "col-2"))
+    writeCommit(dir, fs, 0, Seq(
+      """{"protocol":{"minReaderVersion":2,"minWriterVersion":5}}""",
+      s"""{"metaData":{"id":"t-cm","format":{"provider":"parquet"},"schemaString":"$schemaJson","configuration":{"delta.columnMapping.mode":"name"}}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}"""))
+    writeCommit(dir, fs, 1, Seq("""{"add":{"path":"b.parquet","dataChange":true}}"""))
+    // commit 2 deletes b's row with an explicit cdc file, physical names too
+    graft.sources.TableIO.stageFile(Seq((2L, "y", "delete"))
+      .toDF("col-1", "col-2", "_change_type"), dir, "_change_data/c2.parquet")
+    writeCommit(dir, fs, 2, Seq(
+      """{"remove":{"path":"b.parquet","dataChange":true}}""",
+      """{"cdc":{"path":"_change_data/c2.parquet","dataChange":false}}"""))
+    val added = DeltaCompat.readAddedBetween(spark, dir, 0L, 1L)
+    assert(added.columns.toSeq == Seq("id", "v"), s"got ${added.columns.toSeq}")
+    assert(added.as[(Long, String)].collect().toSeq == Seq((2L, "y")))
+    val feed = DeltaCompat.readChangeFeed(spark, dir, -1L, 2L)
+    assert(feed.columns.toSeq == Seq("id", "v", "_change_type", "_commit_version"),
+      s"got ${feed.columns.toSeq}")
+    assert(feed.as[(Long, String, String, Long)].collect().toSet == Set(
+      (1L, "x", "insert", 0L), (2L, "y", "insert", 1L), (2L, "y", "delete", 2L)))
+  }
+
+  test("a DV whose cardinality disagrees with its positions refuses on the partitioned read and in materializeDeletes") {
+    // declares 2 masked rows, holds 1
+    def badDv(fs: org.apache.hadoop.fs.FileSystem, dir: String) =
+      DeletionVectors.writeSidecar(fs, dir, Array(0L)).copy(cardinality = 2L)
+    val dvProtocol =
+      """{"protocol":{"minReaderVersion":3,"minWriterVersion":7,"readerFeatures":["deletionVectors"],"writerFeatures":["deletionVectors"]}}"""
+    val (pdir, pfs) = mkTable()
+    DeltaCompat.createDeltaTable((0L until 6L).map(i => (i, (i % 2).toInt))
+      .toDF("id", "m"), pdir, Seq("m"))
+    val f0 = DeltaCompat.liveFilesFull(spark, pdir)
+      .find(_.partitionValues("m").contains("0")).get
+    writeCommit(pdir, pfs, 1, Seq(dvProtocol,
+      s"""{"add":{"path":"${f0.path.stripPrefix(pdir + "/")}","partitionValues":{"m":"0"},"dataChange":true,"deletionVector":${dvJson(badDv(pfs, pdir))}}}"""))
+    val e1 = intercept[IllegalArgumentException] { DeltaCompat.readDeltaTable(spark, pdir) }
+    assert(e1.getMessage.contains("cardinality"), e1.getMessage)
+    val (dir, fs) = mkTable()
+    writePart(dir, fs, "a.parquet", (0L until 4L).map(i => (i, s"v$i")).toDF("id", "v"))
+    writeCommit(dir, fs, 0, Seq(dvProtocol,
+      """{"metaData":{"id":"t","format":{"provider":"parquet"}}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}"""))
+    writeCommit(dir, fs, 1, Seq(
+      s"""{"add":{"path":"a.parquet","dataChange":true,"deletionVector":${dvJson(badDv(fs, dir))}}}"""))
+    val e2 = intercept[IllegalArgumentException] { DeltaCompat.materializeDeletes(spark, dir) }
+    assert(e2.getMessage.contains("cardinality"), e2.getMessage)
+    assert(DeltaCompat.latestVersion(spark, dir) == 1L, "nothing may be committed")
+  }
+
   test("deleteWhere layers masks without rewriting data; time travel sees through") {
     val (dir, fs) = mkTable()
     writePart(dir, fs, "a.parquet", (0L until 10L).map(i => (i, s"v$i")).toDF("id", "v"))

@@ -341,6 +341,63 @@ class DeltaCompatSpec extends SparkSpec {
       == Set((1L, "a"), (2L, "B!"), (9L, "new")))
   }
 
+  /** A table whose commit 1 adds column `w`: commit 0 declares (id, v)
+    * and adds a.parquet = (1, x), (2, y); commit 1 declares (id, v, w)
+    * and adds b.parquet = (3, z, 30). */
+  private def addColumnTable(): (String, org.apache.hadoop.fs.FileSystem) = {
+    import org.apache.spark.sql.types._
+    val (dir, fs) = mkTable()
+    def schemaJson(fields: StructField*): String =
+      StructType(fields).json.replace("\\", "\\\\").replace("\"", "\\\"")
+    val (id, v) = (StructField("id", LongType), StructField("v", StringType))
+    writePart(dir, fs, "a.parquet", Seq((1L, "x"), (2L, "y")))
+    writeCommit(dir, fs, 0, Seq(
+      """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""",
+      s"""{"metaData":{"id":"t","format":{"provider":"parquet"},"schemaString":"${schemaJson(id, v)}"}}""",
+      """{"add":{"path":"a.parquet","dataChange":true}}"""))
+    graft.sources.TableIO.stageFile(Seq((3L, "z", 30L)).toDF("id", "v", "w"), dir, "b.parquet")
+    writeCommit(dir, fs, 1, Seq(
+      s"""{"metaData":{"id":"t","format":{"provider":"parquet"},"schemaString":"${schemaJson(id, v, StructField("w", LongType))}"}}""",
+      """{"add":{"path":"b.parquet","dataChange":true}}"""))
+    (dir, fs)
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  test("an added column reads through every Delta reader and merges, before and after a checkpoint") {
+    Seq(false, true).foreach { checkpointed =>
+      val (dir, fs) = addColumnTable()
+      if (checkpointed) assert(DeltaCompat.checkpoint(spark, dir) == 1L)
+      val evolved = Set(Seq(1L, "x", null), Seq(2L, "y", null), Seq(3L, "z", 30L))
+      val table = DeltaCompat.readDeltaTable(spark, dir)
+      assert(table.columns.toSeq == Seq("id", "v", "w"))
+      assert(rowsOf(table) == evolved, s"checkpointed=$checkpointed")
+      // no mask, no partition join: the scan reads no _metadata columns
+      assert(!table.queryExecution.optimizedPlan.toString.contains("_metadata"))
+      val added = DeltaCompat.readAddedBetween(spark, dir, -1L, 1L)
+      assert(added.columns.toSeq == Seq("id", "v", "w"),
+        s"checkpointed=$checkpointed: got ${added.columns.toSeq}")
+      assert(rowsOf(added) == evolved)
+      val feed = DeltaCompat.readChangeFeed(spark, dir, -1L, 1L)
+      assert(feed.columns.toSeq == Seq("id", "v", "w", "_change_type", "_commit_version"))
+      assert(rowsOf(feed.drop("_change_type")) ==
+        Set(Seq(1L, "x", null, 0L), Seq(2L, "y", null, 0L), Seq(3L, "z", 30L, 1L)))
+      if (checkpointed) {
+        // the checkpoint alone carries the evolved schema
+        (0L to 1L).foreach(i => fs.delete(new org.apache.hadoop.fs.Path(
+          f"$dir/_delta_log/$i%020d.json"), false))
+        assert(rowsOf(DeltaCompat.readDeltaTable(spark, dir)) == evolved)
+      }
+      // a source carrying the new column is the table's schema
+      assert(DeltaCompat.mergeInto(spark, dir,
+        Seq((1L, "X", 10L), (4L, "n", 40L)).toDF("id", "v", "w"), Seq("id")) == 2L)
+      assert(rowsOf(DeltaCompat.readDeltaTable(spark, dir)) == Set(
+        Seq(1L, "X", 10L), Seq(2L, "y", null), Seq(3L, "z", 30L), Seq(4L, "n", 40L)),
+        s"checkpointed=$checkpointed")
+    }
+  }
+
   /** A fresh table dir on the `failfs` scheme ([[FailingFs]]). */
   private def failingTable(): (String, org.apache.hadoop.fs.FileSystem) = {
     val conf = spark.sparkContext.hadoopConfiguration

@@ -155,6 +155,18 @@ class DeltaPartitionedSpec extends SparkSpec {
     assert(e.getMessage.contains("declared"))
   }
 
+  test("readAddedBetween restores the partition column with its declared type") {
+    val dir = mkDir()
+    DeltaCompat.createDeltaTable(
+      Seq((1L, 0, "a"), (2L, 1, "b")).toDF("id", "m", "v"), dir, Seq("m"))
+    DeltaCompat.appendToDeltaTable(
+      Seq((3L, 0, "c"), (4L, 2, "d")).toDF("id", "m", "v"), dir)
+    val added = DeltaCompat.readAddedBetween(spark, dir, 0L, 1L)
+    assert(added.columns.toSeq == Seq("id", "m", "v"), s"got ${added.columns.toSeq}")
+    assert(added.schema("m").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(added.as[(Long, Int, String)].collect().toSet == Set((3L, 0, "c"), (4L, 2, "d")))
+  }
+
   test("a row policy on the table root governs every partition branch") {
     val dir = mkDir()
     val df = (1L to 100L).map(i =>

@@ -133,6 +133,16 @@ class TableIOSpec extends SparkSpec {
     }
   }
 
+  test("isPathMissing treats UNABLE_TO_INFER_SCHEMA as transient, not every AnalysisException") {
+    val midSwap = new org.apache.spark.sql.AnalysisException(
+      "UNABLE_TO_INFER_SCHEMA", Map("format" -> "Parquet"))
+    assert(TableIO.isPathMissing(midSwap))
+    assert(TableIO.isPathMissing(new RuntimeException("wrapped", midSwap)))
+    val unrelated = new org.apache.spark.sql.AnalysisException(
+      "UNRESOLVED_COLUMN.WITHOUT_SUGGESTION", Map("objectName" -> "`x`"))
+    assert(!TableIO.isPathMissing(unrelated))
+  }
+
   test("withCompactSafeRead races repeated live compactions without errors") {
     val s = spark
     import s.implicits._
