@@ -1,9 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.queries.{AnalyticsQueries, CurationQueries, ExtendedQueries, GovernanceQueries, MlPrepQueries, PipelineQueries, QueryDef, RelationalQueries, SpatialQueries, StreamingQueries, SurveyQueries, Tables, TemporalQueries, UnicodeQueries}
+import graft.queries.{AnalyticsQueries, CurationQueries, ExtendedQueries, GovernanceQueries, MlPrepQueries, PipelineQueries, QueryDef, RelationalQueries, SpatialQueries, StreamingQueries, SurveyQueries, TemporalQueries, UnicodeQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

@@ -37,8 +37,8 @@ object Lineage {
           .flatMap(r => memo.getOrElse(r.exprId.id, Set.empty[String])).toSet
       case _ => () // bare attribute: passes through, already memoized
     }
-    def walk(p: LogicalPlan): Unit = {
-      p.children.foreach(walk)
+    def visit(p: LogicalPlan): Unit = {
+      p.children.foreach(visit)
       p match {
         case l: LeafNode =>
           l.output.foreach(a => memo(a.exprId.id) = Set(a.name))
@@ -49,7 +49,7 @@ object Lineage {
       }
     }
     val plan = df.queryExecution.analyzed
-    walk(plan)
+    visit(plan)
     plan.output.map(a =>
       (a.name, memo.getOrElse(a.exprId.id, Set.empty[String]).toSeq.sorted))
   }

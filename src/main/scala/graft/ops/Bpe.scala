@@ -99,7 +99,7 @@ object Bpe {
     * defines: for a pair xy with x≠y occurrences cannot overlap, so
     * each adjacency is one unit; for xx, a maximal run of L equal
     * symbols holds exactly ⌊L/2⌋ greedy left-to-right occurrences. */
-  private def walkPairs(w: Array[Int])(fn: (Int, Int, Long) => Unit): Unit = {
+  private def forEachPair(w: Array[Int])(fn: (Int, Int, Long) => Unit): Unit = {
     val n = w.length
     var j = 0
     while (j < n - 1) {
@@ -190,7 +190,7 @@ object Bpe {
     while (i < nw) {
       val f = freqs(i)
       val wi = i
-      walkPairs(words(i)) { (a, b, u) =>
+      forEachPair(words(i)) { (a, b, u) =>
         val k = pk(a, b)
         counts(k) = counts.getOrElse(k, 0L) + u * f
         members.getOrElseUpdate(k,
@@ -233,11 +233,11 @@ object Bpe {
           if (has) {
             val f = freqs(wi)
             delta.clear()
-            walkPairs(w)((x, y, u) =>
+            forEachPair(w)((x, y, u) =>
               delta(pk(x, y)) = delta.getOrElse(pk(x, y), 0L) - u * f)
             val w2 = applyMergeIds(w, a, b, z)
             words(wi) = w2
-            walkPairs(w2) { (x, y, u) =>
+            forEachPair(w2) { (x, y, u) =>
               delta(pk(x, y)) = delta.getOrElse(pk(x, y), 0L) + u * f
               if (x == z || y == z) // only z-pairs can be NEW (see doc)
                 members.getOrElseUpdate(pk(x, y),

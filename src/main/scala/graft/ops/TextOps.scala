@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -358,26 +357,6 @@ object TextOps {
     "es" -> Seq("el", "la", "de", "que", "los", "las", "una", "por"),
     "fr" -> Seq("le", "la", "les", "des", "est", "dans", "pour", "que"),
     "de" -> Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein"))
-
-  /** Occurrences of single-character regex class `cls` in `c`, counted by
-    * length difference — a codegen'd scalar, vs regexp_extract_all which
-    * materializes a match array per row (interpreted collection building). */
-  private def charClassCount(c: Column, cls: String): Column =
-    length(c) - length(regexp_replace(c, cls, ""))
-
-  /** Stopword hits (occurrence-counted, duplicates included) for one
-    * language's list over NORMALIZED text: ONE regexp_count pass with a
-    * lookaround-anchored alternation. Lookarounds don't consume the
-    * delimiting space, so adjacent repeats ("the the") both count; the
-    * anchors reject containing tokens ("theory"). One codegen'd scan per
-    * language replaces both earlier formulations: the per-element
-    * interpreted `size(filter(words, isInCollection))` HOF, and a
-    * per-stopword replace/length chain whose shared normalize prefix was
-    * NOT subexpression-eliminated (16 recomputations per row — measured
-    * 3x slower than even the HOF). */
-  private def stopwordHits(norm: Column, lang: String): Column =
-    regexp_count(concat(lit(" "), norm, lit(" ")),
-      lit("(?<= )(" + stopwords(lang).mkString("|") + ")(?= )")).cast("int")
 
   /** N-gram/stopword heuristic language ID over {en,es,fr,de} with "und"
     * (undetermined) when no list scores above zero. Deterministic

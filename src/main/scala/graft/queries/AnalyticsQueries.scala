@@ -523,7 +523,6 @@ object AnalyticsQueries {
     QueryDef(
       "q_pagerank_personalized",
       (s, d) => {
-        import s.implicits._
         val seeds = Tables.customer(s, d)
           .filter(col("c_custkey") % 100 === 0).select(col("c_custkey"))
         graft.ops.Graph.pagerankPersonalizedMicro(

@@ -1397,7 +1397,6 @@ object CurationQueries {
         .orderBy("doc_id")
     },
     Some {
-      val u64 = "18446744073709551616::HUGEINT"
       def md5u(e: String) =
         s"""(CAST(concat('0x', substr(md5($e), 1, 8)) AS BIGINT)::HUGEINT * 4294967296::HUGEINT
            | + CAST(concat('0x', substr(md5($e), 9, 8)) AS BIGINT)::HUGEINT)""".stripMargin

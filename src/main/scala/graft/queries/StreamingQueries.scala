@@ -285,21 +285,13 @@ object StreamingQueries {
           .select((col("doc_id") + 300000).as("doc_id"),
             concat(col("text"), lit(" extratoken")).as("text")))
       val run = s"${graft.sources.TableIO.sessionToken(s)}_${lshRunCounter.incrementAndGet()}"
-      val staged = graft.sources.TableIO.scratchDir(s, s"stream_lsh/probe_$run")
-      probe.repartitionByRange(4, col("doc_id"))
-        .write.mode("overwrite").parquet(staged)
-      val parts = new java.io.File(staged).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      val base = System.currentTimeMillis() - parts.length * 2000L
-      parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
+      val stream = EventStreams.orderedBatchStream(probe.repartitionByRange(4, col("doc_id")),
+        graft.sources.TableIO.scratchDir(s, s"stream_lsh/probe_$run"))
       val outDir = graft.sources.TableIO.scratchDir(s, s"stream_lsh/out_$run")
       // seed the sink with the empty (doc_id, dup_of) schema so the
       // final read is well-typed even if no batch flags anything
       s.range(0).select(col("id").as("doc_id"), col("id").as("dup_of"))
         .write.mode("overwrite").parquet(outDir)
-      val stream = s.readStream.schema(probe.schema).format("parquet")
-        .option("maxFilesPerTrigger", "1").load(staged)
       val q = EventStreams.lshDedupStream(stream, index,
           (batch, _) => batch.write.mode("append").parquet(outDir))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

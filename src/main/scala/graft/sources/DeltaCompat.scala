@@ -358,13 +358,6 @@ object DeltaCompat {
           s"${SupportedReaderFeatures.mkString(", ")})")
     }
 
-  private def readTextFile(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): String = {
-    val in = fs.open(p)
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** The log slice as parsed actions (checkpoint state first, then the
     * JSON commits after it), protocol-guarded — plus the latest commit
     * version present. With a `_last_checkpoint`, the checkpoint carries
@@ -388,7 +381,7 @@ object DeltaCompat {
       if (!fs.exists(lastCp)) (Nil, -1L)
       else {
         // one small JSON object: {"version":N,"size":M[,"parts":P]}
-        val meta = readTextFile(fs, lastCp)
+        val meta = TableIO.readText(fs, lastCp)
         def longField(k: String): Option[Long] =
           s""""$k"\\s*:\\s*(\\d+)""".r.findFirstMatchIn(meta).map(_.group(1).toLong)
         val v = longField("version").getOrElse(
@@ -444,7 +437,7 @@ object DeltaCompat {
         asOf.map(v => s" at or before version $v").getOrElse(""))
     val jsonActions = jsonFiles.toSeq.flatMap { p =>
       val v = p.getName.stripSuffix(".json").toLong
-      readTextFile(fs, p).linesIterator.zipWithIndex.flatMap {
+      TableIO.readText(fs, p).linesIterator.zipWithIndex.flatMap {
         case (line, i) => parseActionLine(line, v, i)
       }.toSeq
     }
@@ -717,7 +710,7 @@ object DeltaCompat {
       s"commits ${missing.mkString(", ")} are missing at $dir (vacuumed " +
         s"past a checkpoint?) — the $what cannot be replayed")
     val acts = want.flatMap { case (v, p) =>
-      readTextFile(fs, p).linesIterator.zipWithIndex
+      TableIO.readText(fs, p).linesIterator.zipWithIndex
         .flatMap { case (line, i) => parseActionLine(line, v, i) }.toSeq
     }
     guardLocal(acts, dir)
@@ -1188,27 +1181,21 @@ object DeltaCompat {
       }
       if (v > 0) { // commit v's cdc actions (commit 0 has none by shape)
         val cf = new Path(f"$dir/_delta_log/$v%020d.json")
-        if (fs.exists(cf)) {
-          val in = fs.open(cf)
-          val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+        if (fs.exists(cf))
           """"cdc"\s*:\s*\{[^}]*"path"\s*:\s*"([^"]+)"""".r
-            .findAllMatchIn(text).foreach(m => referenced += m.group(1))
-        }
+            .findAllMatchIn(TableIO.readText(fs, cf))
+            .foreach(m => referenced += m.group(1))
       }
     }
     // candidates: every payload file under the root except the log
-    val victims = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) { if (name != "_delta_log") walk(st.getPath) }
-      else if (name.endsWith(".parquet") || name.endsWith(".bin")) {
-        val rel = relOf(st.getPath.toUri.getPath)
-        if (!referenced.contains(rel)) victims += rel
+    val victims = TableIO.listFilesRecursive(fs, new Path(dir), Set("_delta_log"))
+      .filter { st =>
+        val name = st.getPath.getName
+        name.endsWith(".parquet") || name.endsWith(".bin")
       }
-    }
-    walk(new Path(dir))
+      .map(st => relOf(st.getPath.toUri.getPath)).filterNot(referenced).sorted
     victims.foreach(rel => fs.delete(new Path(s"$dir/$rel"), false))
-    victims.toSeq.sorted
+    victims
   }
 
   /** Read the table's current state, or (`asOf`) a past version,
@@ -1374,47 +1361,7 @@ object DeltaCompat {
     val missing = partitionBy.filterNot(df.columns.contains)
     require(missing.isEmpty,
       s"partition columns ${missing.mkString(", ")} not in the DataFrame")
-    val tmp = s"$dir/.tmp-create"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp)
-    // move data files into the table root, hive dirs preserved
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val tmpRoot = fs.makeQualified(new Path(tmp)).toUri.getPath
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")
-        val dst = new Path(s"$dir/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
-        moved += rel
-      }
-    }
-    walk(new Path(tmp))
-    fs.delete(new Path(tmp), true)
-    require(moved.nonEmpty, "createDeltaTable wrote no parquet files")
-    def pvOf(rel: String): Seq[(String, Option[String])] =
-      rel.split('/').dropRight(1).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
-        val c = seg.substring(0, i)
-        val v = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
-        c -> (if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v))
-      }
-    val adds = moved.sorted.map { rel =>
-      val enc = new java.net.URI(null, null, rel, null).getRawPath
-      val pvJson =
-        if (partitionBy.isEmpty) ""
-        else {
-          val entries = pvOf(rel).map { case (c, v) =>
-            s"${pvMapper.writeValueAsString(c)}:" +
-              v.map(pvMapper.writeValueAsString).getOrElse("null")
-          }
-          s""","partitionValues":{${entries.mkString(",")}}"""
-        }
-      s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
-    }
+    val adds = publishAdds(df, dir, "create", partitionBy)
     val schemaJson = pvMapper.writeValueAsString(df.schema.json)
     val partColsJson = partitionBy.map(pvMapper.writeValueAsString)
       .mkString("[", ",", "]")
@@ -1423,6 +1370,51 @@ object DeltaCompat {
       s"""{"metaData":{"id":"graft-${java.util.UUID.randomUUID()}","format":{"provider":"parquet"},"schemaString":$schemaJson,"partitionColumns":$partColsJson,"configuration":{}}}""") ++ adds
     writeCommit(fs, dir, 0L, lines)
     0L
+  }
+
+  /** The data half of [[createDeltaTable]] and [[appendToDeltaTable]]:
+    * `df` is written to the staging dir `dir/.tmp-<tag>` (hive dirs per
+    * `partitionBy`, flat when empty) and each parquet file is published
+    * at the same table-relative path through [[TableIO.publish]], so
+    * every target is checked absent before the first rename. The
+    * staging dir is deleted also when the write or a rename fails; the
+    * files a failed call already moved are named by no commit, and a
+    * retry writes new part names. Returns one `add` action per file,
+    * sorted by path, carrying the `partitionValues` its hive segments
+    * spell. */
+  private def publishAdds(df: DataFrame, dir: String, tag: String,
+      partitionBy: Seq[String]): Seq[String] = {
+    val hconf = df.sparkSession.sparkContext.hadoopConfiguration
+    val tmp = new Path(s"$dir/.tmp-$tag")
+    val fs = tmp.getFileSystem(hconf)
+    val moved = try {
+      val w = df.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(tmp.toString)
+      val tmpRoot = fs.makeQualified(tmp).toUri.getPath
+      val parts = TableIO.listFilesRecursive(fs, tmp)
+        .filter(_.getPath.getName.endsWith(".parquet"))
+      require(parts.nonEmpty, s"staged write at $tmp produced no parquet file")
+      TableIO.publish(fs, hconf, dir, parts.map(st =>
+        st -> st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")))
+    } finally fs.delete(tmp, true)
+    moved.map { case (rel, _) =>
+      val enc = new java.net.URI(null, null, rel, null).getRawPath
+      val pvJson =
+        if (partitionBy.isEmpty) ""
+        else {
+          val entries = rel.split('/').dropRight(1).toSeq.map { seg =>
+            val i = seg.indexOf('=')
+            require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
+            val value = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
+            s"${pvMapper.writeValueAsString(seg.substring(0, i))}:" +
+              (if (value == "__HIVE_DEFAULT_PARTITION__") "null"
+               else pvMapper.writeValueAsString(value))
+          }
+          s""","partitionValues":{${entries.mkString(",")}}"""
+        }
+      s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
+    }
   }
 
   /** APPEND `df` to an existing Delta table as one commit — the
@@ -1447,49 +1439,8 @@ object DeltaCompat {
         s"append schema (${df.columns.sorted.mkString(", ")}) != declared " +
           s"(${declared.fieldNames.sorted.mkString(", ")})")
     }
-    val partitionBy = meta.partitionCols
     val next = v + 1
-    val tmp = s"$dir/.tmp-append-$next"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[String]
-    val tmpRoot = fs.makeQualified(new Path(tmp)).toUri.getPath
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")
-        val dst = new Path(s"$dir/$rel")
-        fs.mkdirs(dst.getParent)
-        require(fs.rename(st.getPath, dst), s"rename failed: ${st.getPath}")
-        moved += rel
-      }
-    }
-    walk(new Path(tmp))
-    fs.delete(new Path(tmp), true)
-    require(moved.nonEmpty, "append wrote no parquet files")
-    def pvOf(rel: String): Seq[(String, Option[String])] =
-      rel.split('/').dropRight(1).toSeq.map { seg =>
-        val i = seg.indexOf('=')
-        require(i > 0, s"unexpected non-hive path segment '$seg' in $rel")
-        val c = seg.substring(0, i)
-        val value = java.net.URLDecoder.decode(seg.substring(i + 1), "UTF-8")
-        c -> (if (value == "__HIVE_DEFAULT_PARTITION__") None else Some(value))
-      }
-    val adds = moved.sorted.map { rel =>
-      val enc = new java.net.URI(null, null, rel, null).getRawPath
-      val pvJson =
-        if (partitionBy.isEmpty) ""
-        else {
-          val entries = pvOf(rel).map { case (c, value) =>
-            s"${pvMapper.writeValueAsString(c)}:" +
-              value.map(pvMapper.writeValueAsString).getOrElse("null")
-          }
-          s""","partitionValues":{${entries.mkString(",")}}"""
-        }
-      s"""{"add":{"path":"$enc"$pvJson,"dataChange":true}}"""
-    }
-    writeCommit(fs, dir, next, adds.toSeq)
+    writeCommit(fs, dir, next, publishAdds(df, dir, s"append-$next", meta.partitionCols))
     next
   }
 
@@ -1509,19 +1460,11 @@ object DeltaCompat {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val ids = SnapshotTable.snapshots(spark, snapshotRoot)
     require(ids.nonEmpty, s"no committed snapshot at $snapshotRoot")
-    def filesOf(dir: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toUri.getPath
-          val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
-          out += full.stripPrefix(root + "/")
-        }
-      }
-      walk(new Path(snapshotRoot, dir))
-      out.toSeq.sorted
-    }
+    val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
+    def filesOf(dir: String): Seq[String] =
+      TableIO.listFilesRecursive(fs, new Path(snapshotRoot, dir))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(_.getPath.toUri.getPath.stripPrefix(root + "/"))
     val logDir = new Path(s"$snapshotRoot/_delta_log")
     fs.delete(logDir, true) // re-export replaces the previous translation
     fs.mkdirs(logDir)

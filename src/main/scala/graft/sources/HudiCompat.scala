@@ -68,6 +68,46 @@ object HudiCompat {
       _.getPath.getName.matches("""\d+\.deltacommit(\..*)?"""))
   }
 
+  /** One base or log file of a file group. `instant` is a base file's
+    * own instant, or the base instant a log file's name attaches it to;
+    * `version` is a log file's version (0 for a base file). */
+  private final case class SliceFile(partition: String, fileId: String,
+      instant: String, version: Int, path: String)
+
+  /** The file-slice index behind [[liveFiles]], [[readMorSnapshot]] and
+    * [[clean]]: one walk of the table tree (`.hoodie` pruned), each file
+    * classified by name. Returns the base files whose instant is in
+    * `completed`, every log file, and the names of the files that are
+    * neither (marker sidecars, foreign files), all sorted by path. */
+  private def fileSlices(spark: SparkSession, dir: String, completed: Set[String])
+      : (Seq[SliceFile], Seq[SliceFile], Seq[String]) = {
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new Path(dir)).toUri.getPath
+    val bases = Seq.newBuilder[SliceFile]
+    val logs = Seq.newBuilder[SliceFile]
+    val others = Seq.newBuilder[String]
+    TableIO.listFilesRecursive(fs, new Path(dir), Set(".hoodie")).foreach { st =>
+      // partition = the file's PARENT dir relative to the table root
+      // ("" for a non-partitioned table, where files sit at the root).
+      // Derived structurally — string-stripping the file name off its
+      // path would leave the name itself as the partition at root,
+      // giving every file a unique slice key and silently disabling
+      // latest-file-slice dedup.
+      def partition = st.getPath.getParent.toUri.getPath
+        .stripPrefix(root).stripPrefix("/")
+      val path = st.getPath.toUri.getPath
+      st.getPath.getName match {
+        case BaseFile(fileId, _, instant) =>
+          if (completed.contains(instant))
+            bases += SliceFile(partition, fileId, instant, 0, path)
+        case LogFile(fileId, baseInstant, version, _) =>
+          logs += SliceFile(partition, fileId, baseInstant, version.toInt, path)
+        case name => others += name
+      }
+    }
+    (bases.result(), logs.result(), others.result())
+  }
+
   /** The live base-file paths: per (partition, fileId) the latest
     * COMPLETED instant's base file. `asOf` = TIME TRAVEL: only instants
     * at or before it participate, so the table reads as it stood at
@@ -84,35 +124,14 @@ object HudiCompat {
       .filter(ts => asOf.forall(ts <= _)).toSet
     require(completed.nonEmpty, s"no completed commits at $dir" +
       asOf.map(v => s" at or before instant $v").getOrElse(""))
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(dir)).toUri.getPath
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) { if (name != ".hoodie") walk(st.getPath) }
-      else name match {
-        case BaseFile(fileId, _, instant) =>
-          val full = st.getPath.toUri.getPath
-          // partition = the file's PARENT dir relative to the table
-          // root ("" for a non-partitioned table, where base files sit
-          // at the root). Derived structurally — string-stripping the
-          // file name off `full` would leave the name itself as the
-          // partition at root, giving every file a unique slice key
-          // and silently disabling latest-file-slice dedup.
-          val partition = st.getPath.getParent.toUri.getPath
-            .stripPrefix(root).stripPrefix("/")
-          if (completed.contains(instant)) out += ((partition, fileId, instant, full))
-        case _ =>
-          require(!name.contains(".log."),
-            s"$dir holds Hudi log files ($name) — a MERGE_ON_READ table " +
-              "whose log blocks this compat reader cannot merge")
-        // other marker/metadata sidecars and foreign files: not base files
-      }
-    }
-    walk(new Path(dir))
-    require(out.nonEmpty, s"Hudi table at $dir has no visible base files")
-    out.groupBy(t => (t._1, t._2)).values
-      .map(_.maxBy(_._3)._4).toSeq.sorted
+    val (bases, logs, others) = fileSlices(spark, dir, completed)
+    val logNames = (logs.map(l => new Path(l.path).getName) ++ others)
+      .filter(_.contains(".log."))
+    require(logNames.isEmpty, s"$dir holds Hudi log files (${logNames.head}) — " +
+      "a MERGE_ON_READ table whose log blocks this compat reader cannot merge")
+    require(bases.nonEmpty, s"Hudi table at $dir has no visible base files")
+    bases.groupBy(b => (b.partition, b.fileId)).values
+      .map(_.maxBy(_.instant).path).toSeq.sorted
   }
 
   /** Read the table's current snapshot, or (`asOf`) a past one — the
@@ -151,48 +170,27 @@ object HudiCompat {
       .filter(ts => asOf.forall(ts <= _)).toSet
     require(completed.nonEmpty, s"no completed instants at $dir" +
       asOf.map(v => s" at or before instant $v").getOrElse(""))
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val root = fs.makeQualified(new Path(dir)).toUri.getPath
-    val bases = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
-    val logs = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, Int, String)]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) { if (name != ".hoodie") walk(st.getPath) }
-      else {
-        val partition = st.getPath.getParent.toUri.getPath
-          .stripPrefix(root).stripPrefix("/")
-        name match {
-          case BaseFile(fileId, _, instant) =>
-            if (completed.contains(instant))
-              bases += ((partition, fileId, instant, st.getPath.toUri.getPath))
-          case LogFile(fileId, baseInstant, version, _) =>
-            logs += ((partition, fileId, baseInstant, version.toInt,
-              st.getPath.toUri.getPath))
-          case _ => // metadata sidecars / foreign files
-        }
-      }
-    }
-    walk(new Path(dir))
-    val groups = (bases.map(b => (b._1, b._2)) ++ logs.map(l => (l._1, l._2))).distinct
+    val (bases, logs, _) = fileSlices(spark, dir, completed)
+    val groups = (bases ++ logs).map(f => (f.partition, f.fileId)).distinct
     require(groups.nonEmpty, s"Hudi table at $dir has no visible file groups")
     val baseFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     val logFiles = scala.collection.mutable.ArrayBuffer.empty[String]
     groups.foreach { case (part, fid) =>
-      val gBases = bases.filter(b => b._1 == part && b._2 == fid)
-      val gLogs = logs.filter(l => l._1 == part && l._2 == fid)
-      val base = if (gBases.isEmpty) None else Some(gBases.maxBy(_._3))
-      val sliceBase = base.map(_._3).getOrElse {
-        val bis = gLogs.map(_._3).distinct
+      val gBases = bases.filter(b => b.partition == part && b.fileId == fid)
+      val gLogs = logs.filter(l => l.partition == part && l.fileId == fid)
+      val base = if (gBases.isEmpty) None else Some(gBases.maxBy(_.instant))
+      val sliceBase = base.map(_.instant).getOrElse {
+        val bis = gLogs.map(_.instant).distinct
         require(bis.size == 1,
           s"file group ($part, $fid) at $dir has logs at base instants " +
             s"${bis.sorted.mkString(", ")} but no base file — a cleaned " +
             "compaction this reader cannot reconstruct")
         bis.head
       }
-      base.foreach(b => baseFiles += b._4)
+      base.foreach(b => baseFiles += b.path)
       // logs attached to an OLDER base instant are pre-compaction
       // leftovers already folded into the base — excluded by name
-      gLogs.filter(_._3 == sliceBase).sortBy(_._4).foreach(logFiles += _._5)
+      gLogs.filter(_.instant == sliceBase).sortBy(_.version).foreach(logFiles += _.path)
     }
     if (logFiles.isEmpty) {
       require(baseFiles.nonEmpty, s"Hudi table at $dir has no visible files")
@@ -285,9 +283,7 @@ object HudiCompat {
     require(fs.exists(p),
       s"$dir has no .hoodie/hoodie.properties — pass recordKeyField to " +
         "merge its log blocks")
-    val in = fs.open(p)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    val fields = text.linesIterator.map(_.trim)
+    val fields = TableIO.readText(fs, p).linesIterator.map(_.trim)
       .find(_.startsWith("hoodie.table.recordkey.fields="))
       .map(_.substring("hoodie.table.recordkey.fields=".length).trim)
       .getOrElse(throw new IllegalArgumentException(
@@ -394,36 +390,17 @@ object HudiCompat {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val completed = completedInstants(spark, dir).toSet
     require(completed.nonEmpty, s"no completed instants at $dir")
-    val root = fs.makeQualified(new Path(dir)).toUri.getPath
-    val bases = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
-    val logs = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      val name = st.getPath.getName
-      if (st.isDirectory) { if (name != ".hoodie") walk(st.getPath) }
-      else {
-        val partition = st.getPath.getParent.toUri.getPath
-          .stripPrefix(root).stripPrefix("/")
-        name match {
-          case BaseFile(fileId, _, instant) =>
-            if (completed.contains(instant))
-              bases += ((partition, fileId, instant, st.getPath.toUri.getPath))
-          case LogFile(fileId, baseInstant, _, _) =>
-            logs += ((partition, fileId, baseInstant, st.getPath.toUri.getPath))
-          case _ => // metadata sidecars / foreign files
-        }
-      }
-    }
-    walk(new Path(dir))
+    val (bases, logs, _) = fileSlices(spark, dir, completed)
     val victims = scala.collection.mutable.ArrayBuffer.empty[String]
-    bases.groupBy(b => (b._1, b._2)).foreach { case ((part, fid), gBases) =>
-      val serving = gBases.filter(_._3 <= keepInstant)
-        .sortBy(_._3).lastOption.map(_._3)
-      val keep = gBases.map(_._3).filter(_ > keepInstant).toSet ++ serving
-      gBases.filterNot(b => keep.contains(b._3)).foreach { b =>
-        victims += b._4
+    bases.groupBy(b => (b.partition, b.fileId)).foreach { case ((part, fid), gBases) =>
+      val serving = gBases.filter(_.instant <= keepInstant)
+        .sortBy(_.instant).lastOption.map(_.instant)
+      val keep = gBases.map(_.instant).filter(_ > keepInstant).toSet ++ serving
+      gBases.filterNot(b => keep.contains(b.instant)).foreach { b =>
+        victims += b.path
         // MOR: log files attached to the reclaimed slice's base instant
-        logs.filter(l => l._1 == part && l._2 == fid && l._3 == b._3)
-          .foreach(victims += _._4)
+        logs.filter(l => l.partition == part && l.fileId == fid && l.instant == b.instant)
+          .foreach(victims += _.path)
       }
     }
     val out = victims.toSeq.sorted

@@ -83,11 +83,9 @@ object IcebergCompat {
     val meta = new Path(s"$dir/metadata")
     require(fs.exists(meta), s"$dir has no metadata/ — not an Iceberg table")
     val hint = new Path(meta, "version-hint.text")
-    if (fs.exists(hint)) {
-      val in = fs.open(hint)
-      val v = try new String(in.readAllBytes(), "UTF-8").trim finally in.close()
-      new Path(meta, s"v$v.metadata.json")
-    } else {
+    if (fs.exists(hint))
+      new Path(meta, s"v${TableIO.readText(fs, hint).trim}.metadata.json")
+    else {
       val vs = fs.listStatus(meta).map(_.getPath.getName).collect {
         case n if n.matches("v\\d+\\.metadata\\.json") =>
           n.stripPrefix("v").stripSuffix(".metadata.json").toLong
@@ -95,6 +93,46 @@ object IcebergCompat {
       require(vs.nonEmpty, s"no vN.metadata.json under $meta")
       new Path(meta, s"v${vs.max}.metadata.json")
     }
+  }
+
+  /** The current metadata file, its version N and its parsed JSON. */
+  private final case class Metadata(file: Path, version: Int,
+      root: com.fasterxml.jackson.databind.JsonNode)
+
+  /** The one metadata load behind [[snapshotIds]], [[resolveSnapshot]],
+    * [[appendSnapshot]] and [[expireSnapshots]]. */
+  private def loadMetadata(spark: SparkSession, dir: String): Metadata = {
+    val fs = fsFor(spark, dir)
+    val mf = currentMetadataFile(spark, dir)
+    require(fs.exists(mf), s"metadata file missing: $mf")
+    Metadata(mf, mf.getName.stripPrefix("v").stripSuffix(".metadata.json").toInt,
+      mapper.readTree(TableIO.readText(fs, mf)))
+  }
+
+  /** The current schema node: `current-schema-id` among `schemas`, else
+    * the first of them, else the v1 `schema` field. */
+  private def currentSchema(
+      root: com.fasterxml.jackson.databind.JsonNode): com.fasterxml.jackson.databind.JsonNode =
+    if (root.has("schemas")) {
+      val cur = root.path("current-schema-id").asLong(0L)
+      root.path("schemas").elements().asScala
+        .find(_.path("schema-id").asLong(-1L) == cur)
+        .getOrElse(root.path("schemas").elements().asScala.toSeq.headOption
+          .getOrElse(root.path("schema")))
+    } else root.path("schema")
+
+  /** Commit metadata version `version` of the table at `dir`: write
+    * `vN.metadata.json` exclusively (an existing version fails the
+    * call and is left untouched), then point `version-hint.text` at it.
+    * The one metadata commit behind [[createIcebergTable]],
+    * [[appendSnapshot]], [[expireSnapshots]] and [[writeMetadata]]. */
+  private def commitMetadata(spark: SparkSession, dir: String, version: Int,
+      json: Array[Byte]): Unit = {
+    val fs = fsFor(spark, dir)
+    val out = fs.create(new Path(s"$dir/metadata/v$version.metadata.json"), false)
+    try out.write(json) finally out.close()
+    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
+    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
   }
 
   private def readAvro(spark: SparkSession, path: Path): Seq[GenericRecord] = {
@@ -145,13 +183,9 @@ object IcebergCompat {
   /** The table's snapshot ids in metadata order (oldest first) — the
     * offset ladder for incremental/streaming consumption. */
   def snapshotIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val fs = fsFor(spark, dir)
-    val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
-    val snaps = root.path("snapshots")
-    require(snaps.isArray, s"no snapshots array in $mf")
+    val md = loadMetadata(spark, dir)
+    val snaps = md.root.path("snapshots")
+    require(snaps.isArray, s"no snapshots array in ${md.file}")
     (0 until snaps.size).map(i => snaps.get(i).path("snapshot-id").asLong(-1L))
   }
 
@@ -160,11 +194,7 @@ object IcebergCompat {
     * equality columns. */
   def resolveSnapshot(spark: SparkSession, dir: String,
       snapshotId: Option[Long] = None): Seq[ContentFile] = {
-    val fs = fsFor(spark, dir)
-    val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val Metadata(mf, _, root) = loadMetadata(spark, dir)
     val fv = root.path("format-version").asInt(1)
     require(fv <= 3, s"Iceberg format-version $fv is newer than this " +
       "compat reader's spec knowledge (v3) — refuse rather than mis-read")
@@ -173,14 +203,7 @@ object IcebergCompat {
     // its deletion vectors ARE applied (puffin blobs, below)
     // field-id -> name map from the current schema (for equality_ids)
     val idToName: Map[Long, String] = {
-      val schemaNode =
-        if (root.has("schemas")) {
-          val cur = root.path("current-schema-id").asLong(0L)
-          root.path("schemas").elements().asScala
-            .find(_.path("schema-id").asLong(-1L) == cur)
-            .getOrElse(root.path("schemas").elements().asScala.toSeq.headOption
-              .getOrElse(root.path("schema")))
-        } else root.path("schema")
+      val schemaNode = currentSchema(root)
       if (schemaNode.has("fields"))
         schemaNode.path("fields").elements().asScala
           .map(f => f.path("id").asLong(-1L) -> f.path("name").asText(""))
@@ -444,10 +467,7 @@ object IcebergCompat {
          |"schemas":[{"schema-id":0,"type":"struct","fields":$fields}],
          |"snapshots":[{"snapshot-id":1,"sequence-number":1,"manifest-list":"$ml"}]}"""
         .stripMargin.replace("\n", "")
-    val out = fs.create(new Path(s"$dir/metadata/v1.metadata.json"), false)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
-    try hint.write("1".getBytes("UTF-8")) finally hint.close()
+    commitMetadata(spark, dir, 1, json.getBytes("UTF-8"))
     1L
   }
 
@@ -460,20 +480,11 @@ object IcebergCompat {
     * current schema. Returns the new snapshot id. */
   def appendSnapshot(df: DataFrame, dir: String): Long = {
     val spark = df.sparkSession
-    val fs = fsFor(spark, dir)
-    val mf = currentMetadataFile(spark, dir)
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val Metadata(_, version, root) = loadMetadata(spark, dir)
     val snaps = root.path("snapshots")
     require(snaps.isArray && snaps.size > 0, s"no snapshots at $dir")
-    val schemaNames = {
-      val cur = root.path("current-schema-id").asLong(0L)
-      val schemaNode = root.path("schemas").elements().asScala
-        .find(_.path("schema-id").asLong(-1L) == cur)
-        .getOrElse(root.path("schema"))
-      schemaNode.path("fields").elements().asScala
-        .map(_.path("name").asText("")).toSeq
-    }
+    val schemaNames = currentSchema(root).path("fields").elements().asScala
+      .map(_.path("name").asText("")).toSeq
     if (schemaNames.nonEmpty)
       require(df.columns.sorted.toSeq == schemaNames.sorted,
         s"append schema (${df.columns.sorted.mkString(", ")}) != table " +
@@ -504,11 +515,7 @@ object IcebergCompat {
     snaps.asInstanceOf[com.fasterxml.jackson.databind.node.ArrayNode]
       .add(snapNode)
     obj.put("current-snapshot-id", newId)
-    val version = mf.getName.stripPrefix("v").stripSuffix(".metadata.json").toInt + 1
-    val out = fs.create(new Path(s"$dir/metadata/v$version.metadata.json"), false)
-    try out.write(mapper.writeValueAsBytes(obj)) finally out.close()
-    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(spark, dir, version + 1, mapper.writeValueAsBytes(obj))
     newId
   }
 
@@ -525,11 +532,7 @@ object IcebergCompat {
     * deleted absolute paths, sorted. */
   def expireSnapshots(spark: SparkSession, dir: String,
       keep: Seq[Long]): Seq[String] = {
-    val fs = fsFor(spark, dir)
-    val mf = currentMetadataFile(spark, dir)
-    require(fs.exists(mf), s"metadata file missing: $mf")
-    val in = fs.open(mf)
-    val root = try mapper.readTree(in.readAllBytes()) finally in.close()
+    val Metadata(mf, version, root) = loadMetadata(spark, dir)
     val current = root.path("current-snapshot-id").asLong(-1L)
     require(keep.contains(current),
       s"the current snapshot $current must be kept")
@@ -572,11 +575,8 @@ object IcebergCompat {
       .map(_.toString).mkString("[", ",", "]")
     val obj = root.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     obj.set("snapshots", mapper.readTree(keptJson))
-    val version = mf.getName.stripPrefix("v").stripSuffix(".metadata.json").toInt + 1
-    val out = fs.create(new Path(s"$dir/metadata/v$version.metadata.json"), false)
-    try out.write(mapper.writeValueAsBytes(obj)) finally out.close()
-    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(spark, dir, version + 1, mapper.writeValueAsBytes(obj))
+    val fs = fsFor(spark, dir)
     victims.foreach(p => fs.delete(new Path(p), false))
     victims
   }
@@ -698,25 +698,18 @@ object IcebergCompat {
     val fs = fsFor(spark, snapshotRoot)
     val ids = SnapshotTable.snapshots(spark, snapshotRoot)
     require(ids.nonEmpty, s"no committed snapshot at $snapshotRoot")
-    def filesOf(dir: String): Seq[(String, Long)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val conf = spark.sparkContext.hadoopConfiguration
-      def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-        if (st.isDirectory) walk(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) {
-          val full = st.getPath.toUri.getPath
-          val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
-          // record_count is a REQUIRED, trusted manifest field: real
-          // Iceberg engines answer count(*) and plan scans from it
-          // without touching data, so it must be the file's true row
-          // count — the parquet footer has it for the price of a
-          // metadata read, no data pages touched
-          out += ((full.stripPrefix(root + "/"), TableIO.footerRows(conf, st)))
-        }
-      }
-      walk(new Path(snapshotRoot, dir))
-      out.toSeq.sortBy(_._1)
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = fs.makeQualified(new Path(snapshotRoot)).toUri.getPath
+    // record_count is a REQUIRED, trusted manifest field: real Iceberg
+    // engines answer count(*) and plan scans from it without touching
+    // data, so it must be the file's true row count — the parquet
+    // footer has it for the price of a metadata read, no data pages
+    // touched
+    def filesOf(dir: String): Seq[(String, Long)] =
+      TableIO.listFilesRecursive(fs, new Path(snapshotRoot, dir))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+        .map(st => (st.getPath.toUri.getPath.stripPrefix(root + "/"),
+          TableIO.footerRows(conf, st)))
     fs.delete(new Path(s"$snapshotRoot/metadata"), true) // re-export replaces
     val snapshots = ids.zipWithIndex.map { case (id, idx) =>
       val dirs = SnapshotTable.dirsAt(spark, snapshotRoot, id)
@@ -737,13 +730,12 @@ object IcebergCompat {
 
   /** Fixture: write `vN.metadata.json` + `version-hint.text` with a
     * snapshot per (id, manifestList), current = the last; `schemaFields`
-    * (id, name) feed equality_ids resolution. */
+    * (id, name) feed equality_ids resolution. Committed like every
+    * other metadata version: an existing `vN` fails the call. */
   def writeMetadata(spark: SparkSession, dir: String, version: Int,
       snapshots: Seq[(Long, String)],
       schemaFields: Seq[(Int, String)] = Nil,
       formatVersion: Int = 2): Unit = {
-    val fs = fsFor(spark, dir)
-    fs.mkdirs(new Path(s"$dir/metadata"))
     val snapsJson = snapshots.map { case (id, ml) =>
       s"""{"snapshot-id":$id,"manifest-list":"$ml"}"""
     }.mkString("[", ",", "]")
@@ -756,9 +748,6 @@ object IcebergCompat {
          |"current-schema-id":0,
          |"schemas":[{"schema-id":0,"type":"struct","fields":$fieldsJson}],
          |"snapshots":$snapsJson}""".stripMargin.replace("\n", "")
-    val out = fs.create(new Path(s"$dir/metadata/v$version.metadata.json"), true)
-    try out.write(json.getBytes("UTF-8")) finally out.close()
-    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    commitMetadata(spark, dir, version, json.getBytes("UTF-8"))
   }
 }

@@ -39,17 +39,6 @@ object SnapshotCatalog {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def readFile(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
   /** Committed catalog versions at `catRoot`, ascending. */
   def versions(spark: SparkSession, catRoot: String): Seq[Long] = {
     val (fs, p) = fsFor(spark, catRoot)
@@ -102,7 +91,7 @@ object SnapshotCatalog {
   def tablesAt(spark: SparkSession, catRoot: String,
       version: Long): Map[String, (String, Long)] = {
     val (fs, rootPath) = fsFor(spark, catRoot)
-    readFile(fs, new Path(rootPath, CatPrefix + fmt(version)))
+    TableIO.readText(fs, new Path(rootPath, CatPrefix + fmt(version)))
       .split("\n").iterator.map(_.trim).filter(_.nonEmpty)
       .map { line =>
         val parts = line.split("\t")

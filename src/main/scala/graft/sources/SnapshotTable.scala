@@ -144,27 +144,16 @@ object SnapshotTable {
     s.last
   }
 
-  private def readFile(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](4096)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "UTF-8")
-    } finally in.close()
-  }
-
   /** Dir lines of a manifest. Lines starting with `#` are METADATA
     * (e.g. `#batch:<key>` from [[appendIdempotent]]) — carried inside
     * the same atomic commit file, invisible to the dir list. */
   private def readManifest(fs: FileSystem, root: Path, id: Long): Seq[String] =
-    readFile(fs, new Path(root, ManifestPrefix + fmt(id)))
+    TableIO.readText(fs, new Path(root, ManifestPrefix + fmt(id)))
       .split("\n").iterator.map(_.trim)
       .filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
 
   private def readManifestMeta(fs: FileSystem, root: Path, id: Long): Seq[String] =
-    readFile(fs, new Path(root, ManifestPrefix + fmt(id)))
+    TableIO.readText(fs, new Path(root, ManifestPrefix + fmt(id)))
       .split("\n").iterator.map(_.trim).filter(_.startsWith("#")).toSeq
 
   /** Data-dir names (relative to root) that snapshot `id` is made of —
@@ -193,19 +182,12 @@ object SnapshotTable {
     (next, snapDir)
   }
 
-  /** All parquet files under `dir`, RECURSIVELY — hive-partitioned data
-    * dirs nest their files one level per partition column. */
+  /** All parquet files under `dir`, RECURSIVELY and sorted by path —
+    * hive-partitioned data dirs nest their files one level per
+    * partition column. */
   private def listParquetFiles(fs: FileSystem,
-      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.FileStatus]
-    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) out += st
-    }
-    walk(dir)
-    out.toSeq
-  }
+      dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    TableIO.listFilesRecursive(fs, dir).filter(_.getPath.getName.endsWith(".parquet"))
 
   /** A data dir written with a partition spec has `col=value` subdirs. */
   private def isHivePartitioned(fs: FileSystem, dir: Path): Boolean =
@@ -225,7 +207,7 @@ object SnapshotTable {
     val files = listParquetFiles(fs, dir)
     require(files.nonEmpty, s"no parquet files under $dir")
     org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema(spark,
-      files.minBy(_.getPath.toString).getPath.toString)
+      files.head.getPath.toString)
   }
 
   /** Flat (non-hive, non-mergeSchema) dir read with the footer schema —
@@ -384,7 +366,7 @@ object SnapshotTable {
       require(fs.exists(p),
         s"dir $d has no NDV sidecar at $root — commitWithNdv/appendWithNdv " +
           "must be used consistently for sketched tables")
-      val line = readFile(fs, p).split("\n").iterator.map(_.trim)
+      val line = TableIO.readText(fs, p).split("\n").iterator.map(_.trim)
         .find(_.startsWith(column + "\t"))
       require(line.isDefined, s"dir $d's NDV sidecar has no line for $column")
       val payload = line.get.substring(column.length + 1).trim
@@ -427,9 +409,9 @@ object SnapshotTable {
   }
 
   /** The columns with a parquet bloom filter in the FIRST row group of
-    * the first data file of snapshot `id` — the structural audit that
-    * [[commitWithBlooms]] actually wrote blooms (readers skip silently,
-    * so presence is the observable). Metadata-only. */
+    * the first data file (by path) of snapshot `id` — the structural
+    * audit that [[commitWithBlooms]] actually wrote blooms (readers skip
+    * silently, so presence is the observable). Metadata-only. */
   def bloomColumns(spark: SparkSession, root: String, id: Long): Seq[String] = {
     val (fs, rootPath) = fsFor(spark, root)
     val dir = readManifest(fs, rootPath, id).filterNot(isDeleteDir).head
@@ -466,7 +448,7 @@ object SnapshotTable {
       require(fs.exists(statsPath),
         s"dir $d has no stats sidecar at $root — commit with statsCols to " +
           "answer min/max from metadata")
-      val ranges = readFile(fs, statsPath).split("\n").iterator
+      val ranges = TableIO.readText(fs, statsPath).split("\n").iterator
         .map(_.trim).filter(_.nonEmpty).map(_.split("\t"))
         .filter(p => p.length == 4 && p(1) == column)
         .map(p => p(0) -> (p(2).toDouble, p(3).toDouble)).toMap
@@ -1151,7 +1133,7 @@ object SnapshotTable {
       val statsPath = new Path(dirPath, StatsFile)
       val ranges: Map[String, (Double, Double)] =
         if (!fs.exists(statsPath)) Map.empty
-        else readFile(fs, statsPath).split("\n").iterator
+        else TableIO.readText(fs, statsPath).split("\n").iterator
           .map(_.trim).filter(_.nonEmpty)
           .map(_.split("\t"))
           .filter(p => p.length == 4 && p(1) == column)
@@ -1326,7 +1308,7 @@ object SnapshotTable {
     else fs.listStatus(rootPath).iterator
       .filter(st => !st.isDirectory && st.getPath.getName.startsWith(RefPrefix))
       .map(st => st.getPath.getName.stripPrefix(RefPrefix) ->
-        readFile(fs, st.getPath).trim.toLong)
+        TableIO.readText(fs, st.getPath).trim.toLong)
       .toMap
   }
 

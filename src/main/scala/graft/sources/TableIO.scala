@@ -55,6 +55,41 @@ object TableIO {
     (fs, dir)
   }
 
+  /** Every file under `dir`, sorted by path: the lake layers' one tree
+    * walk. A dir whose name is in `prune` (a table's own log or
+    * timeline, `_delta_log` or `.hoodie`) is not descended, at any
+    * depth; every other dir is, hive `k=v` dirs included. Callers:
+    * `DeltaCompat`'s vacuum, partitioned publish and log export;
+    * `HudiCompat`'s file-slice index (snapshot, MOR and clean);
+    * `IcebergCompat`'s metadata export; `SnapshotTable`'s data-dir
+    * listing. */
+  def listFilesRecursive(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path,
+      prune: Set[String] = Set.empty): IndexedSeq[org.apache.hadoop.fs.FileStatus] = {
+    def files(p: org.apache.hadoop.fs.Path): Iterator[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(p).iterator.flatMap { st =>
+        if (!st.isDirectory) Iterator.single(st)
+        else if (prune.contains(st.getPath.getName)) Iterator.empty
+        else files(st.getPath)
+      }
+    files(dir).toIndexedSeq.sortBy(_.getPath.toString)
+  }
+
+  /** A small metadata file's whole content as UTF-8 text, read in the
+    * calling process: the lake layers' one small-file reader. Callers:
+    * `DeltaCompat`'s `_last_checkpoint` and JSON commits;
+    * `HudiCompat`'s `hoodie.properties`; `IcebergCompat`'s
+    * `version-hint.text` and metadata JSON; `SnapshotTable`'s
+    * manifests, tags and sidecars; `SnapshotCatalog`'s pointer files.
+    * Binary formats with ranged reads (Hudi log blocks, Puffin, DV
+    * sidecars) keep their own readers. */
+  def readText(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
   def readTable(spark: SparkSession, name: String): DataFrame = spark.read.table(name)
 
   def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
@@ -470,8 +505,9 @@ object TableIO {
   /** The rename-and-count tail shared by [[stageFiles]] and
     * [[writePartFiles]]: every target is checked absent before the
     * first rename, then each staged file's footer is counted from its
-    * listed status and the file moves to `dir/<name>`. */
-  private def publish(fs: org.apache.hadoop.fs.FileSystem,
+    * listed status and the file moves to `dir/<name>`. `DeltaCompat`'s
+    * partitioned publish uses it too. */
+  private[sources] def publish(fs: org.apache.hadoop.fs.FileSystem,
       hconf: org.apache.hadoop.conf.Configuration, dir: String,
       moves: IndexedSeq[(org.apache.hadoop.fs.FileStatus, String)])
       : IndexedSeq[(String, Long)] = {

@@ -538,19 +538,9 @@ object EventStreams {
   def eventsMultiBatchStream(spark: SparkSession, sfDir: String,
       nFiles: Int): DataFrame = {
     require(nFiles >= 2, "a multi-batch drive needs at least 2 files")
-    val staged = graft.sources.TableIO.scratchDir(spark, s"events_batches_$nFiles")
     val ev = graft.queries.Tables.events(spark, sfDir)
-    ev.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(staged)
-    // range partition index == ascending ts range == part-file name order
-    val parts = new java.io.File(staged).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    val base = System.currentTimeMillis() - parts.length * 2000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-    spark.readStream.schema(ev.schema).format("parquet")
-      .option("maxFilesPerTrigger", "1")
-      .load(staged)
+    orderedBatchStream(ev.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts"),
+      graft.sources.TableIO.scratchDir(spark, s"events_batches_$nFiles"))
   }
 
   /** Documents staged as `nFiles` doc_id-ordered files consumed one per
@@ -560,18 +550,30 @@ object EventStreams {
   def documentsMultiBatchStream(spark: SparkSession, sfDir: String,
       nFiles: Int): DataFrame = {
     require(nFiles >= 2, "a multi-batch drive needs at least 2 files")
-    val staged = graft.sources.TableIO.scratchDir(spark, s"docs_batches_$nFiles")
     val docs = graft.queries.Tables.documents(spark, sfDir)
-    docs.repartitionByRange(nFiles, col("doc_id")).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(staged)
-    val parts = new java.io.File(staged).listFiles()
+    orderedBatchStream(
+      docs.repartitionByRange(nFiles, col("doc_id")).sortWithinPartitions("doc_id"),
+      graft.sources.TableIO.scratchDir(spark, s"docs_batches_$nFiles"))
+  }
+
+  /** The ordered multi-batch drive's staging: write `ordered` (range
+    * partitioned, so part-file name order is key order) to `dir`, give
+    * its parquet parts strictly increasing mtimes in name order (2 s
+    * apart, the last 2 s in the past), and return a file stream over
+    * `dir` admitting ONE file per micro-batch: the file source admits
+    * files in mtime order, so batch k carries exactly the k-th range. A
+    * file added to `dir` later with the current time as its mtime is
+    * admitted after every part. */
+  private[graft] def orderedBatchStream(ordered: DataFrame, dir: String): DataFrame = {
+    ordered.write.mode("overwrite").parquet(dir)
+    val parts = new java.io.File(dir).listFiles()
       .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
       .sortBy(_.getName)
     val base = System.currentTimeMillis() - parts.length * 2000L
     parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
-    spark.readStream.schema(docs.schema).format("parquet")
+    ordered.sparkSession.readStream.schema(ordered.schema).format("parquet")
       .option("maxFilesPerTrigger", "1")
-      .load(staged)
+      .load(dir)
   }
 
   /** Run the hourly aggregation to a named in-memory sink until all
@@ -613,24 +615,17 @@ object EventStreams {
     require(nFiles >= 2, "a multi-batch drive needs at least 2 files")
     val staged = graft.sources.TableIO.scratchDir(spark, s"events_late_$nFiles")
     val ev = graft.queries.Tables.events(spark, sfDir)
-    ev.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts")
-      .write.mode("overwrite").parquet(staged)
+    val stream = orderedBatchStream(
+      ev.repartitionByRange(nFiles, col("ts")).sortWithinPartitions("ts"), staged)
     val minTs = ev.agg(min(col("ts"))).head().getTimestamp(0)
     val late = ev.filter(col("ts") < lit(minTs) + expr("INTERVAL 1 HOUR"))
     val nLate = late
       .select(date_trunc("hour", col("ts")).as("w"), col("event_type"))
       .distinct().count()
-    val dir = new java.io.File(staged)
-    val parts = dir.listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .sortBy(_.getName)
-    val base = System.currentTimeMillis() - (parts.length + 2) * 2000L
-    parts.zipWithIndex.foreach { case (f, i) => f.setLastModified(base + i * 2000L) }
     graft.sources.TableIO.stageFile(late, staged, "zzz-late-replay.parquet")
-    new java.io.File(dir, "zzz-late-replay.parquet")
-      .setLastModified(base + (parts.length + 1) * 2000L)
-    (spark.readStream.schema(ev.schema).format("parquet")
-      .option("maxFilesPerTrigger", "1").load(staged), nLate)
+    new java.io.File(staged, "zzz-late-replay.parquet")
+      .setLastModified(System.currentTimeMillis())
+    (stream, nLate)
   }
 
   private val drainCounter = new java.util.concurrent.atomic.AtomicLong(0)

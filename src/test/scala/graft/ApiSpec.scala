@@ -5,7 +5,6 @@ import org.apache.spark.sql.types._
 
 import graft.api.PipelineApi
 import graft.profiling.Profiler
-import graft.transform.CleanRows
 
 /** Drives the five-endpoint facade end-to-end on real parquet files:
   * write survey-shaped input, call the API, read the results back, and

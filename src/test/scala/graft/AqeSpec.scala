@@ -61,7 +61,6 @@ class AqeSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1MB",
       "spark.sql.shuffle.partitions" -> "64") {
-      import spark.implicits._
       // 64 configured partitions for a few KB of aggregate output: the
       // static plan would run 64 near-empty reducers; AQE folds them
       val agg = spark.range(0, 10000)

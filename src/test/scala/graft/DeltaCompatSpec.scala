@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.sources.DeltaCompat
 
 /** Edge pins for the Delta-log compat reader: last-action-wins

@@ -216,4 +216,37 @@ class DeltaPartitionedSpec extends SparkSpec {
     }
     assert(e4.getMessage.contains("_delta_log"))
   }
+
+  test("a partitioned create or append that fails on a rename leaves no staging dir and no commit") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    val dir = "failfs://" + mkDir()
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
+    def staging = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+      .map(_.getPath.getName).filter(_.startsWith(".tmp-")).toSeq
+    // fail the publish into one partition: files sort by path, so the
+    // partitions before it have already moved into the table root
+    def publishInto(b: Int)(p: String) = p.contains(s"/bucket=$b/") && !p.contains("/.tmp-")
+    def rows() = DeltaCompat.readDeltaTable(spark, dir).as[(Long, Int, String)].collect().toSet
+    val first = Seq((1L, 10, "a"), (2L, 20, "b"))
+    val e = FailingFs.failingOn(publishInto(20)) {
+      intercept[Exception](DeltaCompat.createDeltaTable(first.toDF("id", "bucket", "v"), dir,
+        Seq("bucket")))
+    }
+    assert(FailingFs.injected(e), s"got $e")
+    assert(staging.isEmpty, s"staging dirs left behind: $staging")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_delta_log")))
+    assert(DeltaCompat.createDeltaTable(first.toDF("id", "bucket", "v"), dir, Seq("bucket")) == 0L)
+    assert(rows() == first.toSet)
+    val more = Seq((3L, 10, "c"), (4L, 30, "d"))
+    val e2 = FailingFs.failingOn(publishInto(30)) {
+      intercept[Exception](DeltaCompat.appendToDeltaTable(more.toDF("id", "bucket", "v"), dir))
+    }
+    assert(FailingFs.injected(e2), s"got $e2")
+    assert(staging.isEmpty, s"staging dirs left behind: $staging")
+    assert(DeltaCompat.latestVersion(spark, dir) == 0L)
+    assert(rows() == first.toSet)
+    assert(DeltaCompat.appendToDeltaTable(more.toDF("id", "bucket", "v"), dir) == 1L)
+    assert(rows() == (first ++ more).toSet)
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.sources.{DeltaCompat, HudiCompat, IcebergCompat, SnapshotTable}
+import graft.sources.{HudiCompat, IcebergCompat, SnapshotTable}
 
 /** Edge pins for the foreign-lake micro-batch source: offset ladders
   * per format, checkpointed resume pulling exactly the delta, head

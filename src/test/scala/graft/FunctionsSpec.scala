@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.{cosine_similarity, float_dot, long_argmin_key, md5_hash64, vector_norm}
 import graft.ops.Similarity

@@ -3,7 +3,6 @@ package graft
 import scala.util.Random
 
 import graft.sources.{DeltaCompat, HudiCompat, IcebergCompat}
-import graft.sources.IcebergCompat.Entry
 
 /** Model-based property tests for the three lake-interop readers:
   * random operation chains maintained against a trivial in-memory

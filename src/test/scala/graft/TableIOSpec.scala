@@ -451,4 +451,27 @@ class TableIOSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/u.parquet").exists())
     assert(!new java.io.File(s"$dir/.tmp-again").exists())
   }
+
+  test("listFilesRecursive prunes only the named dirs, descends hive dirs, sorts by path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-walk").toString
+    val files = Seq("b.parquet", "a/z.txt", "a.txt", "k=1/x.parquet", "k=1/j=2/y.parquet",
+      "k=10/w.parquet", "_delta_log/00.json", "_delta_log/sub/cp.parquet",
+      "data/_delta_log/deep.json", "hoodie/.hoodie/keep.txt", ".hoodie/h.commit")
+    files.foreach { f =>
+      val p = java.nio.file.Paths.get(s"$dir/$f")
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, f)
+    }
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rel(prune: Set[String]): Seq[String] =
+      TableIO.listFilesRecursive(fs, root, prune)
+        .map(_.getPath.toUri.getPath.stripPrefix(s"$dir/"))
+    assert(rel(Set.empty) == files.sorted)
+    // pruned at any depth, and only the named dirs
+    assert(rel(Set("_delta_log")) == files.filterNot(_.contains("_delta_log/")).sorted)
+    assert(rel(Set(".hoodie")) == files.filterNot(_.contains(".hoodie/")).sorted)
+    assert(TableIO.readText(fs, new org.apache.hadoop.fs.Path(s"$dir/k=1/j=2/y.parquet"))
+      == "k=1/j=2/y.parquet")
+  }
 }

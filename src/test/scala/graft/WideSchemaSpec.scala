@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.profiling.Profiler
 import graft.transform.{CleanColumns, CleanRows}
 
 /** The reference's real workload shape: survey tables with 100s-1000s of
