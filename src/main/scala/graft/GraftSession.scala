@@ -48,9 +48,10 @@ object GraftSession {
     // issue dozens of small writes per query, each paying v1's extra
     // sequential driver-side rename round. Atomicity is NOT provided
     // by the job commit in this engine — every table layer publishes
-    // via its own manifest/log pointer flip — so v2's weaker failure
-    // story costs nothing here, the same reasoning cloud object-store
-    // committers use.
+    // its manifest, log entry or instant through the one shared commit,
+    // `TableIO.commitFile` (atomic, create-exclusive) — so v2's weaker
+    // failure story costs nothing here, the same reasoning cloud
+    // object-store committers use.
     .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
 
   /** The harness shape both driver entrypoints (Bench, Verify) share:

@@ -945,18 +945,17 @@ object DeltaCompat {
 
   /** Write commit `version` of the table at `dir`: `lines`, one action
     * each, joined by "\n" plus a trailing newline, in UTF-8, to
-    * `_delta_log/<version>.json` (parent dirs created). The create is
-    * EXCLUSIVE: a commit file that already exists fails the call and
-    * stays byte-identical. Every writer here relies on it, as the
-    * protocol's optimistic concurrency does — two writers racing for
-    * one version cannot both land it (the guarantee is as atomic as
-    * the filesystem's create-if-absent); the loser re-reads the log.
-    * The one owner of commit-file writes. */
+    * `_delta_log/<version>.json` (parent dirs created) through
+    * [[TableIO.commitFile]]: the version appears whole or not at all,
+    * and only if no writer landed it first. An existing commit file
+    * fails the call and stays byte-identical (the loser re-reads the
+    * log); a failed write leaves the version free for a retry. The one
+    * owner of commit-file writes. */
   def writeCommit(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       version: Long, lines: Seq[String]): Unit = {
-    val out = fs.create(new Path(f"$dir/_delta_log/$version%020d.json"), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    val target = new Path(f"$dir/_delta_log/$version%020d.json")
+    require(TableIO.commitFile(fs, target, (lines.mkString("\n") + "\n").getBytes("UTF-8")),
+      s"Delta commit $target already exists: version $version is taken")
   }
 
   /** Write `changes` (data columns + `_change_type`) as this commit's
@@ -1392,13 +1391,14 @@ object DeltaCompat {
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
         .parquet(tmp.toString)
       val tmpRoot = fs.makeQualified(tmp).toUri.getPath
-      val parts = TableIO.listFilesRecursive(fs, tmp)
-        .filter(_.getPath.getName.endsWith(".parquet"))
+      val parts = TableIO.listFilesRecursive(fs, tmp).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
       require(parts.nonEmpty, s"staged write at $tmp produced no parquet file")
-      TableIO.publish(fs, hconf, dir, parts.map(st =>
-        st -> st.getPath.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/")))
+      val rels = parts.map(_.toUri.getPath.stripPrefix(tmpRoot).stripPrefix("/"))
+      TableIO.publish(fs, dir, parts.zip(rels))
+      rels
     } finally fs.delete(tmp, true)
-    moved.map { case (rel, _) =>
+    moved.map { rel =>
       val enc = new java.net.URI(null, null, rel, null).getRawPath
       val pvJson =
         if (partitionBy.isEmpty) ""

@@ -44,9 +44,10 @@ object HudiCompat {
   private val BaseFile = """^([^_]+)_([^_]+)_(\d+)\.parquet$""".r
   private val LogFile = """^\.([^_]+)_(\d+)\.log\.(\d+)(?:_(.+))?$""".r
 
-  /** Completed instants on the timeline (`.commit` for CoW writes and
-    * compactions, `.deltacommit` for MOR log appends), ascending. */
-  def completedInstants(spark: SparkSession, dir: String): Seq[String] = {
+  /** One listing of `.hoodie`: its completed instants (`.commit` for CoW
+    * writes and compactions, `.deltacommit` for MOR log appends),
+    * ascending, and whether it holds a deltacommit in any state. */
+  private def timeline(spark: SparkSession, dir: String): (Seq[String], Boolean) = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val meta = new Path(s"$dir/.hoodie")
     require(fs.exists(meta), s"$dir has no .hoodie — not a Hudi table")
@@ -55,18 +56,15 @@ object HudiCompat {
       s"$dir carries .replacecommit instants — clustering/insert_overwrite " +
         "re-points file groups through replace metadata this reader does " +
         "not parse; reading by file slice alone would return stale groups")
-    names.collect {
+    (names.collect {
       case CompletedCommit(ts) => ts
       case CompletedDeltaCommit(ts) => ts
-    }.toSeq.sorted
+    }.toSeq.sorted, names.exists(_.matches("""\d+\.deltacommit(\..*)?""")))
   }
 
-  private def hasDeltaCommits(spark: SparkSession, dir: String): Boolean = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = new Path(s"$dir/.hoodie")
-    fs.exists(meta) && fs.listStatus(meta).exists(
-      _.getPath.getName.matches("""\d+\.deltacommit(\..*)?"""))
-  }
+  /** Completed instants on the timeline, ascending. */
+  def completedInstants(spark: SparkSession, dir: String): Seq[String] =
+    timeline(spark, dir)._1
 
   /** One base or log file of a file group. `instant` is a base file's
     * own instant, or the base instant a log file's name attaches it to;
@@ -116,12 +114,16 @@ object HudiCompat {
     * standard Hudi retention caveat). */
   def liveFiles(spark: SparkSession, dir: String,
       asOf: Option[String] = None): Seq[String] = {
-    require(!hasDeltaCommits(spark, dir),
-      s"$dir carries .deltacommit instants — a MERGE_ON_READ table whose " +
-        "file slices include log blocks; the base-file-only API would " +
-        "return stale rows — read through readHoodieTable (MOR merge)")
-    val completed = completedInstants(spark, dir)
-      .filter(ts => asOf.forall(ts <= _)).toSet
+    val (completed, mor) = timeline(spark, dir)
+    require(!mor, s"$dir carries .deltacommit instants — a MERGE_ON_READ table whose " +
+      "file slices include log blocks; the base-file-only API would " +
+      "return stale rows — read through readHoodieTable (MOR merge)")
+    liveFilesOf(spark, dir, completed, asOf)
+  }
+
+  private def liveFilesOf(spark: SparkSession, dir: String, instants: Seq[String],
+      asOf: Option[String]): Seq[String] = {
+    val completed = instants.filter(ts => asOf.forall(ts <= _)).toSet
     require(completed.nonEmpty, s"no completed commits at $dir" +
       asOf.map(v => s" at or before instant $v").getOrElse(""))
     val (bases, logs, others) = fileSlices(spark, dir, completed)
@@ -138,9 +140,11 @@ object HudiCompat {
     * CoW fast path when the timeline holds only full commits, the MOR
     * merge when `.deltacommit` instants are present. */
   def readHoodieTable(spark: SparkSession, dir: String,
-      asOf: Option[String] = None): DataFrame =
-    if (hasDeltaCommits(spark, dir)) readMorSnapshot(spark, dir, asOf)
-    else TableIO.readFilesFooter(spark, liveFiles(spark, dir, asOf))
+      asOf: Option[String] = None): DataFrame = {
+    val (completed, mor) = timeline(spark, dir)
+    if (mor) morSnapshot(spark, dir, completed, asOf, None, keepInstant = false)
+    else TableIO.readFilesFooter(spark, liveFilesOf(spark, dir, completed, asOf))
+  }
 
   /** MERGE-ON-READ snapshot: per file group, the latest completed base
     * file merged with its attached log blocks — the newest version of
@@ -158,16 +162,17 @@ object HudiCompat {
     * record key comes from `hoodie.properties`
     * (`hoodie.table.recordkey.fields`) or the `recordKeyField`
     * override; composite keys refuse loudly. */
-  def readMorSnapshot(spark: SparkSession, dir: String,
-      asOf: Option[String] = None,
-      recordKeyField: Option[String] = None,
-      keepInstant: Boolean = false): DataFrame = {
+  def readMorSnapshot(spark: SparkSession, dir: String, asOf: Option[String] = None,
+      recordKeyField: Option[String] = None, keepInstant: Boolean = false): DataFrame =
+    morSnapshot(spark, dir, completedInstants(spark, dir), asOf, recordKeyField, keepInstant)
+
+  private def morSnapshot(spark: SparkSession, dir: String, instants: Seq[String],
+      asOf: Option[String], recordKeyField: Option[String], keepInstant: Boolean): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
-    val completed = completedInstants(spark, dir)
-      .filter(ts => asOf.forall(ts <= _)).toSet
+    val completed = instants.filter(ts => asOf.forall(ts <= _)).toSet
     require(completed.nonEmpty, s"no completed instants at $dir" +
       asOf.map(v => s" at or before instant $v").getOrElse(""))
     val (bases, logs, _) = fileSlices(spark, dir, completed)
@@ -328,23 +333,6 @@ object HudiCompat {
       path, instant, targetInstant)
   }
 
-  /** Fixture: the deltacommit twins of [[beginCommit]]/[[completeCommit]]. */
-  def beginDeltaCommit(spark: SparkSession, dir: String, instant: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new Path(s"$dir/.hoodie"))
-    Seq(s"$instant.deltacommit.requested", s"$instant.deltacommit.inflight")
-      .foreach { n =>
-        val out = fs.create(new Path(s"$dir/.hoodie/$n"), true)
-        try out.write(Array.emptyByteArray) finally out.close()
-      }
-  }
-
-  def completeDeltaCommit(spark: SparkSession, dir: String, instant: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(s"$dir/.hoodie/$instant.deltacommit"), true)
-    try out.write("{}".getBytes("UTF-8")) finally out.close()
-  }
-
   /** INCREMENTAL QUERY (Hudi's flagship consumption mode, file-slice
     * granularity): the LIVE base files whose instant is AFTER
     * `sinceInstant` — i.e. the file groups created or rewritten since
@@ -355,15 +343,11 @@ object HudiCompat {
     * column real Hudi writers embed — out of scope for foreign files
     * that lack it. */
   def incrementalFiles(spark: SparkSession, dir: String,
-      sinceInstant: String): Seq[String] = {
-    val all = liveFiles(spark, dir)
-    all.filter { p =>
-      new Path(p).getName match {
-        case BaseFile(_, _, instant) => instant > sinceInstant
-        case _ => false
-      }
-    }
-  }
+      sinceInstant: String): Seq[String] =
+    liveFiles(spark, dir).filter(p => new Path(p).getName match {
+      case BaseFile(_, _, instant) => instant > sinceInstant
+      case _ => false
+    })
 
   /** Read the file groups created/rewritten after `sinceInstant`. */
   def readIncremental(spark: SparkSession, dir: String,
@@ -420,21 +404,33 @@ object HudiCompat {
     TableIO.stageFile(df, dir, name)
   }
 
-  /** Mark `instant` requested+inflight (the writer-side breadcrumbs a
-    * reader must ignore until completion). */
-  def beginCommit(spark: SparkSession, dir: String, instant: String): Unit = {
+  /** Fixture: mark `instant` requested+inflight (the writer-side
+    * breadcrumbs a reader must ignore until completion), then complete
+    * it: the atomic visibility flip, published through
+    * [[TableIO.commitFile]], so an instant completes once and a second
+    * completion fails. The deltacommit twins mark MOR log appends. */
+  def beginCommit(spark: SparkSession, dir: String, instant: String): Unit =
+    begin(spark, dir, s"$instant.commit")
+  def completeCommit(spark: SparkSession, dir: String, instant: String): Unit =
+    complete(spark, dir, s"$instant.commit")
+  def beginDeltaCommit(spark: SparkSession, dir: String, instant: String): Unit =
+    begin(spark, dir, s"$instant.deltacommit")
+  def completeDeltaCommit(spark: SparkSession, dir: String, instant: String): Unit =
+    complete(spark, dir, s"$instant.deltacommit")
+
+  private def begin(spark: SparkSession, dir: String, action: String): Unit = {
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.mkdirs(new Path(s"$dir/.hoodie"))
-    Seq(s"$instant.commit.requested", s"$instant.commit.inflight").foreach { n =>
-      val out = fs.create(new Path(s"$dir/.hoodie/$n"), true)
+    Seq("requested", "inflight").foreach { state =>
+      val out = fs.create(new Path(s"$dir/.hoodie/$action.$state"), true)
       try out.write(Array.emptyByteArray) finally out.close()
     }
   }
 
-  /** Complete `instant`: the atomic visibility flip. */
-  def completeCommit(spark: SparkSession, dir: String, instant: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(s"$dir/.hoodie/$instant.commit"), true)
-    try out.write("{}".getBytes("UTF-8")) finally out.close()
+  private def complete(spark: SparkSession, dir: String, action: String): Unit = {
+    val target = new Path(s"$dir/.hoodie/$action")
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(TableIO.commitFile(fs, target, "{}".getBytes("UTF-8")),
+      s"Hudi instant $target is already complete")
   }
 }

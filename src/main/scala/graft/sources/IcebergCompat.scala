@@ -121,16 +121,16 @@ object IcebergCompat {
           .getOrElse(root.path("schema")))
     } else root.path("schema")
 
-  /** Commit metadata version `version` of the table at `dir`: write
-    * `vN.metadata.json` exclusively (an existing version fails the
-    * call and is left untouched), then point `version-hint.text` at it.
-    * The one metadata commit behind [[createIcebergTable]],
+  /** Commit metadata version `version` of the table at `dir`: publish
+    * `vN.metadata.json` via [[TableIO.commitFile]] (an existing version
+    * fails the call and is left untouched), then point `version-hint.text`
+    * at it. The one metadata commit behind [[createIcebergTable]],
     * [[appendSnapshot]], [[expireSnapshots]] and [[writeMetadata]]. */
   private def commitMetadata(spark: SparkSession, dir: String, version: Int,
       json: Array[Byte]): Unit = {
     val fs = fsFor(spark, dir)
-    val out = fs.create(new Path(s"$dir/metadata/v$version.metadata.json"), false)
-    try out.write(json) finally out.close()
+    val target = new Path(s"$dir/metadata/v$version.metadata.json")
+    require(TableIO.commitFile(fs, target, json), s"Iceberg metadata $target already exists")
     val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
     try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
   }

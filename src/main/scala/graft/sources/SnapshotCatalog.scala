@@ -11,9 +11,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * commits, and a reader joins NEW orders against OLD customers. Under
   * a catalog commit the reader resolves BOTH tables from one catalog
   * version, so it sees the pre-state or the post-state, never a mix —
-  * Nessie/Iceberg-catalog semantics from the same two filesystem
-  * primitives the table layer already relies on (dot-temp write +
-  * atomic rename to a fresh name).
+  * Nessie/Iceberg-catalog semantics from the commit primitive the table
+  * layer already relies on ([[TableIO.commitFile]]: dot-temp write +
+  * atomic create-exclusive publish of a fresh name).
   *
   * Layout under the catalog root:
   * {{{
@@ -75,15 +75,9 @@ object SnapshotCatalog {
     val body = tables.toSeq.sortBy(_._1)
       .map { case (n, (r, id)) => s"$n\t$r\t$id" }
       .mkString("", "\n", "\n")
-    val tmp = new Path(rootPath, s".cat-${fmt(next)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
     val dst = new Path(rootPath, CatPrefix + fmt(next))
-    require(fs.rename(tmp, dst), s"catalog commit failed: $tmp -> $dst")
-    val cur = currentVersion(spark, catRoot)
-    require(cur == next,
-      s"concurrent catalog commit detected at $catRoot ($cur vs $next) — " +
-        "catalogs take a single committer")
+    require(TableIO.commitFile(fs, dst, body.getBytes("UTF-8")),
+      s"catalog version $dst already exists — catalogs take a single committer")
     next
   }
 

@@ -32,18 +32,15 @@ import scala.jdk.CollectionConverters._
   * nothing is ever rewritten by an append.
   *
   * Protocol (single committer; readers unlimited):
-  *  - COMMIT: write parquet into a fresh `snap-N` dir, write the
-  *    manifest content to a dot-temp, then RENAME it to `_manifest-N`.
-  *    The rename is the commit point: one metadata operation creating a
-  *    NEW name — never a rename over the live path, so there is no
-  *    instant where the table is unreadable. A crash before the rename
+  *  - COMMIT: write parquet into a fresh `snap-N` dir, then publish
+  *    `_manifest-N` through [[TableIO.commitFile]] (dot-temp write, then
+  *    one create-exclusive name operation). The publish is the commit
+  *    point: one metadata operation creating a NEW name — never a rename
+  *    over the live path, so there is no instant where the table is
+  *    unreadable, and a second committer racing for N fails instead of
+  *    replacing the winner's manifest. A crash before the publish
   *    leaves an orphan data dir no manifest references: invisible to
-  *    readers, reclaimed by [[vacuum]]. After the rename the committer
-  *    reads the pointer set back and verifies its own id is current — a
-  *    cheap lost-update detector for the documented single-committer
-  *    contract (true multi-writer CAS needs a catalog or lock service
-  *    the filesystem does not provide; same position as Iceberg's
-  *    HadoopTableOperations).
+  *    readers, reclaimed by [[vacuum]].
   *  - READ: list `_manifest-*`, take the max sequence, read its dir
   *    list, scan those dirs. Listing sees either the old manifest set
   *    or old+new — both are complete, committed states. Data dirs are
@@ -73,8 +70,8 @@ import scala.jdk.CollectionConverters._
   *    transition).
   *  - MULTI-WRITER APPEND: [[appendConcurrent]] is the optimistic-
   *    concurrency variant — nonce-named delta dir + a compare-and-swap
-  *    manifest publish ([[casManifest]]: hard-link create-exclusive on
-  *    local filesystems, no-overwrite rename on HDFS); a lost race
+  *    manifest publish ([[TableIO.commitFile]]: hard-link create-exclusive
+  *    on local filesystems, no-overwrite rename on HDFS); a lost race
   *    costs one re-read + one dir rename + one retry, never a data
   *    rewrite.
   *  - VACUUM: drop all but the newest `keepLast` snapshots' manifests,
@@ -87,7 +84,7 @@ import scala.jdk.CollectionConverters._
   *    stated here explicitly.
   *
   * 100 TB posture: the pointer flip costs one small-file write + one
-  * metadata rename regardless of table size; appends touch only the
+  * metadata link or rename regardless of table size; appends touch only the
   * delta; compaction/re-clustering rewrite data into the NEXT snapshot
   * while readers keep scanning the current one — maintenance never
   * takes the table offline and never races a reader. Reference anchor:
@@ -246,24 +243,19 @@ object SnapshotTable {
     }.reduce((a, b) => a.unionByName(b, allowMissingColumns = mergeSchema))
   }
 
-  /** The commit point: write the manifest body to a dot-temp (hidden
-    * from parquet listings), rename to `_manifest-N` — one metadata op
-    * creating a NEW name, never touching the live pointer set. */
+  /** The commit point: publish `_manifest-N` through
+    * [[TableIO.commitFile]] — one create-exclusive metadata op making a
+    * NEW name visible with its whole content, never touching the live
+    * pointer set. A taken N (a second committer) fails the call and
+    * leaves the winner's manifest as it was. */
   private def commitManifest(spark: SparkSession, root: String, next: Long,
       dirs: Seq[String], meta: Seq[String] = Nil): Long = {
     require(meta.forall(_.startsWith("#")), "manifest metadata lines start with #")
     val (fs, rootPath) = fsFor(spark, root)
-    val tmp = new Path(rootPath, s".manifest-${fmt(next)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write((dirs ++ meta).mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
     val manifest = new Path(rootPath, ManifestPrefix + fmt(next))
-    require(fs.rename(tmp, manifest), s"snapshot commit failed: $tmp -> $manifest")
-    // lost-update detector for the single-committer contract
-    val cur = currentSnapshot(spark, root)
-    require(cur == next,
-      s"concurrent commit detected at $root: committed $next but current is " +
-        s"$cur — snapshot commits require a single committer per table")
+    val body = (dirs ++ meta).mkString("", "\n", "\n").getBytes("UTF-8")
+    require(TableIO.commitFile(fs, manifest, body), s"snapshot $manifest already " +
+      "exists — snapshot commits require a single committer per table")
     next
   }
 
@@ -707,48 +699,13 @@ object SnapshotTable {
     }
   }
 
-  /** Atomic compare-and-swap publish of `_manifest-next`: true iff THIS
-    * writer created the manifest (false = another writer committed
-    * `next` first). The manifest body is fully written to a dot-temp
-    * first, then published by one atomic name-creation op, so readers
-    * never see a partial manifest:
-    *  - `file:` scheme — a hard link ([[java.nio.file.Files.createLink]]),
-    *    which is create-exclusive by POSIX contract (EEXIST if the name
-    *    already exists) — the local-filesystem CAS a plain rename cannot
-    *    provide (rename(2) silently replaces an existing destination);
-    *  - other schemes — `fs.rename`, which HDFS specifies to FAIL when
-    *    the destination exists (the same primitive Iceberg's
-    *    HadoopTableOperations relies on). */
-  private def casManifest(fs: FileSystem, rootPath: Path, next: Long,
-      dirs: Seq[String], nonce: String): Boolean = {
-    val tmp = new Path(rootPath, s".manifest-${fmt(next)}-$nonce.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(dirs.mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    val dst = new Path(rootPath, ManifestPrefix + fmt(next))
-    val won =
-      if ("file" == rootPath.toUri.getScheme || fs.getScheme == "file") {
-        val base = fs.makeQualified(rootPath).toUri.getPath
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(base, dst.getName),
-            java.nio.file.Paths.get(base, tmp.getName))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-        }
-      } else !fs.exists(dst) && fs.rename(tmp, dst)
-    fs.delete(tmp, false) // hard-linked content survives when we won
-    won
-  }
-
   /** OPTIMISTIC-CONCURRENCY APPEND: the multi-writer variant of
     * [[append]]. The delta is written ONCE into a nonce-named immutable
     * dir; the commit loop then re-reads the current manifest, re-points
     * the dir name at the next sequence (one directory rename — metadata
     * only, the parquet is never rewritten), and attempts the
-    * [[casManifest]] CAS. Losing a race costs one re-read + one rename +
-    * one retry; appends by different writers never conflict logically
+    * [[TableIO.commitFile]] CAS. Losing a race costs one re-read + one
+    * rename + one retry; appends by different writers never conflict logically
     * (each lists `winner's dirs + its own dir`), so every attempt that
     * finds the CAS free commits a CONSISTENT successor — the classic
     * Iceberg retry loop. Concurrent appenders are safe among themselves
@@ -779,7 +736,8 @@ object SnapshotTable {
         dirName = renamed
         id = next
       }
-      if (casManifest(fs, rootPath, id, prior :+ dirName, nonce)) return id
+      val body = (prior :+ dirName).mkString("", "\n", "\n").getBytes("UTF-8")
+      if (TableIO.commitFile(fs, new Path(rootPath, ManifestPrefix + fmt(id)), body)) return id
       attempt += 1
     }
     throw new IllegalStateException(
@@ -1284,8 +1242,8 @@ object SnapshotTable {
     * committed). A tagged snapshot is pinned: [[vacuum]] retains it
     * beyond the `keepLast` window until [[dropTag]] releases it — the
     * Iceberg tag/retention contract (release audits, reproducibility
-    * pins, rollback anchors). Same dot-temp → rename discipline as the
-    * manifests; moving an existing tag deletes the old ref first
+    * pins, rollback anchors). The ref is written to a dot-temp and
+    * renamed into place; moving an existing tag deletes the old ref first
     * (single-committer contract, as for commits). */
   def tag(spark: SparkSession, root: String, name: String, id: Long): Unit = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
@@ -1435,12 +1393,12 @@ object SnapshotTable {
         "fast-forward merge needs every inherited dir still live; use a " +
         "keyed upsert for diverged lineages")
     val next = mainCur + 1
-    // The renames happen BEFORE the (non-CAS) manifest commit, so a
+    // The renames happen BEFORE the manifest commit, so a
     // failure anywhere in this window would leave the branch manifest
     // pointing at renamed-away dirs — unreadable, with the dirs orphaned
     // until vacuum. Track completed renames and ROLL THEM BACK on any
-    // failure (a later rename error, or commitManifest's concurrent-
-    // commit require): the branch stays readable and retryable.
+    // failure (a later rename error, or commitManifest's taken-version
+    // require): the branch stays readable and retryable.
     val done = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     val id = try {
       val renamed = branchOnly.zipWithIndex.map { case (dn, i) =>
@@ -1531,7 +1489,7 @@ object SnapshotTable {
         (name.startsWith(SnapPrefix) || name.startsWith(DelPrefix)) &&
         !keptDirs.contains(name)
       val staleTmp = !st.isDirectory && name.endsWith(".tmp") &&
-        (name.startsWith(".manifest-") || name.startsWith(".ref-"))
+        (name.startsWith("." + ManifestPrefix) || name.startsWith(".ref-"))
       if (deadSnap || staleTmp) fs.delete(st.getPath, true)
     }
     removed

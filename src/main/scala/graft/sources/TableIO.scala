@@ -90,6 +90,49 @@ object TableIO {
     finally in.close()
   }
 
+  /** THE COMMIT POINT of every lake log: publish `bytes` under `target`
+    * only if no file has that name yet, and return whether this call
+    * published it. The bytes go to a dot-temp in the target's dir
+    * (`.<name>.<uuid>.tmp`, unique per call, hidden from data listings)
+    * and are fully written and closed before one atomic, create-exclusive
+    * name operation makes them visible, so a reader never sees a partial
+    * file and a write that fails (in `close` too) publishes nothing. The
+    * temp is deleted in a `finally`, whatever the outcome.
+    *  - `file:` — a hard link ([[java.nio.file.Files.createLink]]), which
+    *    fails with EEXIST when the name exists; rename(2) would silently
+    *    replace it, and whether Hadoop's local `rename` refuses an
+    *    existing target depends on the `FileSystem` class;
+    *  - other schemes — `rename` of the temp when the target is absent,
+    *    which HDFS specifies to fail on an existing destination (the
+    *    primitive Iceberg's HadoopTableOperations relies on).
+    * Callers: `SnapshotTable`'s `_manifest-N` (every single-committer
+    * commit, and `appendConcurrent`, whose retry loop acts on a loss),
+    * `SnapshotCatalog`'s `_cat-N`, `DeltaCompat.writeCommit`'s
+    * `_delta_log/<v>.json`, `IcebergCompat`'s `vN.metadata.json` and
+    * `HudiCompat`'s completed instants. The single-committer callers
+    * `require` the win with a message naming the target. Pointer files
+    * replaced in place (`version-hint.text`, `_last_checkpoint`,
+    * `_ref-*` tags) are not commits of this kind. */
+  def commitFile(fs: org.apache.hadoop.fs.FileSystem,
+      target: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Boolean = {
+    val tmp = new org.apache.hadoop.fs.Path(target.getParent,
+      s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      val out = fs.create(tmp, false)
+      try out.write(bytes) finally out.close()
+      if ("file" == target.toUri.getScheme || fs.getScheme == "file")
+        try {
+          java.nio.file.Files.createLink(
+            java.nio.file.Paths.get(fs.makeQualified(target).toUri.getPath),
+            java.nio.file.Paths.get(fs.makeQualified(tmp).toUri.getPath))
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+        }
+      else !fs.exists(target) && fs.rename(tmp, target)
+    } finally fs.delete(tmp, false) // a linked target keeps its content
+  }
+
   def readTable(spark: SparkSession, name: String): DataFrame = spark.read.table(name)
 
   def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
@@ -487,8 +530,9 @@ object TableIO {
       val parts = fs.listStatus(tmp)
         .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
       require(parts.nonEmpty, s"staged write at $tmp produced no parquet part")
-      publish(fs, hconf, dir,
-        parts.toIndexedSeq.zipWithIndex.map { case (st, i) => st -> name(i, parts.length) })
+      val named = parts.indices.map(i => name(i, parts.length) -> footerRows(hconf, parts(i)))
+      publish(fs, dir, parts.toIndexedSeq.map(_.getPath).zip(named.map(_._1)))
+      named
     } finally fs.delete(tmp, true)
   }
 
@@ -502,25 +546,21 @@ object TableIO {
       name
     }.head._2
 
-  /** The rename-and-count tail shared by [[stageFiles]] and
-    * [[writePartFiles]]: every target is checked absent before the
-    * first rename, then each staged file's footer is counted from its
-    * listed status and the file moves to `dir/<name>`. `DeltaCompat`'s
-    * partitioned publish uses it too. */
-  private[sources] def publish(fs: org.apache.hadoop.fs.FileSystem,
-      hconf: org.apache.hadoop.conf.Configuration, dir: String,
-      moves: IndexedSeq[(org.apache.hadoop.fs.FileStatus, String)])
-      : IndexedSeq[(String, Long)] = {
-    val targets = moves.map { case (st, name) =>
+  /** The rename tail shared by [[stageFiles]], [[writePartFiles]] and
+    * `DeltaCompat`'s partitioned publish: every target is checked absent
+    * before the first rename, then each staged file moves to
+    * `dir/<name>`. It reads no footer; callers that return row counts
+    * count the staged files themselves. */
+  private[sources] def publish(fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      moves: IndexedSeq[(org.apache.hadoop.fs.Path, String)]): Unit = {
+    val targets = moves.map { case (src, name) =>
       val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
-      require(!fs.exists(dst), s"cannot move ${st.getPath} -> $dst: target exists")
-      (st, name, dst)
+      require(!fs.exists(dst), s"cannot move $src -> $dst: target exists")
+      src -> dst
     }
-    targets.map { case (st, name, dst) =>
-      val rows = footerRows(hconf, st)
+    targets.foreach { case (src, dst) =>
       fs.mkdirs(dst.getParent)
-      require(fs.rename(st.getPath, dst), s"rename ${st.getPath} -> $dst failed")
-      (name, rows)
+      require(fs.rename(src, dst), s"rename $src -> $dst failed")
     }
   }
 
@@ -536,7 +576,7 @@ object TableIO {
     * partition key. `sortCols` pins the physical row order within each
     * file (for position-addressed fixtures: deletion vectors / Iceberg
     * position deletes). Files land as `dir/<namer(m)>` through
-    * [[stageFiles]]' rename-and-count tail (an existing target fails).
+    * [[stageFiles]]' rename tail (an existing target fails).
     * Returns (fileName, rowCount) indexed by part value — footer
     * counts, so callers needing them pay no count() job. */
   def writePartFiles(df: DataFrame, dir: String, partCol: String, nParts: Int,
@@ -557,15 +597,18 @@ object TableIO {
       else keyed.sortWithinPartitions((wp +: sortCols).map(c => col(s"`$c`")): _*)
     try {
       ordered.write.partitionBy(wp).mode(SaveMode.Overwrite).parquet(tmp.toString)
-      publish(fs, hconf, dir, (0 until nParts).map { m =>
+      val files = (0 until nParts).map { m =>
         val pdir = new org.apache.hadoop.fs.Path(tmp, s"$wp=$m")
         require(fs.exists(pdir),
           s"part $m of $partCol has no rows — the fixture expects every part populated")
         val parts = fs.listStatus(pdir).filter(_.getPath.getName.endsWith(".parquet"))
         require(parts.length == 1,
           s"expected exactly one file for part $m, got ${parts.length}")
-        parts.head -> namer(m)
-      })
+        parts.head
+      }
+      val named = files.indices.map(m => namer(m) -> footerRows(hconf, files(m)))
+      publish(fs, dir, files.map(_.getPath).zip(named.map(_._1)))
+      named
     } finally fs.delete(tmp, true)
   }
 

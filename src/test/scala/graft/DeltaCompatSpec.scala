@@ -267,9 +267,10 @@ class DeltaCompatSpec extends SparkSpec {
     assert(new String(first, "UTF-8") ==
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""" + "\n" +
         """{"commitInfo":{"operation":"FIRST"}}""" + "\n")
-    intercept[java.io.IOException] {
+    val e = intercept[IllegalArgumentException] {
       DeltaCompat.writeCommit(fs, dir, 0L, Seq("""{"commitInfo":{"operation":"SECOND"}}"""))
     }
+    assert(e.getMessage.contains("_delta_log/00000000000000000000.json"), e.getMessage)
     assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(path), first))
   }
 
@@ -337,6 +338,20 @@ class DeltaCompatSpec extends SparkSpec {
     assert(merge() == 1L)
     assert(DeltaCompat.readDeltaTable(spark, dir).as[(Long, String)].collect().toSet
       == Set((1L, "a"), (2L, "B!"), (9L, "new")))
+  }
+
+  test("a Delta commit that fails in close publishes nothing; a retry lands the same version") {
+    val (dir, _) = failingTable()
+    assert(DeltaCompat.createDeltaTable(Seq((1L, "a")).toDF("id", "v"), dir) == 0L)
+    val more = Seq((2L, "b")).toDF("id", "v")
+    val e = FailingFs.failingOnClose(_.contains("/_delta_log/")) {
+      intercept[Exception](DeltaCompat.appendToDeltaTable(more, dir))
+    }
+    assert(FailingFs.injected(e), s"got $e")
+    assert(DeltaCompat.latestVersion(spark, dir) == 0L)
+    assert(DeltaCompat.appendToDeltaTable(more, dir) == 1L)
+    assert(DeltaCompat.readDeltaTable(spark, dir).as[(Long, String)].collect().toSet
+      == Set((1L, "a"), (2L, "b")))
   }
 
   /** A table whose commit 1 adds column `w`: commit 0 declares (id, v)
@@ -408,7 +423,9 @@ class DeltaCompatSpec extends SparkSpec {
 /** The local filesystem under the `failfs` scheme, failing every file
   * create and rename whose target path matches the predicate set by
   * [[FailingFs.failingOn]]: a write that dies mid-flight, as on
-  * executor loss or a full disk. */
+  * executor loss or a full disk. [[FailingFs.failingOnClose]] instead
+  * lets a matching file's bytes land and fails its `close`, as a
+  * flush to a full disk does. */
 class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("failfs:///")
   override def getScheme: String = "failfs"
@@ -419,7 +436,15 @@ class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
       append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission)
       : java.io.OutputStream = {
     check(f)
-    super.createOutputStreamWithMode(f, append, permission)
+    val out = super.createOutputStreamWithMode(f, append, permission)
+    if (!FailingFs.failOnClose.get()(f.toString)) out
+    else new java.io.FilterOutputStream(out) {
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = out.write(b, off, len)
+      override def close(): Unit = {
+        super.close()
+        throw new java.io.IOException(s"injected failure at close of $f")
+      }
+    }
   }
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean = {
@@ -428,12 +453,26 @@ class FailingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   }
 }
 
+/** [[FailingFs]] reporting the `file` scheme under the `failfile` URI
+  * scheme, so that lake commits on it take the hard-link branch of
+  * [[graft.sources.TableIO.commitFile]]. */
+class FailingLinkFs extends FailingFs {
+  override def getUri: java.net.URI = java.net.URI.create("failfile:///")
+  override def getScheme: String = "file"
+}
+
 object FailingFs {
   private val failOn =
     new java.util.concurrent.atomic.AtomicReference[String => Boolean](_ => false)
-  def failingOn[T](pred: String => Boolean)(body: => T): T = {
-    failOn.set(pred)
-    try body finally failOn.set(_ => false)
+  private val failOnClose =
+    new java.util.concurrent.atomic.AtomicReference[String => Boolean](_ => false)
+  def failingOn[T](pred: String => Boolean)(body: => T): T = during(failOn, pred)(body)
+  def failingOnClose[T](pred: String => Boolean)(body: => T): T =
+    during(failOnClose, pred)(body)
+  private def during[T](ref: java.util.concurrent.atomic.AtomicReference[String => Boolean],
+      pred: String => Boolean)(body: => T): T = {
+    ref.set(pred)
+    try body finally ref.set(_ => false)
   }
   /** Whether `e` or one of its causes is a failure injected here. */
   def injected(e: Throwable): Boolean =

@@ -364,4 +364,20 @@ class IcebergCompatSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("at most one DV"))
   }
+
+  test("an Iceberg append whose metadata commit fails in close publishes nothing; a retry lands") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    val dir = "failfs://" + mkTable()
+    assert(IcebergCompat.createIcebergTable(Seq((1L, "a")).toDF("id", "v"), dir) == 1L)
+    val more = Seq((2L, "b")).toDF("id", "v")
+    val e = FailingFs.failingOnClose(_.contains(".metadata.json")) {
+      intercept[Exception](IcebergCompat.appendSnapshot(more, dir))
+    }
+    assert(FailingFs.injected(e), s"got $e")
+    assert(IcebergCompat.snapshotIds(spark, dir) == Seq(1L))
+    assert(IcebergCompat.appendSnapshot(more, dir) == 2L)
+    assert(IcebergCompat.readIcebergTable(spark, dir).as[(Long, String)].collect().toSet
+      == Set((1L, "a"), (2L, "b")))
+  }
 }

@@ -452,6 +452,39 @@ class TableIOSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/.tmp-again").exists())
   }
 
+  test("commitFile publishes a name once on the link and the rename branch, leaving no temp") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    conf.set("fs.failfile.impl", classOf[FailingLinkFs].getName)
+    // file: and failfile: (reported as `file`) link; failfs: renames
+    Seq("", "failfs://", "failfile://").foreach { scheme =>
+      val local = java.nio.file.Files.createTempDirectory("graft-commit").toString
+      def target(n: String) = new org.apache.hadoop.fs.Path(s"$scheme$local/log/$n")
+      val fs = target("v1").getFileSystem(conf)
+      def names = new java.io.File(s"$local/log").list().toSeq.sorted
+      def content(n: String) =
+        java.nio.file.Files.readString(java.nio.file.Paths.get(s"$local/log/$n"))
+      assert(TableIO.commitFile(fs, target("v1"), "first".getBytes("UTF-8")), scheme)
+      assert(!TableIO.commitFile(fs, target("v1"), "second".getBytes("UTF-8")), scheme)
+      assert(content("v1") == "first", scheme)
+      assert(names == Seq("v1"), scheme)
+      if (scheme.nonEmpty) {
+        // a failure creating the temp, closing it or (rename branch)
+        // publishing it: nothing published, no temp left
+        def lost() = intercept[Exception](
+          TableIO.commitFile(fs, target("v2"), "lost".getBytes("UTF-8")))
+        val errors = Seq(FailingFs.failingOn(_.contains("/log/"))(lost()),
+          FailingFs.failingOnClose(_.contains("/log/"))(lost())) ++
+          (if (scheme == "failfs://") Seq(FailingFs.failingOn(_.endsWith("/log/v2"))(lost()))
+           else Nil)
+        errors.foreach(e => assert(FailingFs.injected(e), s"$scheme: got $e"))
+        assert(names == Seq("v1"), scheme)
+        assert(TableIO.commitFile(fs, target("v2"), "retry".getBytes("UTF-8")), scheme)
+        assert(content("v2") == "retry" && names == Seq("v1", "v2"), scheme)
+      }
+    }
+  }
+
   test("listFilesRecursive prunes only the named dirs, descends hive dirs, sorts by path") {
     val dir = java.nio.file.Files.createTempDirectory("graft-walk").toString
     val files = Seq("b.parquet", "a/z.txt", "a.txt", "k=1/x.parquet", "k=1/j=2/y.parquet",
