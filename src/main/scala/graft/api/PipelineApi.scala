@@ -3,28 +3,35 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audit.Audit
-import graft.transform.{CleanColumns, CleanRows, MergeTableVersions, SensitiveTier}
+import graft.transform.{Clause, CleanColumns, CleanRows, MergeTableVersions, SensitiveTier}
 
 /** Thin service facade mirroring the reference's five REST endpoints
   * (`/root/reference/core/endpoints.py`): heartbeat, clean_columns,
   * clean_rows, merge_table_versions, create_sensitive_tier. The reference
   * binds them to Flask + BigQuery CTAS; here each is
-  * read-parquet → transform → audit plan → overwrite-parquet, returning
-  * the same status JSON shape. A `tableId` (e.g.
-  * "FlatConnect.module1_v2_JP") selects per-table rename/transform config
-  * exactly as the reference's fully-qualified table name does. */
+  * read-parquet → plan one clause list → archive its SQL and the Spark
+  * plan → overwrite-parquet, returning the same status JSON shape. A
+  * `tableId` (e.g. "FlatConnect.module1_v2_JP") selects per-table
+  * rename/transform config exactly as the reference's fully-qualified
+  * table name does. */
 object PipelineApi {
 
   final case class Result(status: String, submittedSqlPath: String)
 
-  /** B28: request validation — both names must be present (the reference
-    * returns 400; we throw, the service layer maps it).
+  /** A request without a source or a destination: the reference's 400
+    * (`core/request_helpers.py:11`). */
+  final class MissingParameters extends IllegalArgumentException(
+    "Missing required parameter(s): 'source' and/or 'destination'.")
+
+  /** B28: request validation, the one decision of what is missing. The
+    * source is one name or a non-empty list of names (merge); it and the
+    * destination must be present and non-empty, else [[MissingParameters]].
     * Ref: `core/request_helpers.py:3-12`. */
-  def extractSourceAndDestination(source: Option[String], dest: Option[String]): (String, String) =
+  def extractSourceAndDestination(source: Option[Any], dest: Option[Any]): (Seq[String], String) =
     (source, dest) match {
-      case (Some(s), Some(d)) if s.nonEmpty && d.nonEmpty => (s, d)
-      case _ => throw new IllegalArgumentException(
-        "Both 'source_table' and 'destination_table' must be provided.")
+      case (Some(s: String), Some(d: String)) if s.nonEmpty && d.nonEmpty => (Seq(s), d)
+      case (Some(s: Seq[_]), Some(d: String)) if s.nonEmpty && d.nonEmpty => (s.map(_.toString), d)
+      case _ => throw new MissingParameters
     }
 
   /** Ref: `core/endpoints.py:11-18`. */
@@ -33,33 +40,35 @@ object PipelineApi {
     "service" -> service,
     "timestamp" -> java.time.Instant.now().toString)
 
-  private def materialize(df: DataFrame, dest: String, auditDir: String): Result = {
-    val planPath = s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}.plan.txt"
-    Audit.savePlan(df, planPath)
-    df.write.mode("overwrite").parquet(dest)
-    Result(s"Table $dest successfully created with all transformations applied", planPath)
+  /** The FROM name of a parquet path, so the archived SQL runs as-is. */
+  private def parquetTable(path: String): String = s"parquet.`${path.replace("`", "``")}`"
+
+  /** Every endpoint's body: archive the SQL of `clauses` over `from`, then
+    * the plan of the same clauses selected from `input`, then write it. */
+  private def materialize(input: DataFrame, clauses: Seq[Clause], source: String, from: String,
+      dest: String, auditDir: String): Result = {
+    val base = s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}"
+    Audit.saveText(Clause.sql(clauses, source, dest, from), s"$base.sql")
+    val out = input.select(clauses.map(_.aliased): _*)
+    Audit.savePlan(out, s"$base.plan.txt")
+    out.write.mode("overwrite").parquet(dest)
+    Result(s"Table $dest successfully created with all transformations applied", s"$base.plan.txt")
   }
 
-  /** Ref: `core/endpoints.py:20-35` → process_columns. Archives both the
-    * generated SQL text (the reference's audit artifact) and the Spark
-    * plan before writing. */
+  /** Ref: `core/endpoints.py:20-35` → process_columns. */
   def cleanColumns(spark: SparkSession, source: String, dest: String,
       tableId: String = "", auditDir: String = "/tmp/graft-audit"): Result = {
     val df = spark.read.parquet(source)
-    Audit.saveText(
-      CleanColumns.toSql(df.schema.fieldNames.toSeq, tableId, source, dest),
-      s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}.sql")
-    materialize(CleanColumns(df, tableId), dest, auditDir)
+    materialize(df, CleanColumns.plan(df.schema.fieldNames.toSeq, tableId),
+      source, parquetTable(source), dest, auditDir)
   }
 
   /** Ref: `core/endpoints.py:37-52` → process_rows. */
   def cleanRows(spark: SparkSession, source: String, dest: String,
       useReference: Boolean = true, auditDir: String = "/tmp/graft-audit"): Result = {
     val df = spark.read.parquet(source)
-    val cls = CleanRows.classify(df, useReference)
-    Audit.saveText(CleanRows.toSql(cls, source, dest),
-      s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}.sql")
-    materialize(CleanRows(df, cls), dest, auditDir)
+    materialize(df, CleanRows.plan(CleanRows.classify(df, useReference)),
+      source, parquetTable(source), dest, auditDir)
   }
 
   /** Ref: `core/endpoints.py:54-69` → merge_table_versions. Requires >= 2
@@ -68,11 +77,15 @@ object PipelineApi {
       auditDir: String = "/tmp/graft-audit"): Result = {
     require(sources.size >= 2,
       "A destination table and at least two source tables must be provided.")
-    materialize(MergeTableVersions(sources.map(spark.read.parquet(_))), dest, auditDir)
+    val dfs = sources.map(spark.read.parquet(_))
+    val p = MergeTableVersions.plan(dfs.map(_.schema.fieldNames.toSeq))
+    materialize(MergeTableVersions.joined(p, dfs), p.clauses, sources.mkString(", "),
+      MergeTableVersions.from(p, sources.map(parquetTable)), dest, auditDir)
   }
 
   /** Ref: `core/endpoints.py:72-87` → create_sensitive_tier. */
   def createSensitiveTier(spark: SparkSession, source: String, dest: String,
       auditDir: String = "/tmp/graft-audit"): Result =
-    materialize(SensitiveTier(spark.read.parquet(source)), dest, auditDir)
+    materialize(spark.read.parquet(source), SensitiveTier.clauses,
+      source, parquetTable(source), dest, auditDir)
 }

@@ -23,7 +23,8 @@ import org.apache.spark.sql.SparkSession
   *    `POST /merge_table_versions` with `"source"` as a LIST of paths —
   *    each → 200 `{"status": <transform status>, "timestamp", "service"}`
   *  - missing/empty source or destination → 400 with the reference's
-  *    description text (`core/request_helpers.py:11`)
+  *    description text (`core/request_helpers.py:11`), decided by
+  *    [[PipelineApi.extractSourceAndDestination]] alone
   *  - any transform failure → 500 `{"error":"Internal Server Error",
   *    "message": <exception>}` (`endpoints.py:35`)
   *
@@ -64,65 +65,57 @@ final class PipelineServer(spark: SparkSession, port: Int = 0,
       "timestamp" -> java.time.Instant.now().toString,
       "service" -> serviceName))
 
-  /** The reference's request_helpers.extract_source_and_destination 400. */
-  private val MissingParams =
-    "Missing required parameter(s): 'source' and/or 'destination'."
+  /** A POST route's call: (sources, destination, other request
+    * fields) → the endpoint's result. */
+  private type Route = (Seq[String], String, String => Option[String]) => PipelineApi.Result
 
-  private def handlePost(ex: HttpExchange)(run: java.util.Map[String, Object] => String): Unit = {
-    if (ex.getRequestMethod != "POST") { respond(ex, 405, json("error" -> "Method Not Allowed")) }
-    else {
+  private def single(sources: Seq[String]): String = {
+    require(sources.size == 1, s"expected one source table, got ${sources.size}")
+    sources.head
+  }
+
+  private val routes: Seq[(String, Route)] = Seq(
+    "/clean_columns" -> ((s, d, field) => PipelineApi.cleanColumns(spark, single(s), d,
+      tableId = field("table_id").getOrElse(""), auditDir = auditDir)),
+    "/clean_rows" -> ((s, d, field) => PipelineApi.cleanRows(spark, single(s), d,
+      useReference = field("use_reference").forall(_.toBoolean), auditDir = auditDir)),
+    "/merge_table_versions" -> ((s, d, _) =>
+      PipelineApi.mergeTableVersions(spark, s, d, auditDir = auditDir)),
+    "/create_sensitive_tier" -> ((s, d, _) =>
+      PipelineApi.createSensitiveTier(spark, single(s), d, auditDir = auditDir)))
+
+  /** One request path for every POST route: parse the body, take source
+    * and destination through [[PipelineApi.extractSourceAndDestination]]
+    * (400 when missing), then run the route (500 when it fails). */
+  private def handlePost(ex: HttpExchange, run: Route): Unit =
+    if (ex.getRequestMethod != "POST") respond(ex, 405, json("error" -> "Method Not Allowed"))
+    else try {
       val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       val mapping: java.util.Map[String, Object] =
         if (body.isEmpty) new java.util.HashMap()
         else mapper.readValue(body, classOf[java.util.Map[String, Object]])
-      val src = mapping.get("source")
-      val dst = mapping.get("destination")
-      val missing = src == null || dst == null ||
-        (src.isInstanceOf[String] && src.asInstanceOf[String].isEmpty) ||
-        (src.isInstanceOf[java.util.List[_]] && src.asInstanceOf[java.util.List[_]].isEmpty) ||
-        (dst.isInstanceOf[String] && dst.asInstanceOf[String].isEmpty)
-      if (missing) respond(ex, 400, json("error" -> "Bad Request", "message" -> MissingParams))
-      else try ok(ex, run(mapping))
-      catch {
-        case NonFatal(e) =>
-          respond(ex, 500, json("error" -> "Internal Server Error",
-            "message" -> String.valueOf(e.getMessage)))
+      def field(k: String): Option[Any] = Option(mapping.get(k)).map {
+        case l: java.util.List[_] => l.asScala.toSeq
+        case v => v
       }
+      val (sources, dest) =
+        PipelineApi.extractSourceAndDestination(field("source"), field("destination"))
+      ok(ex, run(sources, dest, k => field(k).map(_.toString)).status)
+    } catch {
+      case e: PipelineApi.MissingParameters =>
+        respond(ex, 400, json("error" -> "Bad Request", "message" -> e.getMessage))
+      case NonFatal(e) =>
+        respond(ex, 500, json("error" -> "Internal Server Error",
+          "message" -> String.valueOf(e.getMessage)))
     }
-  }
 
   server.createContext("/heartbeat", (ex: HttpExchange) =>
     if (ex.getRequestMethod == "GET") ok(ex, "healthy")
     else respond(ex, 405, json("error" -> "Method Not Allowed")))
 
-  server.createContext("/clean_columns", (ex: HttpExchange) => handlePost(ex) { m =>
-    PipelineApi.cleanColumns(spark, m.get("source").toString,
-      m.get("destination").toString,
-      tableId = Option(m.get("table_id")).map(_.toString).getOrElse(""),
-      auditDir = auditDir).status
-  })
-
-  server.createContext("/clean_rows", (ex: HttpExchange) => handlePost(ex) { m =>
-    PipelineApi.cleanRows(spark, m.get("source").toString,
-      m.get("destination").toString,
-      useReference = Option(m.get("use_reference"))
-        .forall(_.toString.toBoolean),
-      auditDir = auditDir).status
-  })
-
-  server.createContext("/merge_table_versions", (ex: HttpExchange) => handlePost(ex) { m =>
-    val sources = m.get("source") match {
-      case l: java.util.List[_] => l.asScala.map(_.toString).toSeq
-      case s => Seq(s.toString)
-    }
-    PipelineApi.mergeTableVersions(spark, sources,
-      m.get("destination").toString, auditDir = auditDir).status
-  })
-
-  server.createContext("/create_sensitive_tier", (ex: HttpExchange) => handlePost(ex) { m =>
-    PipelineApi.createSensitiveTier(spark, m.get("source").toString,
-      m.get("destination").toString, auditDir = auditDir).status
-  })
+  routes.foreach { case (path, run) =>
+    server.createContext(path, (ex: HttpExchange) => handlePost(ex, run))
+  }
 
   /** Binds and serves; returns the bound port (useful with port 0). */
   def start(): Int = { server.start(); server.getAddress.getPort }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.DataFrame
 
 /** Plan/SQL audit archiving: the reference persists every generated SQL
   * string before execution (`/root/reference/core/utils.py:54-89`,
-  * `core/transformations.py:624-631`). Our equivalent persists the
-  * analyzed + physical plan text of the DataFrame about to be written, so
-  * every materialization leaves a reviewable artifact. Local filesystem
+  * `core/transformations.py:624-631`). Every endpoint here persists its
+  * SQL (runnable with `spark.sql`) and the analyzed + physical plan text
+  * of the DataFrame about to be written. Local filesystem
   * here; on a cluster the same bytes would go through the Hadoop FS API
   * (s3a/gs connectors) — the call shape is identical. */
 object Audit {
@@ -23,13 +23,8 @@ object Audit {
 
   /** Archive a DataFrame's logical + physical plan before execution. */
   def savePlan(df: DataFrame, path: String): Unit = {
-    val text = new StringBuilder
-    text ++= "-- analyzed plan\n"
-    text ++= df.queryExecution.analyzed.toString
-    text ++= "\n-- optimized plan\n"
-    text ++= df.queryExecution.optimizedPlan.toString
-    text ++= "\n-- physical plan\n"
-    text ++= df.queryExecution.executedPlan.toString
-    saveText(text.toString, path)
+    val qe = df.queryExecution
+    saveText(s"-- analyzed plan\n${qe.analyzed}\n-- optimized plan\n${qe.optimizedPlan}" +
+      s"\n-- physical plan\n${qe.executedPlan}", path)
   }
 }

@@ -6,7 +6,6 @@ final case class TableRef(project: String, dataset: String, table: String) {
   /** The per-table config key the rename/transform maps use
     * (`dataset.table`, ref `core/transformations.py:195`). */
   def configKey: String = s"$dataset.$table"
-  def fullyQualified: String = s"$project.$dataset.$table"
 }
 
 object TableRef {

@@ -32,12 +32,6 @@ package object functions {
   def normalize_text_unicode(c: Column): Column = TextOps.normalizeUnicode(c)
   def word_tokens_unicode(c: Column): Column = TextOps.wordsUnicode(c)
 
-  // --- survey cleaning expressions
-  def binary_recode(colName: String): Column =
-    graft.transform.CleanRows.binaryRecodeExpr(colName)
-  def unwrap_singleton(colName: String): Column =
-    graft.transform.CleanRows.unwrapSingletonExpr(colName)
-
   // --- hashing
   /** Native codegen'd 64-bit md5 prefix ([[Md5Hash64]]) — the
     * engine-shared (oracle-recomputable) per-token hash. */

@@ -531,15 +531,9 @@ object TextOps {
     * with real line breaks would use `split(text, "\n")` as the unit
     * instead — every consumer below is agnostic to how the segment column
     * was produced. */
-  def wordSegments(c: Column, k: Int): Column =
-    wordSegmentsOf(words(c), k)
-
-  /** [[wordSegments]] over the Unicode tokenizer ([[wordsUnicode]]). */
-  def wordSegmentsUnicode(c: Column, k: Int): Column =
-    wordSegmentsOf(wordsUnicode(c), k)
-
-  private def wordSegmentsOf(w: Column, k: Int): Column = {
+  def wordSegments(c: Column, k: Int): Column = {
     require(k >= 1, "segment width must be >= 1")
+    val w = words(c)
     // ceil(size/k) in integer arithmetic; size >= 1 always (split of ""
     // yields [""]), so the sequence bound never descends below 0
     val nblocks = floor((size(w) + lit(k - 1)) / lit(k)).cast("int")

@@ -17,8 +17,8 @@ import graft.functions.binary_column_bits
   * buffer is an N-bit set, so planning and generated code do not grow with
   * the width, and at 100 TB it is one read of the table with only N-bit
   * partial buffers moving (Catalyst plans the partial aggregation
-  * map-side). Computational false-array detection melts batches of
-  * `batchSize` columns to (name, value) pairs, one job per batch.
+  * map-side). Computational false-array detection melts batches of 500
+  * columns to (name, value) pairs, one job per batch.
   */
 object Profiler {
 
@@ -76,18 +76,6 @@ object Profiler {
     pair.findAllMatchIn(body).map(m => (m.group(1), m.group(2))).toSeq
   }
 
-  /** B22: false-array detection over many tables at once (reference mode
-    * only needs schemas; computational mode scans each table).
-    * Ref: `get_false_array_columns_for_tables`, `core/utils.py:700-748`. */
-  def falseArrayColumnsForTables(
-      tables: Map[String, DataFrame],
-      useReference: Boolean = true,
-      batchSize: Int = 500): Map[String, Seq[String]] =
-    tables.map { case (name, df) =>
-      name -> (if (useReference) falseArrayColumnsFromReference(df.schema.fieldNames.toSeq)
-               else falseArrayColumnsComputational(df, batchSize))
-    }
-
   /** Computational false-array detection (the reference's fallback,
     * `core/utils.py:616-694`). A column qualifies when, over the whole
     * table:
@@ -107,21 +95,15 @@ object Profiler {
     * partial aggregation combines map-side, so the shuffle carries one
     * row per distinct pair, not per input row. Batching bounds the stack
     * expression width for codegen; rows are never re-read per column as
-    * in the reference's scalar-subquery fallback.
-    *
-    * approxDistinct: HLL++ (rsd=0.02 — cannot confuse 3 with 4) instead
-    * of the exact two-stage distinct; with the melt shape exact distinct
-    * already combines map-side, so this is now a memory knob for
-    * ultra-high-cardinality columns, not a scalability requirement.
-    * Exact mode matches the reference bit-for-bit and is the
-    * oracle-checked path. */
-  def falseArrayColumnsComputational(df: DataFrame, batchSize: Int = 500,
-      approxDistinct: Boolean = false): Seq[String] = {
+    * in the reference's scalar-subquery fallback. Distinct counts are
+    * exact: with the melt shape they combine map-side, and they match the
+    * reference bit-for-bit. */
+  def falseArrayColumnsComputational(df: DataFrame): Seq[String] = {
     val stringCols = df.schema.fields
       .filter(f => f.dataType == StringType && f.name != "Connect_ID").map(_.name).toSeq
     if (stringCols.isEmpty) return Seq.empty
     val falseVals = Constants.FalseArrayValues
-    val qualifying = stringCols.grouped(batchSize).flatMap { batch =>
+    val qualifying = stringCols.grouped(500).flatMap { batch =>
       // the stack() text interpolates column NAMES: escape backticks in
       // the identifier position and single quotes in the literal position,
       // or a hostile name breaks parsing / silently mislabels melted rows
@@ -130,13 +112,10 @@ object Profiler {
         batch.map(c =>
           s"'${c.replace("\\", "\\\\").replace("'", "\\'")}', `${c.replace("`", "``")}`")
           .mkString(", ") + ") AS (cname, value)"
-      val distinctCount =
-        if (approxDistinct) approx_count_distinct(col("value"), 0.02)
-        else countDistinct(col("value"))
       df.selectExpr(stackExpr)
         .groupBy(col("cname"))
         .agg(
-          distinctCount.as("nd"),
+          countDistinct(col("value")).as("nd"),
           count(when(col("value").isNotNull && !col("value").isin(falseVals: _*),
             lit(1))).as("n_bad"),
           countDistinct(when(col("value").rlike(Constants.BracketedNineDigitPattern),

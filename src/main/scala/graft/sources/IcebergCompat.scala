@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.avro.Schema
@@ -76,23 +77,30 @@ object IcebergCompat {
   private def normPath(c: Column): Column =
     regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
 
-  /** The current metadata JSON file: `version-hint.text` when present,
-    * else the highest `vN.metadata.json`. */
+  /** The current metadata JSON file. `version-hint.text` is a hint that
+    * can only lag (it is written after `vN.metadata.json` is published):
+    * start at the hinted version, or at the highest listed one when the
+    * hint is absent, unparsable or dangling, then step to N+1, N+2, …
+    * while those files exist — the Hadoop-table convention. */
   def currentMetadataFile(spark: SparkSession, dir: String): Path = {
     val fs = fsFor(spark, dir)
     val meta = new Path(s"$dir/metadata")
     require(fs.exists(meta), s"$dir has no metadata/ — not an Iceberg table")
+    def file(v: Long) = new Path(meta, s"v$v.metadata.json")
     val hint = new Path(meta, "version-hint.text")
-    if (fs.exists(hint))
-      new Path(meta, s"v${TableIO.readText(fs, hint).trim}.metadata.json")
-    else {
+    val hinted = Option.when(fs.exists(hint))(TableIO.readText(fs, hint).trim)
+      .flatMap(_.toLongOption).filter(v => fs.exists(file(v)))
+    val start = hinted.getOrElse {
       val vs = fs.listStatus(meta).map(_.getPath.getName).collect {
         case n if n.matches("v\\d+\\.metadata\\.json") =>
           n.stripPrefix("v").stripSuffix(".metadata.json").toLong
       }
       require(vs.nonEmpty, s"no vN.metadata.json under $meta")
-      new Path(meta, s"v${vs.max}.metadata.json")
+      vs.max
     }
+    var v = start
+    while (fs.exists(file(v + 1))) v += 1
+    file(v)
   }
 
   /** The current metadata file, its version N and its parsed JSON. */
@@ -124,15 +132,20 @@ object IcebergCompat {
   /** Commit metadata version `version` of the table at `dir`: publish
     * `vN.metadata.json` via [[TableIO.commitFile]] (an existing version
     * fails the call and is left untouched), then point `version-hint.text`
-    * at it. The one metadata commit behind [[createIcebergTable]],
+    * at it. The publish is the commit: a failed hint write only leaves
+    * the hint lagging, which [[currentMetadataFile]] steps past, so it
+    * does not fail the call (a caller that retried would append twice).
+    * The one metadata commit behind [[createIcebergTable]],
     * [[appendSnapshot]], [[expireSnapshots]] and [[writeMetadata]]. */
   private def commitMetadata(spark: SparkSession, dir: String, version: Int,
       json: Array[Byte]): Unit = {
     val fs = fsFor(spark, dir)
     val target = new Path(s"$dir/metadata/v$version.metadata.json")
     require(TableIO.commitFile(fs, target, json), s"Iceberg metadata $target already exists")
-    val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
-    try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    try {
+      val hint = fs.create(new Path(s"$dir/metadata/version-hint.text"), true)
+      try hint.write(version.toString.getBytes("UTF-8")) finally hint.close()
+    } catch { case NonFatal(_) => }
   }
 
   private def readAvro(spark: SparkSession, path: Path): Seq[GenericRecord] = {

@@ -8,11 +8,6 @@ import org.apache.spark.sql.functions._
 import graft.config.Constants
 import graft.naming.Naming
 
-/** One output column of a planned projection. */
-final case class Clause(output: String, expr: Column, step: String) {
-  def aliased: Column = expr.as(output)
-}
-
 /** Schema-driven column cleaning: the `clean_columns` capability.
   *
   * Re-expresses the reference's 4-step SQL generator
@@ -42,7 +37,7 @@ object CleanColumns {
 
     // Step 0: Connect_ID always first (ref transformations.py:560-563)
     if (columns.contains("Connect_ID")) {
-      out += Clause("Connect_ID", col("Connect_ID"), "connect_id")
+      out += Clause("Connect_ID", col("Connect_ID"), "Connect_ID (always preserved)")
       processed += "connect_id"
     }
 
@@ -54,35 +49,18 @@ object CleanColumns {
   }
 
   /** Apply the plan as a single projection. */
-  def apply(df: DataFrame, tableId: String = ""): DataFrame = {
-    val clauses = plan(df.schema.fieldNames.toSeq, tableId)
-    df.select(clauses.map(_.aliased): _*)
-  }
+  def apply(df: DataFrame, tableId: String = ""): DataFrame =
+    df.select(plan(df.schema.fieldNames.toSeq, tableId).map(_.aliased): _*)
 
-  /** Render the plan as auditable SQL text — the reference archives every
-    * generated query before execution (`core/transformations.py:585-631`);
-    * this is the equivalent artifact, annotated per step, derived from the
-    * SAME Column expressions the projection executes (no drift). */
-  def toSql(columns: Seq[String], tableId: String, source: String, dest: String): String = {
-    val clauses = plan(columns, tableId)
-    val stepComment = Map(
-      "connect_id" -> "-- Connect_ID (always preserved)",
-      "one_off_rename" -> "-- Step 1: One-off column renames from config",
-      "substring_removal" -> "-- Step 2: Substring removal (state_, _num, etc.)",
-      "custom_transform" -> "-- Step 3: Custom column transformations",
-      "loop_variable" -> "-- Step 4: Loop variable processing",
-      "non_loop_passthrough" -> "-- Step 4: Non-loop pass-through")
-    val body = clauses.zipWithIndex.map { case (c, i) =>
-      val comment =
-        if (i == 0 || clauses(i - 1).step != c.step) s"    ${stepComment(c.step)}\n" else ""
-      val exprSql = org.apache.spark.sql.graftbridge.Bridge.eagerExpression(c.expr).sql
-      s"$comment    $exprSql AS ${c.output}"
-    }.mkString(",\n")
-    s"""/* Combined transformation query for $source -> $dest */
-       |SELECT
-       |$body
-       |FROM $source""".stripMargin
-  }
+  /** The plan as the archived SQL text (`core/transformations.py:585-631`),
+    * annotated per step, rendered from the same clauses the projection
+    * executes. */
+  def toSql(columns: Seq[String], tableId: String, source: String, dest: String): String =
+    Clause.sql(plan(columns, tableId), source, dest, source)
+
+  /** One column as itself; several coalesced in the given order. */
+  private def coalesced(cols: Seq[String]): Column =
+    if (cols.size == 1) col(cols.head) else coalesce(cols.map(col): _*)
 
   /** Step 1 (ref `_build_one_off_renames_clauses`,
     * `core/transformations.py:178-280`): apply the configured renames for
@@ -125,10 +103,8 @@ object CleanColumns {
       else {
         processed += targetStd.toLowerCase
         sources.foreach(s => processed += s.toLowerCase)
-        val expr =
-          if (sources.size == 1) col(sources.head)
-          else coalesce(sources.toSeq.map(col): _*)
-        Some(Clause(targetCased, expr, "one_off_rename"))
+        Some(Clause(targetCased, coalesced(sources.toSeq),
+          "Step 1: One-off column renames from config"))
       }
     }.toSeq
   }
@@ -157,13 +133,8 @@ object CleanColumns {
         else {
           processed += newName.toLowerCase
           cols.foreach(c => processed += c.toLowerCase)
-          val expr =
-            if (cols.size == 1) col(cols.head)
-            else {
-              val sorted = cols.toSeq.sortBy(c => subs.count(c.contains))
-              coalesce(sorted.map(col): _*)
-            }
-          Some(Clause(newName, expr, "substring_removal"))
+          Some(Clause(newName, coalesced(cols.toSeq.sortBy(c => subs.count(c.contains))),
+            "Step 2: Substring removal (state_, _num, etc.)"))
         }
       }.toSeq
   }
@@ -183,7 +154,8 @@ object CleanColumns {
       else if (processed.contains(t.target.toLowerCase)) None
       else {
         processed += t.target.toLowerCase
-        Some(Clause(t.target, t.build(t.source, t.target), "custom_transform"))
+        Some(Clause(t.target, t.build(t.source, t.target),
+          "Step 3: Custom column transformations"))
       }
     }
   }
@@ -217,10 +189,7 @@ object CleanColumns {
       val newName = Naming.standardizeCase(
         Naming.exciseSubstrings(rawName, Constants.SubstringsToFix))
       if (!processed.contains(newName.toLowerCase)) {
-        val expr =
-          if (varList.size == 1) col(varList.head)
-          else coalesce(varList.map(col): _*)
-        out += Clause(newName, expr, "loop_variable")
+        out += Clause(newName, coalesced(varList), "Step 4: Loop variable processing")
         processed += newName.toLowerCase
         varList.foreach(v => processed += v.toLowerCase)
       }
@@ -233,7 +202,7 @@ object CleanColumns {
       if (versionTag.nonEmpty)
         newName = Naming.exciseVersion(newName) + versionTag
       if (!processed.contains(newName.toLowerCase)) {
-        out += Clause(newName, col(v), "non_loop_passthrough")
+        out += Clause(newName, col(v), "Step 4: Non-loop pass-through")
         processed += newName.toLowerCase
         processed += v.toLowerCase
       }

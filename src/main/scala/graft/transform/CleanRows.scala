@@ -33,13 +33,13 @@ object CleanRows {
     * STRING column ([[Profiler.binaryColumns]]). `useReference = true`
     * (the reference's default) detects false arrays by name from the
     * precomputed pairs — zero extra scans; `false` runs the computational
-    * detector, one melt job per `batchSize` columns. */
-  def classify(df: DataFrame, useReference: Boolean = true, batchSize: Int = 500): Classification = {
+    * detector, one melt job per 500 columns. */
+  def classify(df: DataFrame, useReference: Boolean = true): Classification = {
     val all = df.schema.fieldNames.toSeq
     val binary = Profiler.binaryColumns(df)
     val falseArr =
       if (useReference) Profiler.falseArrayColumnsFromReference(all)
-      else Profiler.falseArrayColumnsComputational(df, batchSize)
+      else Profiler.falseArrayColumnsComputational(df)
     val processed = binary.toSet ++ falseArr.toSet
     Classification(binary, falseArr, all.filterNot(processed.contains))
   }
@@ -51,45 +51,40 @@ object CleanRows {
       .when(col(c) === "0", lit(Constants.CidNo))
       .otherwise(lit(null).cast(StringType))
 
-  /** `"[]"`→NULL; `"[123456789]"`→`"123456789"`; NULL→NULL; else the
-    * default (the reference always passes the literal NULL,
+  /** `"[]"`→NULL; `"[123456789]"`→`"123456789"`; NULL→NULL; else NULL
+    * (the reference's default, which it always passes as the literal NULL,
     * `core/transformations.py:709`). Ref: `core/utils.py:750-778`.
     * BigQuery `REGEXP_CONTAINS`/`\1` map to `rlike`/`$1` (both unanchored
     * contains + capture-group replace). */
-  def unwrapSingletonExpr(c: String, default: Column = lit(null).cast(StringType)): Column =
+  def unwrapSingletonExpr(c: String): Column =
     when(col(c) === "[]", lit(null).cast(StringType))
       .when(col(c).rlike("\\[\\d{9}\\]"), regexp_replace(col(c), "\\[(\\d{9})\\]", "$1"))
       .when(col(c).isNull, lit(null).cast(StringType))
-      .otherwise(default.cast(StringType))
+      .otherwise(lit(null).cast(StringType))
 
-  def apply(df: DataFrame, useReference: Boolean = true, batchSize: Int = 500): DataFrame =
-    apply(df, classify(df, useReference, batchSize))
-
-  /** Auditable SQL text of a clean_rows projection (same shape as the
-    * reference's archived query, `core/transformations.py:737-747`),
-    * rendered from the same Column expressions the engine executes. */
-  def toSql(cls: Classification, source: String, dest: String): String = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    val parts =
-      cls.binary.sorted.map(c => s"    ${Bridge.eagerExpression(binaryRecodeExpr(c)).sql} AS $c") ++
-        cls.falseArray.sorted.map(c => s"    ${Bridge.eagerExpression(unwrapSingletonExpr(c)).sql} AS $c") ++
-        cls.passthrough.sorted.map(c => s"    $c")
-    s"""/* Combined transformation query for $source -> $dest */
-       |SELECT
-       |${parts.mkString(",\n")}
-       |FROM $source""".stripMargin
-  }
-
-  def apply(df: DataFrame, cls: Classification): DataFrame = {
-    val clauses: Seq[Column] =
-      cls.binary.sorted.map(c => binaryRecodeExpr(c).as(c)) ++
-        cls.falseArray.sorted.map(c => unwrapSingletonExpr(c).as(c)) ++
-        cls.passthrough.sorted.map(col)
-    // duplicate-output guard (ref core/transformations.py:721-735)
-    val names = cls.binary.sorted ++ cls.falseArray.sorted ++ cls.passthrough.sorted
-    val dups = names.groupBy(identity).collect { case (n, g) if g.size > 1 => n }
+  /** The projection's clauses: binary recodes, false-array unwraps, then
+    * pass-throughs, each group sorted. Output names must be unique (ref
+    * core/transformations.py:721-735). */
+  def plan(cls: Classification): Seq[Clause] = {
+    val clauses =
+      cls.binary.sorted.map(c =>
+        Clause(c, binaryRecodeExpr(c), "Binary recode: 1/0 to Yes/No concept IDs")) ++
+        cls.falseArray.sorted.map(c => Clause(c, unwrapSingletonExpr(c), "False-array unwrap")) ++
+        cls.passthrough.sorted.map(c => Clause(c, col(c), "Pass-through"))
+    val dups = clauses.groupBy(_.output).collect { case (n, g) if g.size > 1 => n }
     if (dups.nonEmpty)
       throw new IllegalArgumentException(s"Duplicate column names detected: ${dups.mkString(", ")}")
-    df.select(clauses: _*)
+    clauses
   }
+
+  def apply(df: DataFrame, useReference: Boolean = true): DataFrame =
+    apply(df, classify(df, useReference))
+
+  def apply(df: DataFrame, cls: Classification): DataFrame = df.select(plan(cls).map(_.aliased): _*)
+
+  /** The archived SQL of a clean_rows projection (same shape as the
+    * reference's, `core/transformations.py:737-747`), rendered from the
+    * clauses [[apply]] executes. */
+  def toSql(cls: Classification, source: String, dest: String): String =
+    Clause.sql(plan(cls), source, dest, source)
 }

@@ -3,6 +3,7 @@ package graft.transform
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIfNeeded
 import org.apache.spark.sql.functions._
 
 import graft.config.Constants
@@ -55,12 +56,19 @@ object MergeTableVersions {
     }
   }
 
-  def apply(dfs: Seq[DataFrame]): DataFrame = apply(dfs, strict = false)
+  /** The merge planned from the versions' column names: the output
+    * clauses over the aliases `v1`..`vN`, the columns each version keeps,
+    * and the FULL OUTER join chain, which starts at version `first` and
+    * then joins each version in `joins` on its condition. */
+  final case class Plan(clauses: Seq[Clause], kept: Seq[Seq[String]], first: Int,
+      joins: Seq[(Int, Column)])
 
-  def apply(dfs: Seq[DataFrame], strict: Boolean): DataFrame = {
-    require(dfs.size >= 2, "at least two source tables must be provided")
-    val aliases = dfs.indices.map(i => s"v${i + 1}")
-    val valid = dfs.map(df => validColumns(df.schema.fieldNames.toSeq))
+  private def alias(i: Int) = s"v${i + 1}"
+
+  def plan(columns: Seq[Seq[String]], strict: Boolean = false): Plan = {
+    require(columns.size >= 2, "at least two source tables must be provided")
+    val aliases = columns.indices.map(alias)
+    val valid = columns.map(validColumns)
     valid.zipWithIndex.foreach { case (cols, i) =>
       require(cols.exists(_.equalsIgnoreCase("connect_id")),
         s"source table ${i + 1} has no Connect_ID column")
@@ -71,46 +79,53 @@ object MergeTableVersions {
     // SELECT clauses: coalesced common columns first (sorted), then unique
     // columns per table (sorted). Ref: core/transformations.py:86-124.
     val processed = mutable.Set.empty[String]
-    val clauses = mutable.ListBuffer.empty[Column]
+    val clauses = mutable.ListBuffer.empty[Clause]
     for (cl <- commonLower.toSeq.sorted) {
       val out = if (cl == "connect_id") "Connect_ID" else cl
       val parts = aliases.zip(caseMaps).map { case (a, m) => col(s"$a.${m(cl)}") }
-      clauses += coalesce(parts: _*).as(out)
+      clauses += Clause(out, coalesce(parts: _*), "Common columns, earliest version first")
       processed += cl
     }
     for ((a, cols) <- aliases.zip(valid)) {
       val unique = cols.filterNot(c => processed.contains(c.toLowerCase))
       for (c <- unique.sorted) {
         val out = if (c == "Connect_ID") "Connect_ID" else c.toLowerCase
-        clauses += col(s"$a.$c").as(out)
+        clauses += Clause(out, col(s"$a.$c"), s"Columns only in $a")
         processed += c.toLowerCase
       }
     }
 
-    val aliased = dfs.zip(valid).zip(aliases).map { case ((df, cols), a) =>
-      df.select(cols.map(col): _*).alias(a)
+    val key = aliases.zip(caseMaps).map { case (a, m) => col(s"$a.${m("connect_id")}") }
+    val last = columns.size - 1
+    // strict: the reference's chain, the base (last) joined with each
+    // earlier version on its key; else the fold on the coalesced key so far
+    if (strict)
+      Plan(clauses.toSeq, valid, last, (last - 1 to 0 by -1).map(i => i -> (key.last === key(i))))
+    else Plan(clauses.toSeq, valid, 0, (1 to last).map { i =>
+      i -> ((if (i == 1) key.head else coalesce(key.take(i): _*)) === key(i))
+    })
+  }
+
+  /** The plan's join chain over the versions' frames. */
+  def joined(p: Plan, dfs: Seq[DataFrame]): DataFrame = {
+    val v = dfs.zip(p.kept).zipWithIndex.map { case ((df, cols), i) =>
+      df.select(cols.map(col): _*).alias(alias(i))
     }
-    val keyOf = aliases.zip(caseMaps).map { case (a, m) => col(s"$a.${m("connect_id")}") }
-    val joined =
-      if (strict) {
-        // Reference-literal chain: FROM base (last) FULL OUTER JOIN each
-        // earlier table ON base.Connect_ID = vi.Connect_ID, reversed
-        // order (core/transformations.py:126-136). Base-absent keys do
-        // NOT merge across versions.
-        var j = aliased.last
-        for (i <- aliased.size - 2 to 0 by -1) {
-          j = j.join(aliased(i), keyOf.last === keyOf(i), "full_outer")
-        }
-        j
-      } else {
-        // Fold full-outer join chain with coalesced key (SURVEY §2.C-1).
-        var j = aliased.head
-        for (i <- 1 until aliased.size) {
-          val key = if (i == 1) keyOf.head else coalesce(keyOf.take(i): _*)
-          j = j.join(aliased(i), key === keyOf(i), "full_outer")
-        }
-        j
-      }
-    joined.select(clauses.toSeq: _*)
+    p.joins.foldLeft(v(p.first)) { case (j, (i, on)) => j.join(v(i), on, "full_outer") }
+  }
+
+  /** The same chain as SQL FROM text over each version's FROM name:
+    * version i is `(SELECT <kept columns> FROM <froms(i)>) AS v<i+1>`. */
+  def from(p: Plan, froms: Seq[String]): String = {
+    def version(i: Int) =
+      s"(SELECT ${p.kept(i).map(quoteIfNeeded).mkString(", ")} FROM ${froms(i)}) AS ${alias(i)}"
+    (version(p.first) +: p.joins.map { case (i, on) =>
+      s"FULL OUTER JOIN ${version(i)} ON ${Clause.exprSql(on)}"
+    }).mkString("\n")
+  }
+
+  def apply(dfs: Seq[DataFrame], strict: Boolean = false): DataFrame = {
+    val p = plan(dfs.map(_.schema.fieldNames.toSeq), strict)
+    joined(p, dfs).select(p.clauses.map(_.aliased): _*)
   }
 }

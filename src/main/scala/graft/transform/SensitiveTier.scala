@@ -11,6 +11,8 @@ import graft.config.Constants
   * outputs are aliased to the projection list's spelling so the result
   * schema matches the reference's SQL text exactly. */
 object SensitiveTier {
-  def apply(df: DataFrame): DataFrame =
-    df.select(Constants.SensitiveTierColumns.map(c => col(c).as(c)): _*)
+  val clauses: Seq[Clause] =
+    Constants.SensitiveTierColumns.map(c => Clause(c, col(c), "Sensitive-tier columns"))
+
+  def apply(df: DataFrame): DataFrame = df.select(clauses.map(_.aliased): _*)
 }

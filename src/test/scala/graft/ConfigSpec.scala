@@ -56,8 +56,11 @@ class ConfigSpec extends AnyFunSuite {
 
   test("request validation (B28)") {
     import graft.api.PipelineApi
-    assert(PipelineApi.extractSourceAndDestination(Some("a"), Some("b")) == ("a", "b"))
-    intercept[IllegalArgumentException](
-      PipelineApi.extractSourceAndDestination(Some("a"), None))
+    assert(PipelineApi.extractSourceAndDestination(Some("a"), Some("b")) == (Seq("a"), "b"))
+    assert(PipelineApi.extractSourceAndDestination(Some(Seq("a", "c")), Some("b")) ==
+      (Seq("a", "c"), "b"))
+    for ((s, d) <- Seq(Some("a") -> None, None -> Some("b"), Some("") -> Some("b"),
+        Some("a") -> Some(""), Some(Seq()) -> Some("b")))
+      intercept[IllegalArgumentException](PipelineApi.extractSourceAndDestination(s, d))
   }
 }

@@ -56,13 +56,17 @@ class IcebergCompatSpec extends SparkSpec {
     // metadata file — no hint rewrite needed
     assert(IcebergCompat.readIcebergTable(spark, dir, snapshotId = Some(101L))
       .count() == 3)
-    // the v1 metadata file still resolves snapshot 101 if hinted back
+    // the hint can only lag: one hinted back at v1 still resolves v2,
+    // and so does an unparsable one
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = fs.create(new org.apache.hadoop.fs.Path(
-      s"$dir/metadata/version-hint.text"), true)
-    try hint.write("1".getBytes("UTF-8")) finally hint.close()
-    assert(IcebergCompat.readIcebergTable(spark, dir).count() == 3)
+    for (text <- Seq("1", "not a version")) {
+      val hint = fs.create(new org.apache.hadoop.fs.Path(
+        s"$dir/metadata/version-hint.text"), true)
+      try hint.write(text.getBytes("UTF-8")) finally hint.close()
+      assert(IcebergCompat.currentMetadataFile(spark, dir).getName == "v2.metadata.json")
+      assert(IcebergCompat.readIcebergTable(spark, dir).as[(Long, String)].collect().toSet == got)
+    }
   }
 
   test("addedBetween: append-only windows replay; overwrites and new deletes refuse") {
@@ -379,5 +383,27 @@ class IcebergCompatSpec extends SparkSpec {
     assert(IcebergCompat.appendSnapshot(more, dir) == 2L)
     assert(IcebergCompat.readIcebergTable(spark, dir).as[(Long, String)].collect().toSet
       == Set((1L, "a"), (2L, "b")))
+  }
+
+  test("a failed version-hint write does not fail an Iceberg append; the next one lands at N+1") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failfs.impl", classOf[FailingFs].getName)
+    val dir = "failfs://" + mkTable()
+    assert(IcebergCompat.createIcebergTable(Seq((1L, "a")).toDF("id", "v"), dir) == 1L)
+    def rows = IcebergCompat.readIcebergTable(spark, dir).as[(Long, String)].collect().toSet
+    // the hint's bytes land and its close fails
+    assert(FailingFs.failingOnClose(_.endsWith("version-hint.text")) {
+      IcebergCompat.appendSnapshot(Seq((2L, "b")).toDF("id", "v"), dir)
+    } == 2L)
+    assert(rows == Set((1L, "a"), (2L, "b")))
+    // the hint's create fails, so it stays a version behind
+    assert(FailingFs.failingOn(_.endsWith("version-hint.text")) {
+      IcebergCompat.appendSnapshot(Seq((3L, "c")).toDF("id", "v"), dir)
+    } == 3L)
+    assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assert(IcebergCompat.appendSnapshot(Seq((4L, "d")).toDF("id", "v"), dir) == 4L)
+    assert(IcebergCompat.snapshotIds(spark, dir) == Seq(1L, 2L, 3L, 4L))
+    assert(IcebergCompat.currentMetadataFile(spark, dir).getName == "v4.metadata.json")
+    assert(rows == Set((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
   }
 }

@@ -84,4 +84,17 @@ class WideSchemaSpec extends SparkSpec {
     val first = out.select(out.columns.filter(_.startsWith("d_2")).take(1).map(org.apache.spark.sql.functions.col): _*).head()
     assert(Set("353358909", "104430631").contains(first.getString(0)))
   }
+
+  test("clean_columns and clean_rows archive SQL that returns what they wrote, 1201 columns") {
+    def tmp(name: String) =
+      java.nio.file.Files.createTempDirectory("graft-wide-sql").resolve(name).toString
+    val src = tmp("src"); val audit = tmp("audit")
+    wideDf().write.parquet(src)
+    val cols = tmp("cols")
+    graft.api.PipelineApi.cleanColumns(spark, src, cols, auditDir = audit)
+    ApiSpec.assertArchivedSqlRuns(spark, audit, cols)
+    val rows = tmp("rows")
+    graft.api.PipelineApi.cleanRows(spark, src, rows, auditDir = audit)
+    ApiSpec.assertArchivedSqlRuns(spark, audit, rows)
+  }
 }
