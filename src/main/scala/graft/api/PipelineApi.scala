@@ -3,17 +3,19 @@ package graft.api
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.audit.Audit
+import graft.sources.TableIO
 import graft.transform.{Clause, CleanColumns, CleanRows, MergeTableVersions, SensitiveTier}
 
 /** Thin service facade mirroring the reference's five REST endpoints
   * (`/root/reference/core/endpoints.py`): heartbeat, clean_columns,
   * clean_rows, merge_table_versions, create_sensitive_tier. The reference
   * binds them to Flask + BigQuery CTAS; here each is
-  * read-parquet → plan one clause list → archive its SQL and the Spark
-  * plan → overwrite-parquet, returning the same status JSON shape. A
-  * `tableId` (e.g. "FlatConnect.module1_v2_JP") selects per-table
-  * rename/transform config exactly as the reference's fully-qualified
-  * table name does. */
+  * read-parquet ([[TableIO.readParquet]]: the schema from a footer on the
+  * driver, no inference job) → plan one clause list → archive its SQL and
+  * the Spark plan → overwrite-parquet, returning the same status JSON
+  * shape. A `tableId` (e.g. "FlatConnect.module1_v2_JP") selects
+  * per-table rename/transform config exactly as the reference's
+  * fully-qualified table name does. */
 object PipelineApi {
 
   final case class Result(status: String, submittedSqlPath: String)
@@ -43,11 +45,20 @@ object PipelineApi {
   /** The FROM name of a parquet path, so the archived SQL runs as-is. */
   private def parquetTable(path: String): String = s"parquet.`${path.replace("`", "``")}`"
 
+  /** The audit files' base name for `dest`: every UTF-8 byte outside
+    * `[A-Za-z0-9.-]`, `_` included, becomes `_XX` (upper-case hex), so
+    * distinct destinations never share an archived SQL or plan file. */
+  private[graft] def auditName(dest: String): String =
+    dest.getBytes(java.nio.charset.StandardCharsets.UTF_8).map { b =>
+      val c = (b & 0xff).toChar
+      if (c < 128 && (c.isLetterOrDigit || c == '.' || c == '-')) c.toString else f"_${c.toInt}%02X"
+    }.mkString
+
   /** Every endpoint's body: archive the SQL of `clauses` over `from`, then
     * the plan of the same clauses selected from `input`, then write it. */
   private def materialize(input: DataFrame, clauses: Seq[Clause], source: String, from: String,
       dest: String, auditDir: String): Result = {
-    val base = s"$auditDir/${dest.replaceAll("[^A-Za-z0-9._-]", "_")}"
+    val base = s"$auditDir/${auditName(dest)}"
     Audit.saveText(Clause.sql(clauses, source, dest, from), s"$base.sql")
     val out = input.select(clauses.map(_.aliased): _*)
     Audit.savePlan(out, s"$base.plan.txt")
@@ -58,7 +69,7 @@ object PipelineApi {
   /** Ref: `core/endpoints.py:20-35` → process_columns. */
   def cleanColumns(spark: SparkSession, source: String, dest: String,
       tableId: String = "", auditDir: String = "/tmp/graft-audit"): Result = {
-    val df = spark.read.parquet(source)
+    val df = TableIO.readParquet(spark, source)
     materialize(df, CleanColumns.plan(df.schema.fieldNames.toSeq, tableId),
       source, parquetTable(source), dest, auditDir)
   }
@@ -66,7 +77,7 @@ object PipelineApi {
   /** Ref: `core/endpoints.py:37-52` → process_rows. */
   def cleanRows(spark: SparkSession, source: String, dest: String,
       useReference: Boolean = true, auditDir: String = "/tmp/graft-audit"): Result = {
-    val df = spark.read.parquet(source)
+    val df = TableIO.readParquet(spark, source)
     materialize(df, CleanRows.plan(CleanRows.classify(df, useReference)),
       source, parquetTable(source), dest, auditDir)
   }
@@ -77,7 +88,7 @@ object PipelineApi {
       auditDir: String = "/tmp/graft-audit"): Result = {
     require(sources.size >= 2,
       "A destination table and at least two source tables must be provided.")
-    val dfs = sources.map(spark.read.parquet(_))
+    val dfs = sources.map(TableIO.readParquet(spark, _))
     val p = MergeTableVersions.plan(dfs.map(_.schema.fieldNames.toSeq))
     materialize(MergeTableVersions.joined(p, dfs), p.clauses, sources.mkString(", "),
       MergeTableVersions.from(p, sources.map(parquetTable)), dest, auditDir)
@@ -86,6 +97,6 @@ object PipelineApi {
   /** Ref: `core/endpoints.py:72-87` → create_sensitive_tier. */
   def createSensitiveTier(spark: SparkSession, source: String, dest: String,
       auditDir: String = "/tmp/graft-audit"): Result =
-    materialize(spark.read.parquet(source), SensitiveTier.clauses,
+    materialize(TableIO.readParquet(spark, source), SensitiveTier.clauses,
       source, parquetTable(source), dest, auditDir)
 }

@@ -377,7 +377,7 @@ object SurveyQueries {
     else base
   }
 
-  private def wideSurvey(s: SparkSession, d: String): DataFrame = {
+  private[graft] def wideSurvey(s: SparkSession, d: String): DataFrame = {
     val k = col("o_orderkey")
     val cols = k.cast(StringType).as("Connect_ID") +: wideSrcs.map {
       case (n, m, withNulls) =>

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Source/sink layer: the reference's only sink is atomic
   * `CREATE OR REPLACE TABLE ... AS SELECT` (A1,
@@ -135,7 +136,50 @@ object TableIO {
 
   def readTable(spark: SparkSession, name: String): DataFrame = spark.read.table(name)
 
-  def readParquet(spark: SparkSession, path: String): DataFrame = spark.read.parquet(path)
+  /** `spark.read.parquet(path)` without its schema-inference job where
+    * the driver can answer: a file, or a flat directory of data files
+    * with no `_metadata`/`_common_metadata` summary, is read with the
+    * schema of its first data file by path
+    * ([[Bridge.parquetInferredSchema]]), which is the one file Spark's own
+    * inference reads when mergeSchema is off. Names Spark's listing hides
+    * (`_SUCCESS`, `.crc` files) are skipped. Anything else — a glob, a
+    * missing path, a directory with subdirectories (partitions), summary
+    * files or no data files, or `spark.sql.parquet.mergeSchema` on — is
+    * `spark.read.parquet(path)` as it was, job and errors included. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    firstDataFile(spark, path) match {
+      case Some(f) => spark.read.schema(Bridge.parquetInferredSchema(spark, f)).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The one file Spark's inference would read for `path`, when the
+    * driver can tell it from one listing: the smallest visible path of a
+    * file or a flat directory (a hidden file alone, a summary or a
+    * subdirectory answers None). Spark sorts the leaves the same way
+    * (`ParquetUtils.splitFiles`). */
+  private def firstDataFile(spark: SparkSession, path: String): Option[String] =
+    if (spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean ||
+        path.exists("{}[]*?\\".contains(_))) None
+    else {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(Bridge.hadoopConf(spark))
+      scala.util.Try(fs.getFileStatus(p)).toOption.flatMap { st =>
+        val leaves = (if (st.isFile) Array(st) else fs.listStatus(p))
+          .filterNot(c => hiddenByListing(c.getPath.getName))
+        if (leaves.forall(c => c.isFile && !isSummary(c.getPath.getName)))
+          leaves.map(_.getPath.toString).minOption
+        else None
+      }
+    }
+
+  /** The names Spark's file listing drops (`InMemoryFileIndex`): `_x`
+    * without `=`, `.x`, `x._COPYING_` — except the parquet summaries. */
+  private def hiddenByListing(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) && !isSummary(name)
+
+  private def isSummary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
 
   /** Read an explicit list of engine-written parquet FILES with the
     * schema taken from the first (lexicographically) file's footer on
@@ -155,8 +199,7 @@ object TableIO {
     * through here: `DeltaCompat`'s scan reads the declared schema. */
   def readFilesFooter(spark: SparkSession, files: Seq[String]): DataFrame = {
     require(files.nonEmpty, "readFilesFooter needs at least one file")
-    spark.read.schema(org.apache.spark.sql.graftbridge.Bridge
-      .parquetFooterSchema(spark, files.min)).parquet(files: _*)
+    spark.read.schema(Bridge.parquetFooterSchema(spark, files.min)).parquet(files: _*)
   }
 
   /** Atomic table replace (CTAS semantics, A1). */

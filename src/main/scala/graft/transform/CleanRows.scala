@@ -20,17 +20,19 @@ import graft.profiling.Profiler
   *
   * Output column order: binary (sorted), false-array (sorted), the rest
   * (sorted) — exactly the reference's ordering. Classification is
-  * statistics-driven (one profiling scan, see [[graft.profiling.Profiler]]);
-  * this is app-level adaptive planning: one eager pass over the data decides
-  * the shape of the main transform.
+  * statistics-driven (footers first, scan only the undecided columns, see
+  * [[graft.profiling.Profiler]]); this is app-level adaptive planning: the
+  * data's statistics decide the shape of the main transform before it runs.
   */
 object CleanRows {
 
   final case class Classification(
       binary: Seq[String], falseArray: Seq[String], passthrough: Seq[String])
 
-  /** Classify columns. Binary detection is one profiling job over every
-    * STRING column ([[Profiler.binaryColumns]]). `useReference = true`
+  /** Classify columns. Binary detection reads the parquet footers of a
+    * bare parquet scan first and scans only the STRING columns they leave
+    * undecided, in one job; any other frame is scanned whole
+    * ([[Profiler.binaryColumns]]). `useReference = true`
     * (the reference's default) detects false arrays by name from the
     * precomputed pairs — zero extra scans; `false` runs the computational
     * detector, one melt job per 500 columns. */

@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Column <-> Expression bridge. Spark 4 made `Column.expr` and the
   * Column(Expression) constructor `private[sql]` (Connect-agnostic Column
@@ -32,6 +38,12 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** The session's Hadoop configuration (its `spark.hadoop.*` and
+    * `fs.*` SQL confs applied), as the scan path builds it: what the
+    * driver-side footer readers open files with. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
   /** Declared Spark schema of ONE parquet file, from its footer, read
     * entirely on the driver. `spark.read.parquet(f).schema` answers the
     * same question but launches a (tiny) Spark JOB for the parallel
@@ -40,19 +52,27 @@ object Bridge {
     * ParquetToSparkSchemaConverter (honoring nanosAsLong /
     * int96 / binary-as-string session flags) as the scan path, so the
     * declared types match `spark.read` exactly. */
-  def parquetFooterSchema(spark: SparkSession,
-      file: String): org.apache.spark.sql.types.StructType = {
+  def parquetFooterSchema(spark: SparkSession, file: String): StructType =
+    withFooter(spark, file)((converter, footer) =>
+      converter.convert(footer.getFileMetaData.getSchema))
+
+  /** The schema `spark.read.parquet` infers from ONE parquet file, read
+    * on the driver: [[parquetFooterSchema]], except that a schema Spark
+    * stored in the file's key-value metadata wins, as it does in Spark's
+    * own inference (`ParquetFileFormat.readSchemaFromFooter`), so field
+    * metadata and user-defined types survive. */
+  def parquetInferredSchema(spark: SparkSession, file: String): StructType =
+    withFooter(spark, file)((converter, footer) =>
+      ParquetFileFormat.readSchemaFromFooter(new Footer(new Path(file), footer), converter))
+
+  private def withFooter(spark: SparkSession, file: String)(
+      schema: (ParquetToSparkSchemaConverter, ParquetMetadata) => StructType): StructType = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val hconf = classic.sessionState.newHadoopConf()
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), hconf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), hadoopConf(spark)))
     // asNullable: file relations force every column nullable (a file may
     // be replaced); without it the footer schema would read non-null for
     // REQUIRED parquet fields and diverge from spark.read
-    try new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
-        classic.sessionState.conf)
-      .convert(r.getFooter.getFileMetaData.getSchema).asNullable
+    try schema(new ParquetToSparkSchemaConverter(classic.sessionState.conf), r.getFooter).asNullable
     finally r.close()
   }
 

@@ -13,14 +13,18 @@ class ApiSpec extends SparkSpec {
   private def tmp(name: String) =
     java.nio.file.Files.createTempDirectory("graft-api").resolve(name).toString
 
-  private def writeSurvey(path: String): Unit = {
+  /** Three survey rows, each `copies` times under its own Connect_ID. */
+  private def writeSurvey(path: String, copies: Int = 1): Unit = {
     val cols = Seq("Connect_ID", "d_111111111", "d_578895128_d_578895128",
       "state_d_987654321", "token")
     val schema = StructType(cols.map(c => StructField(c, StringType, nullable = true)))
-    val rows = Seq(
-      Row("c1", "1", "[]", "x", "t"),
-      Row("c2", "0", "[123456789]", "y", "t"),
-      Row("c3", null, null, "z", "t"))
+    val rows = (0 until copies).flatMap { k =>
+      val id = (i: Int) => if (k == 0) s"c$i" else s"c${i}_$k"
+      Seq(
+        Row(id(1), "1", "[]", "x", "t"),
+        Row(id(2), "0", "[123456789]", "y", "t"),
+        Row(id(3), null, null, "z", "t"))
+    }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("overwrite").parquet(path)
   }
@@ -263,6 +267,49 @@ class ApiSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("distinct destinations archive to distinct audit files") {
+    val root = tmp("root"); val src = tmp("src"); val audit = tmp("audit")
+    writeTierSource(src)
+    // the old name map sent '/' and '_' both to '_': one file for the two
+    val dests = Seq(s"$root/a/b_c", s"$root/a_b/c")
+    dests.foreach(d => PipelineApi.createSensitiveTier(spark, src, d, auditDir = audit))
+    val files = new java.io.File(audit).list().toSeq
+    assert(files.count(_.endsWith(".sql")) == 2 && files.count(_.endsWith(".plan.txt")) == 2,
+      files.mkString(", "))
+    for (d <- dests) {
+      val sql = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(audit, PipelineApi.auditName(d) + ".sql")), "UTF-8")
+      assert(sql.contains(s"-> $d */"), sql.take(200))
+      ApiSpec.assertArchivedSqlRuns(spark, audit, d)
+    }
+  }
+
+  test("on a Spark-written input each endpoint runs only its write's jobs") {
+    val src = tmp("src"); val s2 = tmp("s2"); val tier = tmp("tier"); val audit = tmp("audit")
+    // enough rows that the parquet writer keeps its dictionaries (it drops
+    // them for a few distinct values, and then clean_rows scans)
+    writeSurvey(src, copies = 20); writeSurvey(s2, copies = 20); writeTierSource(tier)
+    // no schema-inference job, and clean_rows' binary columns come from
+    // the footers, so no profiling job either
+    assert(jobsOf(PipelineApi.cleanColumns(spark, src, tmp("cc"), auditDir = audit)) == 1)
+    assert(jobsOf(PipelineApi.cleanRows(spark, src, tmp("cr"), auditDir = audit)) == 1)
+    assert(jobsOf(PipelineApi.createSensitiveTier(spark, tier, tmp("st"), auditDir = audit)) == 1)
+    // merge's write has join stages of its own: the endpoint runs exactly
+    // the jobs of writing its projection over frames given their schema
+    val merge = jobsOf(PipelineApi.mergeTableVersions(spark, Seq(src, s2), tmp("m"),
+      auditDir = audit))
+    val write = jobsOf {
+      val dfs = Seq(src, s2).map(p => spark.read.schema(
+        org.apache.spark.sql.graftbridge.Bridge.parquetFooterSchema(spark,
+          new java.io.File(p).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).min))
+        .parquet(p))
+      val plan = graft.transform.MergeTableVersions.plan(dfs.map(_.schema.fieldNames.toSeq))
+      graft.transform.MergeTableVersions.joined(plan, dfs).select(plan.clauses.map(_.aliased): _*)
+        .write.parquet(tmp("m2"))
+    }
+    assert(merge == write, s"merge ran $merge jobs, its write alone $write")
+  }
+
   test("streaming dedup plan builds against a streaming source") {
     val deduped = graft.streaming.EventStreams.dedupedEvents(
       graft.streaming.EventStreams.readEvents(spark, "/root/testdata/sf0.001"))
@@ -279,7 +326,7 @@ object ApiSpec {
     * Nullability is not compared: parquet reads every column nullable. */
   def assertArchivedSqlRuns(spark: org.apache.spark.sql.SparkSession, auditDir: String,
       dest: String): Unit = {
-    val file = java.nio.file.Paths.get(auditDir, dest.replaceAll("[^A-Za-z0-9._-]", "_") + ".sql")
+    val file = java.nio.file.Paths.get(auditDir, PipelineApi.auditName(dest) + ".sql")
     val ran = spark.sql(new String(java.nio.file.Files.readAllBytes(file), "UTF-8"))
     val wrote = spark.read.parquet(dest)
     assert(ran.schema.map(f => f.name -> f.dataType) == wrote.schema.map(f => f.name -> f.dataType))

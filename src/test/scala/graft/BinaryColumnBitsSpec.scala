@@ -12,7 +12,8 @@ import graft.profiling.Profiler
 /** [[Profiler.binaryColumns]]'s one bitset aggregate against the
   * conditional-aggregate formulation it replaced — one
   * `count(when(notBinary)) === 0` per STRING column, 500 columns per job —
-  * kept here as the reference. */
+  * kept here as the reference; and its footer path, on each fixture
+  * written to parquet, against both. */
 class BinaryColumnBitsSpec extends SparkSpec {
 
   private def q(name: String): Column = col("`" + name.replace("`", "``") + "`")
@@ -35,12 +36,49 @@ class BinaryColumnBitsSpec extends SparkSpec {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row.fromSeq), partitions), schema)
   }
 
-  /** Both formulations, asserted equal; returns the classification. */
+  private def written(df: DataFrame, options: (String, String)*): String = {
+    val p = java.nio.file.Files.createTempDirectory("graft-bits").resolve("t").toString
+    df.write.options(options.toMap).parquet(p)
+    p
+  }
+
+  /** Both formulations, asserted equal, and the footer path over `df`
+    * written to parquet asserted equal to them; returns the
+    * classification. */
   private def binary(df: DataFrame): Seq[String] = {
     val got = Profiler.binaryColumns(df)
     assert(got == reference(df))
+    assert(Profiler.binaryColumns(spark.read.parquet(written(df))) == got, "footers disagree")
     got
   }
+
+  /** The columns each bits aggregate that `body` runs reads, in order. */
+  private def scannedColumns(body: => Any): Seq[Seq[String]] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.analyzed.foreach {
+        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
+          seen.add(a.aggregateExpressions.flatMap(_.references.map(_.name)))
+        case _ =>
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.graftspec.ListenerFence.await(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator).asScala.toSeq
+  }
+
+  // 20 copies, so the parquet writer keeps its dictionaries (it drops one
+  // that does not shrink the chunk); one partition, so "0", "01" and "1"
+  // share one chunk
+  private val nearBinary = Seq.fill(20)(Seq(
+    Seq("0", "0", "x", null, "1"),
+    Seq("01", "1", "y", null, "1"),
+    Seq("1", null, "z", null, "1"))).flatten
+  private val nearBinaryCols = Seq("near", "bin", "text", "all_null", "ones")
 
   test("empty string, NULL, an all-NULL column and a zero-row table count as binary") {
     val df = strings(Seq("with_empty", "all_null", "zero_one", "other"), Seq(
@@ -102,6 +140,44 @@ class BinaryColumnBitsSpec extends SparkSpec {
     val df = strings(cols, rows, parts)
     assert(df.rdd.getNumPartitions == parts)
     assert(binary(df) == cols.zipWithIndex.collect { case (c, i) if i % 2 == 0 => c })
+  }
+
+  test("footers equal the scan on the 1,230-column wide survey, with no job") {
+    val wide = graft.queries.SurveyQueries.wideSurvey(spark, "/root/testdata/sf0.001")
+    val scan = Profiler.binaryColumns(wide)
+    assert(scan.nonEmpty && scan.size < wide.columns.length)
+    val back = spark.read.parquet(written(wide))
+    var got = Seq.empty[String]
+    assert(jobsOf { got = Profiler.binaryColumns(back) } == 0)
+    assert(got == scan)
+  }
+
+  test("a dictionary-encoded input is decided by its footers and dictionaries, no job") {
+    val back = spark.read.parquet(written(strings(nearBinaryCols, nearBinary, partitions = 1)))
+    var got = Seq.empty[String]
+    assert(jobsOf { got = Profiler.binaryColumns(back) } == 0)
+    // "01" sorts between "0" and "1": only the dictionary can reject it
+    assert(got == Seq("bin", "all_null", "ones"))
+  }
+
+  test("without dictionaries the undecided columns, and only they, are scanned once") {
+    val back = spark.read.parquet(
+      written(strings(nearBinaryCols, nearBinary, partitions = 1), "parquet.enable.dictionary" -> "false"))
+    var got = Seq.empty[String]
+    // text is rejected by its statistics, all_null by its null counts and
+    // ones by min == max; near and bin span "0".."1" in plain pages
+    assert(scannedColumns { got = Profiler.binaryColumns(back) }.map(_.toSet) == Seq(Set("near", "bin")))
+    assert(got == Seq("bin", "all_null", "ones"))
+    assert(jobsOf(Profiler.binaryColumns(back)) == jobsOf(Profiler.binaryColumns(back.filter(lit(true)))))
+  }
+
+  test("a frame that is not a bare parquet scan keeps the whole scan") {
+    val back = spark.read.parquet(written(strings(nearBinaryCols, nearBinary, partitions = 1)))
+    val filtered = back.filter(col("text") =!= "y")
+    var got = Seq.empty[String]
+    assert(scannedColumns { got = Profiler.binaryColumns(filtered) }.map(_.toSet) ==
+      Seq(nearBinaryCols.toSet))
+    assert(got == reference(filtered))
   }
 
   test("buffer: the serialize round trip is exact and merge is a bitwise AND") {

@@ -6,6 +6,22 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for behavioral suites. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** The number of Spark jobs `body` starts, counted by a listener
+    * between two listener fences. */
+  def jobsOf(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    org.apache.spark.graftspec.ListenerFence.await(sc) // earlier jobs' events first
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.graftspec.ListenerFence.await(sc) }
+    finally sc.removeSparkListener(listener)
+    started.get
+  }
 }
 
 object SparkSpec {

@@ -73,17 +73,80 @@ class TableIOSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       TableIO.compact(spark, dir, rowsPerFile = 500)
-      // compact is synchronous, so its jobs have run; the listener bus is
-      // async — poll until the rewrite job's start event has drained
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (callSites.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      // compact is synchronous, so its jobs have run; the fence waits
+      // until the listener has seen every event they posted
+      org.apache.spark.graftspec.ListenerFence.await(spark.sparkContext)
       assert(callSites.nonEmpty, "listener saw no jobs at all")
-      Thread.sleep(200) // grace for any trailing (count) job event
       assert(!callSites.exists(_.startsWith("count at")),
         s"compact ran a count job — row count must come from parquet footers: $callSites")
     } finally spark.sparkContext.removeSparkListener(listener)
     // and the footer-derived count sized the output correctly
     assert(new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet")) == 2)
+  }
+
+  private def sameSchema(path: String): Unit =
+    assert(TableIO.readParquet(spark, path).schema == spark.read.parquet(path).schema, path)
+
+  test("readParquet infers on the driver what spark.read.parquet infers, or falls back to it") {
+    val s = spark
+    import s.implicits._
+    sameSchema("/root/testdata/sf0.001/events.parquet")
+    sameSchema("/root/testdata/sf0.001/orders.parquet")
+
+    // a Spark-written directory: four parts plus _SUCCESS and .crc files;
+    // the field metadata lives only in Spark's schema in the footer
+    val root = java.nio.file.Files.createTempDirectory("graft-io").toString
+    val flat = s"$root/flat"
+    (1 to 40).map(i => (i.toLong, s"v$i", i % 3)).toDF("id", "v", "k")
+      .withColumn("v", col("v").as("v", new org.apache.spark.sql.types.MetadataBuilder()
+        .putString("comment", "kept").build()))
+      .repartition(4).write.parquet(flat)
+    val names = new java.io.File(flat).list().toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")) &&
+      names.count(_.endsWith(".parquet")) == 4, names)
+    sameSchema(flat)
+    assert(TableIO.readParquet(spark, flat).schema("v").metadata.getString("comment") == "kept")
+    assert(jobsOf(TableIO.readParquet(spark, flat)) == 0)
+    assert(TableIO.readParquet(spark, flat).count() == 40)
+
+    // partitioned: the fallback, partition column included
+    val parted = s"$root/parted"
+    spark.read.parquet(flat).write.partitionBy("k").parquet(parted)
+    sameSchema(parted)
+    assert(TableIO.readParquet(spark, parted).columns.contains("k"))
+
+    // a summary file wins over the data files in Spark's inference: here
+    // it declares a column no data file has, so only the fallback agrees
+    val summarized = s"$root/summarized"
+    spark.read.parquet(flat).write.parquet(summarized)
+    val wider = s"$root/wider"
+    spark.read.parquet(flat).withColumn("extra", lit(1)).coalesce(1).write.parquet(wider)
+    java.nio.file.Files.copy(
+      new java.io.File(wider).listFiles().find(_.getName.endsWith(".parquet")).get.toPath,
+      java.nio.file.Paths.get(summarized, "_common_metadata"))
+    sameSchema(summarized)
+    assert(TableIO.readParquet(spark, summarized).columns.contains("extra"))
+  }
+
+  test("readParquet leaves a merged schema and a hidden file to spark.read.parquet") {
+    val s = spark
+    import s.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-io").toString
+    // one flat directory, two data files with different columns
+    val mixed = s"$root/mixed"
+    Seq((1L, "a")).toDF("id", "a").coalesce(1).write.parquet(mixed)
+    Seq((2L, 3)).toDF("id", "b").coalesce(1).write.mode("append").parquet(mixed)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try {
+      sameSchema(mixed)
+      assert(TableIO.readParquet(spark, mixed).columns.toSet == Set("id", "a", "b"))
+    } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+    // a file named as Spark's listing hides it: the same rows or the same failure
+    val hidden = s"$root/_hidden.parquet"
+    java.nio.file.Files.copy(new java.io.File(mixed).listFiles()
+      .filter(_.getName.endsWith(".parquet")).minBy(_.getName).toPath, java.nio.file.Paths.get(hidden))
+    def outcome(df: => org.apache.spark.sql.DataFrame) = scala.util.Try(df.collect().toSeq).toOption
+    assert(outcome(TableIO.readParquet(spark, hidden)) == outcome(spark.read.parquet(hidden)))
   }
 
   test("compact self-heals a crash between the two swap renames") {
